@@ -72,8 +72,15 @@ def compare(got: pd.DataFrame, want: pd.DataFrame) -> str | None:
             return f"nulls differ in {c}"
         live = ~xna
         if _kind(x) == "float" or _kind(y) == "float":
-            dev = np.abs(x.to_numpy(float)[live] - y.to_numpy(float)[live])
-            if (dev > 1e-6).any():
+            xf, yf = x.to_numpy(float)[live], y.to_numpy(float)[live]
+            dev = np.abs(xf - yf)
+            # within 1e-6, counting the representation error of the two
+            # doubles: a mean that lands exactly on a rounding tie (say
+            # 0.0496875 under round(x, 6)) comes out one step apart when
+            # the engines sum in different orders, and 0.049688 - 0.049687
+            # is a hair above 1e-6 in double arithmetic
+            slack = 4 * np.spacing(np.maximum(np.abs(xf), np.abs(yf)))
+            if (dev > 1e-6 + slack).any():
                 return f"values differ in {c} (max dev {dev.max():.3g})"
         elif not (x.to_numpy()[live] == y.to_numpy()[live]).all():
             return f"values differ in {c}"

@@ -162,3 +162,15 @@ def test_refuses_to_run_without_the_program(tmp_path):
     )
     assert out.returncode != 0
     assert out.stdout == ""
+
+
+def test_compare_takes_one_rounding_step_but_not_two():
+    import pandas as pd
+
+    import checks
+
+    want = pd.DataFrame({"g": ["a", "b"], "avg": [0.049688, 38000.000001]})
+    tie = pd.DataFrame({"g": ["a", "b"], "avg": [0.049687, 38000.000002]})
+    off = pd.DataFrame({"g": ["a", "b"], "avg": [0.049686, 38000.000001]})
+    assert checks.compare(tie, want) is None
+    assert checks.compare(off, want) == "values differ in avg (max dev 2e-06)"
