@@ -54,6 +54,7 @@ from __future__ import annotations
 import os
 import posixpath
 import re
+import threading
 import warnings
 from collections.abc import Mapping as _Mapping
 
@@ -282,8 +283,8 @@ class _TableFS:
     def data_files(self, name: str, recurse: bool = False) -> list[str]:
         """Absolute paths of the data files under subdir ``name``
         (metadata/hidden files excluded), LOCAL filesystems only — the
-        vectorized pyarrow stats pass reads these directly; remote
-        tables keep the Spark read-back."""
+        driver-side pyarrow stats pass reads these directly; remote
+        tables feed the same kernel through a ``mapInArrow`` job."""
         if self.remote:
             raise ValueError("data_files: local filesystems only")
         base = self.join(name)
@@ -1427,27 +1428,36 @@ def _apply_log_delta(state: dict, rec: dict) -> dict:
 # round-trip check in _write_log would catch an aliasing mutation).
 _LOG_STATE_CACHE: dict = {}
 _LOG_STATE_CACHE_MAX = 8
+# driver threads (append_refresh, the upsert DV overlap) share the
+# cache: every read-modify-write of it holds this lock
+_LOG_STATE_LOCK = threading.Lock()
 
 
 def _cache_log_state(key: tuple, sig: tuple, state: dict) -> None:
     c = _LOG_STATE_CACHE
-    c.pop(key, None)
-    c[key] = (sig, state)  # dict preserves insertion order: LRU-ish
-    while len(c) > _LOG_STATE_CACHE_MAX:
-        del c[next(iter(c))]
+    with _LOG_STATE_LOCK:
+        c.pop(key, None)
+        c[key] = (sig, state)  # dict preserves insertion order: LRU-ish
+        while len(c) > _LOG_STATE_CACHE_MAX:
+            del c[next(iter(c))]
 
 
 def _cached_log_state(fs: _TableFS, k: int) -> dict | None:
     """The cached state for version ``k``, validated against the
     commit record on disk; None on miss or fingerprint mismatch."""
-    hit = _LOG_STATE_CACHE.get((fs.dir, k))
+    key = (fs.dir, k)
+    hit = _LOG_STATE_CACHE.get(key)
     if hit is None:
         return None
     sig = fs.stat_sig(f"_LOG.{k}")
-    if sig is None or sig != hit[0]:
-        _LOG_STATE_CACHE.pop((fs.dir, k), None)
-        return None
-    return hit[1]
+    with _LOG_STATE_LOCK:
+        hit = _LOG_STATE_CACHE.get(key)
+        if hit is None:
+            return None
+        if sig is None or sig != hit[0]:
+            del _LOG_STATE_CACHE[key]
+            return None
+        return hit[1]
 
 
 def _read_log_rec(fs: _TableFS, k: int) -> dict:
@@ -2007,151 +2017,6 @@ def _stat_cols(schema, pby) -> list:
     ]
 
 
-def _gate_hashable(typ) -> bool:
-    """Types whose ``xxhash64`` is an EXACT equality proxy — equal
-    values always hash equal, so the bucketed hash set's size is an
-    exact distinct count up to bucket collisions. float/double are
-    excluded: NaN payload variants and -0.0/0.0 hash apart while
-    comparing equal, which could under-gate a real dictionary."""
-    return typ not in ("float", "double")
-
-
-# bucket count for the dictionary-candidate hash-set gate: bounds the
-# per-column observation buffer at 1024 longs regardless of the
-# column's cardinality, while keeping the collision probability of a
-# <=33-distinct column mapping into <=32 buckets negligible
-_GATE_BUCKETS = 1024
-
-
-def _stats_pass1_aggs(cols, types=None, present=None):
-    """The first-pass stats aggregates (count, min/max/non-null-count
-    per column, plus a dictionary-candidate gate) — shared between the
-    read-back aggregate and the write-riding Observation so both paths
-    record identical stats. ``present`` (the written frame's column
-    set, for the Observation path) replaces absent columns — a
-    ``schema_mode='merge'`` batch omitting a table column — with a
-    typed NULL literal, matching the table-schema-pinned read-back
-    exactly ([None, None, rows]).
-
-    Null counts ride as ``F.count(col)`` (non-nulls; nulls derived as
-    rows − count), measurably cheaper than ``sum(isnull cast long)``
-    in the interpreted observation (~2× on wide schemas). The gate:
-    exact-hashable types carry ``collect_set(pmod(xxhash64(col),
-    1024))`` — memory capped at 1024 longs/column — whose size > cap
-    PROVES the exact set overflows, so the conditional second pass
-    fires only for true candidates and the old HLL margin band's
-    discarded dictionary job disappears; float/double keep the HLL
-    estimate (hashing is not an exact equality proxy for them)."""
-    from pyspark.sql import functions as F
-
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for i, c in enumerate(cols):
-        typ = types[c] if types is not None else None
-        col = (
-            F.col(c)
-            if present is None or c in present
-            else F.lit(None).cast(typ)
-        )
-        aggs += [
-            F.min(col).alias(f"mn{i}"),
-            F.max(col).alias(f"mx{i}"),
-            F.count(col).alias(f"nn{i}"),
-        ]
-        if typ is not None and _gate_hashable(typ):
-            aggs.append(
-                F.collect_set(
-                    F.when(
-                        col.isNotNull(),
-                        F.pmod(F.xxhash64(col), F.lit(_GATE_BUCKETS)),
-                    )
-                ).alias(f"hs{i}")
-            )
-        else:
-            aggs.append(F.approx_count_distinct(col).alias(f"ad{i}"))
-    return aggs
-
-
-def _stats_observe(df, schema, pby, with_sets=False):
-    """Attach the segment-stats first pass to the segment WRITE itself
-    (an ``Observation`` riding the write job) so the just-written batch
-    is not re-scanned for stats afterwards — at 100 TB the batch is
-    itself large and the read-back was a second full pass over its
-    bytes (guide §1.2: don't compute things twice). Returns
-    ``(df, observation)``; pass ``observation.get`` to
-    :func:`_segment_stats` as ``first_pass`` after the write.
-
-    ``with_sets`` additionally rides ``collect_set`` per stat column so
-    the conditional dictionary-set pass needs NO second job at all —
-    safe ONLY when the caller proves the batch is small (each set
-    buffers up to one value per row): the bounded-MERGE path passes it
-    when its own key collect has already capped the batch at 100k
-    rows. Unbounded batches must keep the two-pass shape — a
-    high-cardinality column would otherwise buffer the whole batch in
-    the observation (guide §5)."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    cols = _stat_cols(schema, pby)
-    types = dict(map(tuple, schema))
-    present = set(df.columns)
-    obs = Observation()
-    aggs = _stats_pass1_aggs(cols, types=types, present=present)
-    if with_sets:
-        aggs += [
-            F.collect_set(
-                F.col(c) if c in present else F.lit(None).cast(types[c])
-            ).alias(f"vs{i}")
-            for i, c in enumerate(cols)
-        ]
-    return df.observe(obs, *aggs), obs
-
-
-# stat-column count above which the first pass does NOT ride the write
-# as an Observation: CollectMetrics evaluates its aggregates
-# interpreted, row at a time, so thousands of expressions cost many
-# times the write itself (measured at 100k rows x 1000 cols on
-# local[32]: ~80 s for min/max/null+HLL vs a ~1 s noop floor, and a
-# Catalyst read-back aggregate is no better at ~120 s). Wide segments
-# instead run one POST-write vectorized pyarrow pass (~1-3 s for the
-# same shape): native columnar decode, no JVM row conversion, exact
-# capped dictionary sets in the same pass. Narrow schemas keep the
-# zero-extra-pass observation.
-_STATS_OBSERVE_MAX_COLS = int(
-    os.environ.get("CUPLYR_STATS_OBSERVE_MAX_COLS", "64")
-)
-
-# cap on rows x stat-columns for riding exact dictionary sets on a
-# bounded MERGE's write observation: each set buffers up to one value
-# per row through task-side accumulators merged on the driver, so a
-# wide schema must not pay full-batch buffering for columns whose
-# sets are discarded anyway (the post-write pass picks them up)
-_SET_RIDE_MAX_CELLS = int(
-    os.environ.get("CUPLYR_SET_RIDE_MAX_CELLS", str(1_000_000))
-)
-
-
-def _pyarrow_ok() -> bool:
-    try:
-        import pyarrow  # noqa: F401
-        import pyarrow.compute  # noqa: F401
-        import pyarrow.parquet  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
-def _stats_ride_write(fs: _TableFS, schema, pby) -> bool:
-    """Should the first-pass stats ride the write as an Observation?
-    Wide local segments answer no — the post-write pyarrow pass is an
-    order of magnitude cheaper there (see _STATS_OBSERVE_MAX_COLS);
-    remote filesystems always ride (the pyarrow pass reads local
-    paths only)."""
-    if fs.remote or not _pyarrow_ok():
-        return True
-    return len(_stat_cols(schema, pby)) <= _STATS_OBSERVE_MAX_COLS
-
-
 def _pa_fix_value(v, typ):
     """A pyarrow ``.as_py()`` value mapped into the domain the Spark
     aggregate returns: timestamps come back tz-aware UTC (or naive
@@ -2167,86 +2032,65 @@ def _pa_fix_value(v, typ):
     return v.astimezone().replace(tzinfo=None)
 
 
-def _pa_file_stats(path, names, types, cap):
-    """Per-file partial stats via pyarrow (runs on executors): one
-    native columnar read computing min/max, null count, rows and the
-    capped distinct set per stat column. Returns
-    {col: (mn, mx, nulls, rows, set|None, nan_rows)} with raw
-    (unconverted) Python values; merge and Spark-domain conversion
-    happen on the driver. float/double mirror Spark's ordering
-    exactly (total order with -0.0 < 0.0 and NaN greatest) via the
-    IEEE sortable-bits trick; their sets are recorded only on
-    NaN-free data (collect_set treats every NaN row as distinct, so a
+def _pa_partial_stats(tbl, names, types) -> dict:
+    """THE zone-map kernel: partial stats of one Arrow table (a whole
+    file, or one file's batches). Returns ``{"rows": n, "cols": {col:
+    [mn, mx, nulls, set | None]}}`` with raw (unconverted) Python
+    values; :func:`_merge_pa_partials` folds partials and
+    :func:`_stat_record` renders manifest entries. A name missing from
+    ``tbl`` (a ``schema_mode="merge"`` batch omitting a table column)
+    is all NULL. float/double mirror Spark's ordering exactly (total
+    order with -0.0 < 0.0 and NaN greatest) via the IEEE sortable-bits
+    trick; their sets are recorded only on NaN-free data (a
     NaN-bearing column's exact set is degenerate — omitting the
-    dictionary is sound, it only skips a pruning opportunity)."""
+    dictionary is sound, it only skips a pruning opportunity). The set
+    is the exact distinct set, None past ``_STAT_SET_CAP``."""
     import numpy as np
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    pf = pq.ParquetFile(path)
-    have = set(pf.schema_arrow.names)
-    rows = pf.metadata.num_rows
-    want = [n for n in names if n in have]
-    tbl = pf.read(columns=want) if want else None
+    rows = tbl.num_rows
+    have = set(tbl.column_names)
+    cap = _STAT_SET_CAP
     out = {}
     for name in names:
         if name not in have:
-            # schema_mode="merge" batch omitting a table column: the
-            # written file lacks it entirely — all rows NULL
-            out[name] = (None, None, rows, rows, set(), 0)
+            out[name] = [None, None, rows, set()]
             continue
         arr = tbl.column(name).combine_chunks()
         nulls = arr.null_count
         nn = arr.drop_null()
-        typ = types[name]
         mn = mx = None
         vals: set | None = set()
-        nan_rows = 0
-        if typ in ("float", "double"):
-            a = nn.to_numpy(zero_copy_only=False)
+        if types[name] in ("float", "double"):
+            a = nn.to_numpy(zero_copy_only=False).astype(np.float64)
             if len(a):
                 nan_mask = np.isnan(a)
-                nan_rows = int(nan_mask.sum())
                 # canonicalize NaN bit patterns, then the IEEE
                 # sortable-bits total order (-0.0 < 0.0, NaN greatest)
-                # — matches java.lang.Double.compare, which is what
-                # Spark's min/max use
-                a2 = np.where(nan_mask, np.float64("nan"), a).astype(
-                    np.float64, copy=False
-                )
-                u = a2.view(np.uint64)
+                # — matches java.lang.Double.compare
+                a = np.where(nan_mask, np.float64("nan"), a)
+                u = a.view(np.uint64)
                 key = np.where(
                     (u >> np.uint64(63)).astype(bool),
                     ~u,
                     u | np.uint64(1 << 63),
                 )
-                mn = float(a2[int(np.argmin(key))])
-                mx = float(a2[int(np.argmax(key))])
-                if typ == "float":
-                    mn, mx = (
-                        float(np.float32(mn)),
-                        float(np.float32(mx)),
-                    )
-                if nan_rows:
-                    vals = None  # no dictionary over NaN-bearing data
+                mn = float(a[int(np.argmin(key))])
+                mx = float(a[int(np.argmax(key))])
+                uq = np.unique(a)  # dedups -0.0/0.0 to one entry
+                if nan_mask.any() or len(uq) > cap:
+                    vals = None
                 else:
-                    uq = np.unique(a2)  # dedups -0.0/0.0 to one entry
-                    if len(uq) > cap:
-                        vals = None
-                    else:
-                        vals = {float(v) + 0.0 for v in uq}
+                    vals = {float(v) + 0.0 for v in uq}
         elif len(nn):
-            mm = pc.min_max(arr)
+            mm = pc.min_max(nn)
             mn, mx = mm["min"].as_py(), mm["max"].as_py()
             uq = pc.unique(nn)
-            if len(uq) > cap:
-                vals = None
-            else:
-                vals = set(uq.to_pylist())
+            vals = None if len(uq) > cap else set(uq.to_pylist())
         # all-NULL columns keep the empty set — the record rule drops
-        # empties downstream, matching the Spark path
-        out[name] = (mn, mx, nulls, rows, vals, nan_rows)
-    return out
+        # empties downstream
+        out[name] = [mn, mx, nulls, vals]
+    return {"rows": rows, "cols": out}
 
 
 def _tot_lt(a, b, is_float: bool) -> bool:
@@ -2265,279 +2109,197 @@ def _tot_lt(a, b, is_float: bool) -> bool:
     return a < b
 
 
-def _merge_pa_partials(partials, names, types, cap):
-    """Driver-side merge of per-file partial stats."""
-    merged = {
-        n: [None, None, 0, 0, set(), 0] for n in names
-    }  # mn, mx, nulls, rows, set|None, nan_rows
+def _merge_pa_partials(partials, names, types) -> dict:
+    """Fold kernel partials (same shape in and out)."""
+    rows = 0
+    merged = {n: [None, None, 0, set()] for n in names}
     for part in partials:
+        rows += part["rows"]
         for n in names:
             isf = types[n] in ("float", "double")
-            mn, mx, nulls, rows, vals, nan_rows = part[n]
+            mn, mx, nulls, vals = part["cols"][n]
             m = merged[n]
             m[2] += nulls
-            m[3] += rows
-            m[5] += nan_rows
             if mn is not None:
                 m[0] = mn if m[0] is None or _tot_lt(mn, m[0], isf) else m[0]
                 m[1] = mx if m[1] is None or _tot_lt(m[1], mx, isf) else m[1]
-            if m[4] is not None and vals is not None:
-                m[4] |= vals
-                if len(m[4]) > cap:
-                    m[4] = None
+            if m[3] is not None and vals is not None:
+                m[3] = m[3] | vals
+                if len(m[3]) > _STAT_SET_CAP:
+                    m[3] = None
             else:
-                m[4] = None
-    return merged
+                m[3] = None
+    return {"rows": rows, "cols": merged}
 
 
-def _segment_stats_arrow(
-    spark, fs: _TableFS, seg: str, schema, pby, cap: int | None = None
-) -> dict | None:
-    """Post-write first pass for WIDE schemas: executors read the
-    just-written segment's parquet files directly with pyarrow
-    (native columnar decode, no JVM row conversion) and compute
-    min/max/null-count/rows plus the CAPPED exact distinct set per
-    stat column, vectorized, in ONE pass — no HLL gate and no
-    conditional second job at all; memory is bounded at cap+1 values
-    per column per file. Guide 4.2 (hand whole batches to native
-    vectorized code). Returns the same shape as
-    :func:`_segment_stats`, or None when ineligible (remote FS,
-    pyarrow missing) — the caller falls back to the Spark read-back."""
-    import pickle
-
-    if fs.remote or not _pyarrow_ok():
-        return None
-    types = dict(map(tuple, schema))
-    cols = _stat_cols(schema, pby)
-    cap = _STAT_SET_CAP if cap is None else cap
-    try:
-        files = fs.data_files(seg, recurse=bool(pby))
-    except OSError:
-        return None
-    if files:
-        sc = spark.sparkContext
-        names, cap_b = list(cols), cap
-
-        def _run(paths):
-            for p in paths:
-                yield pickle.dumps(_pa_file_stats(p, names, types, cap_b))
-
-        sc.setJobDescription(f"segment stats (arrow): {seg}")
-        try:
-            blobs = sc.parallelize(files, len(files)).mapPartitions(
-                _run
-            ).collect()
-        finally:
-            sc.setJobDescription(None)
-        partials = [pickle.loads(b) for b in blobs]
-    else:
-        partials = []
-    merged = _merge_pa_partials(partials, cols, types, cap)
+def _stat_record(part: dict, names, types, sets: bool) -> dict:
+    """A merged partial rendered as one manifest zone-map entry:
+    ``{"rows": n, "cols": {col: [min, max, nulls] | [min, max, nulls,
+    values]}}`` — JSON-comparable bounds (:func:`_stat_json`), string
+    bounds truncated to valid prefixes, and (``sets``) the exact value
+    set when non-empty and free of strings longer than
+    ``_STAT_STR_CAP``."""
     out = {}
-    rows_total = max(
-        (m[3] for m in merged.values()), default=0
-    )  # every column sees every row
-    for c in cols:
+    for c in names:
         t = types[c]
-        mn_raw, mx_raw, nulls, _rows, vals, _nan = merged[c]
+        mn_raw, mx_raw, nulls, vals = part["cols"][c]
         mn = _stat_json(_pa_fix_value(mn_raw, t), t)
         mx = _stat_json(_pa_fix_value(mx_raw, t), t)
         if t == "string":
             mn = None if mn is None else _stat_trunc_min(mn)
             mx = None if mx is None else _stat_trunc_max(mx)
         entry = [mn, mx, int(nulls)]
-        if vals and len(vals) <= _STAT_SET_CAP:
-            if not (
-                t == "string" and any(len(v) > _STAT_STR_CAP for v in vals)
-            ):
-                entry.append(
-                    sorted(
-                        _stat_json(_pa_fix_value(v, t), t) for v in vals
-                    )
-                )
-        out[c] = entry
-    if not cols:
-        # still need the row count: from file footers (zero data read)
-        rows_total = 0
-        if files:
-            import pyarrow.parquet as pq
-
-            rows_total = sum(
-                pq.ParquetFile(p).metadata.num_rows for p in files
+        if sets and vals and not (
+            t == "string" and any(len(v) > _STAT_STR_CAP for v in vals)
+        ):
+            entry.append(
+                sorted(_stat_json(_pa_fix_value(v, t), t) for v in vals)
             )
-    return {"rows": int(rows_total), "cols": out}
+        out[c] = entry
+    return {"rows": int(part["rows"]), "cols": out}
 
 
-def _dict_sets_arrow(spark, fs, seg, schema, pby, cand, types):
-    """The conditional dictionary-set pass via a direct pyarrow read
-    of JUST the candidate columns — replaces the column-pruned Spark
-    aggregate with a vectorized native read. None (fall back to the
-    Spark aggregate) when ineligible: remote FS, pyarrow missing, or
-    a float/double candidate (their NaN/-0.0 set semantics are
-    mirrored only by the Spark path)."""
+def _local_partials(fs: _TableFS, seg: str, pby, names, types) -> dict:
+    """Local feeder: the driver reads each of the segment's parquet
+    files with pyarrow, one thread per file (bounded by the core
+    count; pyarrow decodes and computes with the GIL released) — no
+    Spark job, no Python worker. ``{relpath: partial}``."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow.parquet as pq
+
+    base = fs.join(seg)
+    files = fs.data_files(seg, recurse=bool(pby))
+
+    def one(path):
+        pf = pq.ParquetFile(path)
+        have = set(pf.schema_arrow.names)
+        tbl = pf.read(columns=[n for n in names if n in have])
+        return _pa_partial_stats(tbl, names, types)
+
+    if not files:
+        return {}
+    with ThreadPoolExecutor(min(len(files), os.cpu_count() or 1)) as ex:
+        parts = list(ex.map(one, files))
+    return {os.path.relpath(p, base): part for p, part in zip(files, parts)}
+
+
+_PICKLE_BY_VALUE_LOCK = threading.Lock()
+
+
+def _remote_partials(spark, fs: _TableFS, seg: str, schema, names, types):
+    """Remote (URI-scheme) feeder: ONE Spark job reads the segment
+    (pinned to the table schema) and ``mapInArrow`` hands its Arrow
+    batches, keyed by ``_metadata.file_path``, to the same kernel; the
+    per-file partials merge on the driver. ``{relpath: partial}``."""
     import pickle
+    import sys
+    from urllib.parse import unquote
 
-    if fs.remote or not _pyarrow_ok():
-        return None
-    if any(types[c] in ("float", "double") for _, c in cand):
-        return None
-    try:
-        files = fs.data_files(seg, recurse=bool(pby))
-    except OSError:
-        return None
-    names = [c for _, c in cand]
-    cap = _STAT_SET_CAP
-    if files:
+    from pyspark.sql import functions as F
 
-        def _run(paths):
-            import pyarrow.compute as pc
-            import pyarrow.parquet as pq
+    sdf = _read_parquet_at(spark, schema, fs.join(seg)).select(
+        F.col("_metadata.file_path").alias("__file"),
+        *[F.col(c) for c in names],
+    )
 
-            for path in paths:
-                pf = pq.ParquetFile(path)
-                have = set(pf.schema_arrow.names)
-                want = [n for n in names if n in have]
-                tbl = pf.read(columns=want) if want else None
-                out = {}
-                for n in names:
-                    if n not in have:
-                        out[n] = set()
-                        continue
-                    u = pc.unique(
-                        tbl.column(n).combine_chunks().drop_null()
-                    )
-                    # cap+1: enough to prove overflow, bounded memory
-                    out[n] = (
-                        None
-                        if len(u) > cap
-                        else set(u.to_pylist())
-                    )
-                yield pickle.dumps(out)
+    def _run(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-        sc = spark.sparkContext
-        sc.setJobDescription(f"dictionary sets (arrow): {seg}")
+        acc: dict = {}
+        for b in batches:
+            for f in pc.unique(b.column("__file")).to_pylist():
+                tbl = pa.Table.from_batches(
+                    [b.filter(pc.equal(b.column("__file"), f))]
+                )
+                p = _pa_partial_stats(tbl, names, types)
+                acc[f] = (
+                    _merge_pa_partials([acc[f], p], names, types)
+                    if f in acc
+                    else p
+                )
+        if acc:
+            yield pa.RecordBatch.from_pydict({
+                "file": list(acc),
+                "part": [pickle.dumps(p) for p in acc.values()],
+            })
+
+    # the kernel ships BY VALUE (pickled when the plan is built), so
+    # executors need not import cuplyr_spark
+    from pyspark import cloudpickle
+
+    mod = sys.modules[__name__]
+    with _PICKLE_BY_VALUE_LOCK:
+        cloudpickle.register_pickle_by_value(mod)
         try:
-            blobs = sc.parallelize(files, len(files)).mapPartitions(
-                _run
-            ).collect()
+            mapped = sdf.mapInArrow(_run, "file string, part binary")
         finally:
-            sc.setJobDescription(None)
-        partials = [pickle.loads(b) for b in blobs]
-    else:
-        partials = []
-    merged: dict = {n: set() for n in names}
-    for part in partials:
-        for n in names:
-            if merged[n] is None or part[n] is None:
-                merged[n] = None
-            else:
-                merged[n] |= part[n]
-                if len(merged[n]) > cap:
-                    merged[n] = None
-    row2 = {}
-    for i, c in cand:
-        vals = merged[c]
-        row2[f"vs{i}"] = (
-            None
-            if vals is None
-            else [_pa_fix_value(v, types[c]) for v in vals]
-        )
-    return row2
+            cloudpickle.unregister_pickle_by_value(mod)
+    rel = re.compile(_file_rel_re(seg))
+    by_file: dict = {}
+    for r in mapped.collect():
+        key = unquote(rel.match(r["file"]).group(1))
+        by_file.setdefault(key, []).append(pickle.loads(r["part"]))
+    return {
+        k: _merge_pa_partials(ps, names, types) for k, ps in by_file.items()
+    }
 
 
 def _segment_stats(
-    spark, fs: _TableFS, seg: str, schema, pby, first_pass=None
-) -> dict:
-    """min/max/null-count per stat-eligible column of a just-written
-    segment, via ONE column-pruned aggregate over the segment's
-    parquet (cost ∝ the batch's bytes, never the table's), plus — for
-    columns an HLL estimate flags as low-cardinality — the EXACT value
-    set from one second tiny aggregate over just those columns
-    (dictionary zone map: prunes scattered equality keys min/max
-    cannot). Partition columns are covered by the manifest partition
-    map and skipped. Shape: ``{"rows": n, "cols": {col: [min, max,
-    nulls] | [min, max, nulls, values]}}``.
+    spark, fs: _TableFS, seg: str, schema, pby, file_cols=(),
+    segment: bool = True,
+) -> tuple[dict | None, dict | None]:
+    """Zone maps of a just-written segment from ONE pass of the
+    pyarrow kernel (:func:`_pa_partial_stats`) over its files — local
+    tables on the driver, remote tables through one ``mapInArrow`` job
+    (cost ∝ the batch's bytes, never the table's). Returns
+    ``(segment_stats, file_stats)``:
 
-    ``first_pass`` (a :func:`_stats_observe` result) supplies the
-    first-pass aggregates as observed metrics of the segment write
-    itself; only the conditional dictionary-set pass then touches the
-    parquet, column-pruned to the flagged candidates. Without a
-    ``first_pass``, WIDE local-filesystem segments route through the
-    vectorized pyarrow pass (:func:`_segment_stats_arrow`) — one
-    native columnar read computing everything including the exact
-    capped sets, no Spark aggregate at all."""
-    from pyspark.sql import functions as F
+    - ``segment_stats`` (None unless ``segment``): min/max/null-count
+      per stat-eligible column plus the exact value set of columns with
+      at most ``_STAT_SET_CAP`` distinct values (dictionary zone map:
+      prunes scattered equality keys min/max cannot). Partition columns
+      are covered by the manifest partition map and skipped. Shape:
+      ``{"rows": n, "cols": {col: [min, max, nulls] | [min, max,
+      nulls, values]}}``.
+    - ``file_stats`` (None unless ``file_cols``): per-FILE
+      ``{"rows", "cols": {col: [min, max, nulls]}}`` for the cluster /
+      z-order columns, keyed by the path RELATIVE to the segment
+      directory (partition dirs included) — the same entry shape, so
+      :func:`_seg_stats_match` prunes at either grain. Files holding no
+      rows get no entry.
 
+    Stats cover the TABLE schema: a ``schema_mode="merge"`` batch
+    missing a table column still gets exact stats for it ([None, None,
+    rows])."""
     types = dict(map(tuple, schema))
-    cols = _stat_cols(schema, pby)
-    # pinned to the TABLE schema: a schema_mode="merge" batch missing
-    # a table column still gets exact stats for it ([None, None, rows])
-    sdf = None
-    if first_pass is not None:
-        row = first_pass
-    else:
-        st = _segment_stats_arrow(spark, fs, seg, schema, pby)
-        if st is not None:
-            return st
-        sdf = _read_parquet_at(spark, schema, fs.join(seg))
-        row = sdf.agg(*_stats_pass1_aggs(cols, types=types)).first()
-    rows = int(row["__n"])
-    # second pass only over flagged candidates: the hash-set gate is
-    # exact up to bucket collisions (> cap PROVES overflow — no more
-    # discarded dictionary jobs); float/double keep the HLL estimate
-    # with its margin, verified exactly driver-side before recording
-    cand = []
-    for i, c in enumerate(cols):
-        if _gate_hashable(types[c]):
-            hs = row[f"hs{i}"]
-            if hs is not None and 0 < len(hs) <= _STAT_SET_CAP:
-                cand.append((i, c))
-        elif (row[f"ad{i}"] or 0) <= _STAT_SET_CAP * 1.5:
-            cand.append((i, c))
-    sets: dict = {}
-    if cand:
-        if first_pass is not None and f"vs{cand[0][0]}" in row:
-            # the write observation already carried the exact sets
-            # (bounded-batch path, _stats_observe(with_sets=True)) —
-            # same values the read-back below would return, zero jobs
-            row2 = row
-        else:
-            row2 = _dict_sets_arrow(
-                spark, fs, seg, schema, pby, cand, types
-            )
-            if row2 is None:
-                if sdf is None:
-                    sdf = _read_parquet_at(spark, schema, fs.join(seg))
-                row2 = sdf.agg(
-                    *[
-                        F.collect_set(F.col(c)).alias(f"vs{i}")
-                        for i, c in cand
-                    ]
-                ).first()
-        for i, c in cand:
-            vals = row2[f"vs{i}"]
-            if not vals or len(vals) > _STAT_SET_CAP:
-                continue  # empty = all-NULL (nonnull==0 already prunes)
-            if types[c] == "string" and any(
-                len(v) > _STAT_STR_CAP for v in vals
-            ):
-                continue  # don't bloat the manifest with long strings
-            sets[c] = sorted(
-                _stat_json(v, types[c]) for v in vals
-            )
-    out = {}
-    for i, c in enumerate(cols):
-        t = types[c]
-        mn = _stat_json(row[f"mn{i}"], t)
-        mx = _stat_json(row[f"mx{i}"], t)
-        if t == "string":
-            mn = None if mn is None else _stat_trunc_min(mn)
-            mx = None if mx is None else _stat_trunc_max(mx)
-        entry = [mn, mx, rows - int(row[f"nn{i}"] or 0)]
-        if c in sets:
-            entry.append(sets[c])
-        out[c] = entry
-    return {"rows": rows, "cols": out}
+    cols = _stat_cols(schema, pby) if segment else []
+    fcols = list(file_cols or ())
+    names = cols + [c for c in fcols if c not in cols]
+    parts = (
+        _remote_partials(spark, fs, seg, schema, names, types)
+        if fs.remote
+        else _local_partials(fs, seg, pby, names, types)
+    )
+    seg_stats = (
+        _stat_record(
+            _merge_pa_partials(parts.values(), names, types),
+            cols, types, sets=True,
+        )
+        if segment
+        else None
+    )
+    file_stats = (
+        {
+            rel: _stat_record(p, fcols, types, sets=False)
+            for rel, p in parts.items()
+            if p["rows"]
+        }
+        if fcols
+        else None
+    )
+    return seg_stats, file_stats
 
 
 def _merge_segment_stats(sts: list) -> dict | None:
@@ -2654,7 +2416,7 @@ def _cluster_shape(df, cby: list[str], n_files: int | None = None):
     samples the batch — cost ∝ the batch's bytes, never the table's)
     plus an in-partition sort, so each written file covers a narrow,
     near-disjoint slice of the cluster-key space and the per-file zone
-    maps recorded beside it (:func:`_file_stats`) prune at FILE grain.
+    maps recorded beside it (:func:`_segment_stats`) prune at FILE grain.
     This is the liquid-clustering write shape at the grain this
     manifest owns: every segment is independently clustered, and the
     table never needs a global re-sort for key probes to stay cheap."""
@@ -2667,48 +2429,6 @@ def _cluster_shape(df, cby: list[str], n_files: int | None = None):
         else df.repartitionByRange(*cols)
     )
     return shaped.sortWithinPartitions(*cby)
-
-
-def _file_stats(spark, fs: _TableFS, seg: str, schema, cby) -> dict:
-    """Per-FILE zone maps for the cluster columns of a just-written
-    segment: one column-pruned aggregate grouped by the scan's hidden
-    ``_metadata.file_path`` (cost ∝ the batch's bytes — the segment
-    was just written, so its footers are cache-warm). Entries share
-    the segment zone-map shape, so :func:`_seg_stats_match` prunes at
-    either grain with the same arithmetic. Keys are paths RELATIVE to
-    the segment directory (partition dirs included), scheme-free —
-    stable across mount points. String bounds truncate exactly like
-    segment stats (min prefix / max prefix+bump), keeping the manifest
-    small while staying sound."""
-    from pyspark.sql import functions as F
-
-    types = dict(map(tuple, schema))
-    sdf = spark.read.parquet(fs.join(seg)).select(
-        F.regexp_extract(
-            F.col("_metadata.file_path"), _file_rel_re(seg), 1
-        ).alias("__rel"),
-        *[F.col(c) for c in cby],
-    )
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for i, c in enumerate(cby):
-        aggs += [
-            F.min(F.col(c)).alias(f"mn{i}"),
-            F.max(F.col(c)).alias(f"mx{i}"),
-            F.sum(F.isnull(F.col(c)).cast("long")).alias(f"nu{i}"),
-        ]
-    out = {}
-    for row in sdf.groupBy("__rel").agg(*aggs).collect():
-        cols = {}
-        for i, c in enumerate(cby):
-            t = types[c]
-            mn = _stat_json(row[f"mn{i}"], t)
-            mx = _stat_json(row[f"mx{i}"], t)
-            if t == "string":
-                mn = None if mn is None else _stat_trunc_min(mn)
-                mx = None if mx is None else _stat_trunc_max(mx)
-            cols[c] = [mn, mx, int(row[f"nu{i}"] or 0)]
-        out[row["__rel"]] = {"rows": int(row["__n"]), "cols": cols}
-    return out
 
 
 def _file_prune(log: dict, segs, sfilt: dict):
@@ -4955,10 +4675,14 @@ def append_snapshot(
     (``read_append_snapshot(partition_filter=...)``).
 
     ``collect_stats`` (default on) additionally records per-segment
-    ZONE MAPS — min/max/null-count for every stat-eligible column —
-    in the log manifest, via one column-pruned aggregate over the
-    just-written segment (cost ∝ the batch's bytes, never the
-    table's). ``read_append_snapshot(stats_filter=...)`` /
+    ZONE MAPS — min/max/null-count for every stat-eligible column,
+    plus the exact value set of columns with at most 32 distinct
+    values — in the log manifest, from one vectorized pyarrow pass
+    over the just-written segment's files (cost ∝ the batch's bytes,
+    never the table's): on the driver for local tables (no Spark job),
+    through one ``mapInArrow`` job for URI-scheme tables. Clustered
+    tables get their per-file zone maps from the same pass.
+    ``read_append_snapshot(stats_filter=...)`` /
     ``read_append_changes(stats_filter=...)`` then prune whole
     segments before any filesystem listing — the per-file stats idea
     of Delta/Iceberg, lifted to the segment grain where this
@@ -5275,27 +4999,16 @@ def append_snapshot(
     # only the cheap log commit below ever needs to retry
     n = (cur["version"] if cur else 0) + 1
     seg = f"seg={n}-{uuid.uuid4().hex[:8]}"
-    obs = None
-    if collect_stats and _stats_ride_write(fs, schema, pby):
-        # stats ride the write, not a second batch scan; WIDE local
-        # schemas skip the observation — the post-write vectorized
-        # pyarrow pass inside _segment_stats is far cheaper there
-        out_df, obs = _stats_observe(out_df, schema, pby)
     writer = out_df.write.mode("errorifexists")
     if pby:
         writer = writer.partitionBy(*pby)
     writer.parquet(fs.join(seg))
     pdirs = _partition_dirs(fs, seg, len(pby)) if pby else None
-    seg_stats = (
+    seg_stats, f_stats = (
         _segment_stats(frame.df.sparkSession, fs, seg, schema, pby,
-                       first_pass=obs.get if obs is not None else None)
+                       file_cols=cby)
         if collect_stats
-        else None
-    )
-    f_stats = (
-        _file_stats(frame.df.sparkSession, fs, seg, schema, cby)
-        if cby and collect_stats
-        else None
+        else (None, None)
     )
     if spec is not None:
         _write_segment_sketch(frame.df.sparkSession, fs, seg, spec)
@@ -5710,13 +5423,12 @@ def migrate_rename_append_column(
     if exps is not None and cur.get("expectations"):
         log["expectations"] = exps
     if cur.get("stats"):
-        log["stats"] = {
-            seg: _segment_stats(spark, fs, seg, new_schema, pby)
-        }
+        seg_stats, f_stats = _segment_stats(
+            spark, fs, seg, new_schema, pby, file_cols=cby
+        )
+        log["stats"] = {seg: seg_stats}
         if cby:
-            log["file_stats"] = {
-                seg: _file_stats(spark, fs, seg, new_schema, cby)
-            }
+            log["file_stats"] = {seg: f_stats}
     log["retired_names"] = sorted(
         set(cur.get("retired_names") or ()) | {old}
     )
@@ -6814,26 +6526,15 @@ def update_append_rows(
             # the updated copies keep the table's cluster layout, so
             # the NEXT key probe file-prunes over them too
             conformed = _cluster_shape(conformed, cby)
-        obs = None
-        if cur.get("stats") and _stats_ride_write(fs, schema, pby):
-            # stats ride the write, no re-scan (wide local schemas use
-            # the post-write pyarrow pass instead)
-            conformed, obs = _stats_observe(conformed, schema, pby)
         writer = conformed.write.mode("errorifexists")
         if pby:
             writer = writer.partitionBy(*pby)
         writer.parquet(fs.join(seg))
         pdirs = _partition_dirs(fs, seg, len(pby)) if pby else None
-        seg_stats = (
-            _segment_stats(spark, fs, seg, schema, pby,
-                           first_pass=obs.get if obs is not None else None)
+        seg_stats, f_stats = (
+            _segment_stats(spark, fs, seg, schema, pby, file_cols=cby)
             if cur.get("stats")
-            else None
-        )
-        f_stats = (
-            _file_stats(spark, fs, seg, schema, cby)
-            if cby and cur.get("stats")
-            else None
+            else (None, None)
         )
         spec = cur.get("sketch_spec")
         if spec is not None:
@@ -7243,7 +6944,6 @@ def upsert_append_rows(
     max_prune_keys: int = 100_000,
     schema_mode: str = "strict",
     _known_keys: list | None = None,
-    _rows_bounded: int | None = None,
 ) -> tuple[int, int, int]:
     """Keyed MERGE (upsert) on an append table at merge-on-read cost —
     the Delta ``MERGE WHEN MATCHED UPDATE ALL WHEN NOT MATCHED INSERT
@@ -7275,14 +6975,7 @@ def upsert_append_rows(
     batch's group keys once for its own guards. Passing it skips this
     function's :func:`join_prune_filter` collect (one fewer driver
     job over the batch); the values must be exactly what that collect
-    would have returned or pruning turns unsound.
-
-    ``_rows_bounded`` (private contract): the caller's proof that the
-    batch holds at most this many ROWS (e.g. the view refresh already
-    collected the one-row-per-group batch's keys). When ≤ 100k, the
-    dictionary-set stats ride the segment write's observation instead
-    of a second job over the just-written segment — the sets are
-    bounded by the row count, so the observation buffers are too."""
+    would have returned or pruning turns unsound."""
     import uuid
 
     keys = [key] if isinstance(key, str) else list(key)
@@ -7554,24 +7247,8 @@ def upsert_append_rows(
             # NEXT merge's key probe file-prunes over this segment too
             conformed = _cluster_shape(conformed, cby)
         obs = None
-        ride = bool(cur.get("stats")) and _stats_ride_write(fs, schema, pby)
-        if ride:  # stats (and the row count) ride the write
-            stat_n = len(_stat_cols(schema, pby))
-            conformed, obs = _stats_observe(
-                conformed, schema, pby,
-                # exact sets ride only when the caller PROVED the batch
-                # bound AND rows x stat-columns stays within the
-                # observation-buffer budget — a wide schema must not
-                # buffer full-batch value sets per column (the
-                # conditional second pass picks those up instead)
-                with_sets=(
-                    _rows_bounded is not None
-                    and _rows_bounded <= 100_000
-                    and _rows_bounded * max(1, stat_n)
-                    <= _SET_RIDE_MAX_CELLS
-                ),
-            )
-        elif n_appended is None and not cur.get("stats"):
+        if n_appended is None and not cur.get("stats"):
+            # no stats pass to count the rows: the count rides the write
             from pyspark.sql import Observation
 
             obs = Observation()
@@ -7583,25 +7260,18 @@ def upsert_append_rows(
             writer = writer.partitionBy(*pby)
         writer.parquet(fs.join(seg))
         pdirs = _partition_dirs(fs, seg, len(pby)) if pby else None
-        seg_stats = (
-            _segment_stats(spark, fs, seg, schema, pby,
-                           first_pass=obs.get if ride else None)
+        seg_stats, f_stats = (
+            _segment_stats(spark, fs, seg, schema, pby, file_cols=cby)
             if cur.get("stats")
-            else None
+            else (None, None)
         )
         if n_appended is None:
-            # wide no-observation path: the post-write stats pass
-            # counted the rows exactly
+            # the stats pass counted the rows exactly
             n_appended = (
                 int(obs.get["__n"])
                 if obs is not None
                 else int(seg_stats["rows"])
             )
-        f_stats = (
-            _file_stats(spark, fs, seg, schema, cby)
-            if cby and cur.get("stats")
-            else None
-        )
         spec = cur.get("sketch_spec")
         if spec is not None:
             _write_segment_sketch(spark, fs, seg, spec)
@@ -8269,31 +7939,35 @@ def compact_append_snapshot(
         if fold_has_dv
         else _merge_segment_stats([cur_smap.get(s) for s in fold])
     )
-    if fold_stats is None and cur_smap:
-        fold_stats = _segment_stats(
-            spark, fs, seg, cur.get("schema"), pby
-        ) if cur.get("schema") else None
-    if fold_stats is not None:
-        log["stats"] = {**(log.get("stats") or {}), seg: fold_stats}
     # file-grain zone maps for the fold (cost ∝ fold bytes, which the
     # fold just paid anyway): the cluster columns on a clustered
     # table, else the z-order columns — the fold's per-file ranges on
     # them are tight by construction, so key probes file-prune
     # z-ordered tables exactly like clustered ones. Folded segments'
-    # entries were already dropped by _log_with_extras.
+    # entries were already dropped by _log_with_extras. Both grains
+    # come from one stats pass over the fold.
     types = dict(map(tuple, cur.get("schema") or []))
     fcols = cby or [
         c
         for c in (zorder_by or [])
         if types.get(c) in _STAT_TYPES and c not in pby
     ]
-    if fcols and cur.get("schema") and (
+    want_seg = fold_stats is None and bool(cur_smap)
+    want_files = bool(fcols) and bool(
         cur.get("file_stats") or cby or zorder_by
-    ):
-        log["file_stats"] = {
-            **(log.get("file_stats") or {}),
-            seg: _file_stats(spark, fs, seg, cur["schema"], fcols),
-        }
+    )
+    f_stats = None
+    if cur.get("schema") and (want_seg or want_files):
+        seg_stats, f_stats = _segment_stats(
+            spark, fs, seg, cur["schema"], pby,
+            file_cols=fcols if want_files else (), segment=want_seg,
+        )
+        if want_seg:
+            fold_stats = seg_stats
+    if fold_stats is not None:
+        log["stats"] = {**(log.get("stats") or {}), seg: fold_stats}
+    if f_stats is not None:
+        log["file_stats"] = {**(log.get("file_stats") or {}), seg: f_stats}
     spec = cur.get("sketch_spec")
     if spec is not None:
         if fold_has_dv:

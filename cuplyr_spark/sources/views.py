@@ -564,13 +564,9 @@ def refresh_append_view(
                 # maintain_append_view after full rebuilds (fine at
                 # view scale; the DV is metadata, not a rewrite)
                 delete_append_rows(spark, state_dir, "1 = 1")
-                n_rows = batch.count()
-                if n_rows:
+                if batch.count():
                     upsert_append_rows(
-                        Frame(batch, ()), state_dir, key=group_by,
-                        _rows_bounded=(
-                            n_rows if n_rows <= 100_000 else None
-                        ),
+                        Frame(batch, ()), state_dir, key=group_by
                     )
         else:
             since = last["base_version"]
@@ -652,13 +648,8 @@ def _commit_merged_batch(spark, state_dir: str, group_by: list[str], batch):
     # the MERGE's own prune bound) fall back to the separate
     # bounded probes.
     known_keys = None
-    n_bounded = None  # proven batch row bound: the collect
-    # below caps the one-row-per-group batch at 100k rows, so
-    # the MERGE's dictionary-set stats can ride its segment
-    # write instead of a second job (upsert _rows_bounded)
     krows = batch.select(*group_by).limit(100_001).collect()
     if len(krows) <= 100_000:
-        n_bounded = len(krows)
         null_combos = [
             r for r in krows
             if any(r[g] is None for g in group_by)
@@ -702,8 +693,7 @@ def _commit_merged_batch(spark, state_dir: str, group_by: list[str], batch):
                            _combo_pred(group_by, null_combos))
     if not empty:
         upsert_append_rows(Frame(batch, ()), state_dir, key=group_by,
-                           _known_keys=known_keys,
-                           _rows_bounded=n_bounded)
+                           _known_keys=known_keys)
 
 
 def _write_refresh_record(

@@ -1,6 +1,8 @@
-"""End-to-end wide-write rehearsal (r16): append_snapshot at
-N_ROWS x N_COLS, stats on vs off — the VERDICT criterion is
-stats-on <= ~2x bare (was ~13x with the interpreted observation)."""
+"""End-to-end wide-write rehearsal: append_snapshot at N_ROWS x
+N_COLS, stats on vs off — the criterion is stats-on <= ~2x bare.
+
+Usage: python scripts/exp_wide_write.py [N_ROWS] [N_COLS] [REPS]
+(cores: $SPARK_GRAFT_CPUS, default every core of the host)."""
 import os, shutil, sys, time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from cuplyr_spark.session import get_session
@@ -8,7 +10,7 @@ from cuplyr_spark.session import get_session
 N_ROWS = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
 N_COLS = int(sys.argv[2]) if len(sys.argv) > 2 else 1000
 REPS = int(sys.argv[3]) if len(sys.argv) > 3 else 3
-spark = get_session(cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+spark = get_session(cpus=int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count())))
 from pyspark.sql import functions as F
 from cuplyr_spark.frame import Frame
 from cuplyr_spark.sources.connectors import append_snapshot
@@ -37,4 +39,4 @@ def run(tag, collect_stats):
     print(f"{tag}: median {ts[len(ts)//2]:.2f}s all={[f'{t:.2f}' for t in ts]}", flush=True)
 
 run("bare (collect_stats=False)", False)
-run("stats on (r16 path)", True)
+run("stats on", True)

@@ -258,67 +258,6 @@ def test_upsert_dv_thread_error_propagates(spark, tmp_path, monkeypatch):
     assert read_append_snapshot(spark, d).df.count() == 100
 
 
-def test_bounded_upsert_dict_sets_ride_the_write(spark, tmp_path, monkeypatch):
-    # _rows_bounded <= 100k rides collect_set on the segment write's
-    # observation, so the dictionary-set pass launches NO second job —
-    # and the recorded stats are bit-identical to the two-pass path
-    da = _mk(spark, tmp_path, "dictride_a")
-    db = _mk(spark, tmp_path, "dictride_b")
-    batch = spark.range(10).select(
-        F.col("id").cast("long"),
-        (F.col("id") % 3).alias("g"),     # 3 distinct -> dictionary
-        F.lit(7).cast("long").alias("v"), # 1 distinct -> dictionary
-    )
-
-    # spy: any read-back of the NEW segment during stats means the
-    # second pass ran
-    reads: list = []
-    orig = C._read_parquet_at
-
-    def spy(spark_, schema, path, *a, **kw):
-        reads.append(path)
-        return orig(spark_, schema, path, *a, **kw)
-
-    monkeypatch.setattr(C, "_read_parquet_at", spy)
-    upsert_append_rows(Frame(batch, ()), da, key=["id"], _rows_bounded=10)
-    la = _read_log(_TableFS(da))
-    seg_a = la["segments"][-1]
-    assert not any(seg_a in p for p in reads), (
-        "bounded upsert must not re-read its own segment for stats"
-    )
-
-    reads.clear()
-    arrow_sets: list = []
-    orig_ds = C._dict_sets_arrow
-
-    def spy_ds(*a, **kw):
-        arrow_sets.append(a[2])
-        return orig_ds(*a, **kw)
-
-    monkeypatch.setattr(C, "_dict_sets_arrow", spy_ds)
-    upsert_append_rows(Frame(batch, ()), db, key=["id"])  # two-pass path
-    lb = _read_log(_TableFS(db))
-    seg_b = lb["segments"][-1]
-    # r16: the unbounded second pass is the vectorized pyarrow read of
-    # just the candidate columns — never a Spark read-back aggregate
-    assert seg_b in arrow_sets, (
-        "unbounded upsert keeps the two-pass dictionary stats"
-    )
-    assert not any(seg_b in p for p in reads), (
-        "the dictionary pass must not re-read via a Spark aggregate"
-    )
-
-    # recorded stats identical between the two paths
-    assert la["stats"][seg_a] == lb["stats"][seg_b]
-    # and the dictionary sets actually landed
-    assert la["stats"][seg_a]["cols"]["g"][3] == [0, 1, 2]
-    assert la["stats"][seg_a]["cols"]["v"][3] == [7]
-    # results identical
-    a = sorted(map(tuple, read_append_snapshot(spark, da).df.collect()))
-    b = sorted(map(tuple, read_append_snapshot(spark, db).df.collect()))
-    assert a == b
-
-
 # -- full-coverage tombstones (MERGE skips the DV entirely) -----------------
 
 

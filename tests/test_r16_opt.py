@@ -18,7 +18,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-import cuplyr_spark.sources.connectors as C
 from cuplyr_spark.frame import Frame
 from cuplyr_spark.sources.connectors import (
     _read_log,
@@ -130,235 +129,6 @@ def test_compaction_dead_drop_with_sketch_spec(spark, tmp_path):
     # rows are EXACT from the sidecar: the dead segment's 100 rows
     # must not be double counted into the fold's sketch
     assert row["rows"] == 100
-
-
-# -- wide-schema stats: vectorized pyarrow pass vs the observation ---------
-
-
-def _adversarial_df(spark):
-    """Every stat-eligible type with its edge cases: unicode/empty/long
-    strings, +-inf doubles, all-NULL columns, dictionary candidates,
-    dates/timestamps/decimals/booleans."""
-    import datetime
-    from decimal import Decimal
-
-    rows = []
-    for i in range(200):
-        rows.append((
-            i,                                        # l bigint
-            i % 5,                                    # dict_i int (5 distinct)
-            float(i) * 1.5 - 10,                      # d double
-            f"v{i:03d}" + ("x" * 100 if i % 7 == 0 else ""),  # s string (some > cap)
-            ["alpha", "beta", "éé", ""][i % 4],     # dict_s string (4 distinct)
-            None,                                     # all_null string
-            datetime.date(2020, 1, 1) + datetime.timedelta(days=i),
-            datetime.datetime(2021, 3, 1, 6, 30) + datetime.timedelta(minutes=i),
-            Decimal(i).scaleb(-2) + Decimal("1.00"),  # dec decimal(10,2)
-            bool(i % 2),                              # b boolean
-            float("inf") if i == 3 else (float("-inf") if i == 4 else i / 3.0),
-            None if i % 3 == 0 else i * 7,            # nully bigint
-            float(i) * 0.25 - 3,                      # f float (32-bit)
-            datetime.datetime(2019, 7, 4, 23, 59, 59)
-            + datetime.timedelta(seconds=i),          # tsn timestamp_ntz
-            i % 128,                                  # ti tinyint
-            i % 1000,                                 # si smallint
-        ))
-    ddl = (
-        "l bigint, dict_i int, d double, s string, dict_s string, "
-        "all_null string, dt date, ts timestamp, dec decimal(10,2), "
-        "b boolean, inf_d double, nully bigint, f float, "
-        "tsn timestamp_ntz, ti tinyint, si smallint"
-    )
-    return spark.createDataFrame(rows, schema=ddl)
-
-
-def _stats_of(spark, tmp_path, name, df, monkeypatch, observe_max):
-    d = str(tmp_path / name)
-    monkeypatch.setattr(C, "_STATS_OBSERVE_MAX_COLS", observe_max)
-    append_snapshot(Frame(df, ()), d, batch_id=0)
-    log = _read_log(_TableFS(d))
-    (seg,) = log["segments"]
-    return log["stats"][seg]
-
-
-def test_wide_stats_arrow_parity(spark, tmp_path, monkeypatch):
-    # the SAME batch through the observation path (threshold high) and
-    # the wide pyarrow path (threshold 0) must record IDENTICAL stats:
-    # min/max/null-counts/rows and the exact dictionary sets
-    df = _adversarial_df(spark)
-    via_obs = _stats_of(spark, tmp_path, "obs", df, monkeypatch, 1000)
-    via_arrow = _stats_of(spark, tmp_path, "arrow", df, monkeypatch, 0)
-    assert via_arrow == via_obs
-    # sanity: the shape we think we're testing
-    assert via_obs["rows"] == 200
-    assert via_obs["cols"]["dict_i"][3] == [0, 1, 2, 3, 4]
-    assert via_obs["cols"]["dict_s"][3] == sorted(["alpha", "beta", "éé", ""])
-    assert via_obs["cols"]["all_null"] == [None, None, 200]
-    assert via_obs["cols"]["b"][3] == [False, True]
-
-
-def test_wide_stats_arrow_parity_nonutc_tz(spark, tmp_path, monkeypatch):
-    # timestamps: the arrow pass converts storage-UTC values into the
-    # session timezone the Spark aggregate collects in
-    prev = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    try:
-        df = _adversarial_df(spark)
-        via_obs = _stats_of(spark, tmp_path, "obs_tz", df, monkeypatch, 1000)
-        via_arrow = _stats_of(spark, tmp_path, "arrow_tz", df, monkeypatch, 0)
-        assert via_arrow == via_obs
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev)
-
-
-def test_wide_stats_arrow_float_nan(spark, tmp_path, monkeypatch):
-    # NaN: Spark orders it greatest (max = NaN, min = smallest real
-    # value); the arrow pass mirrors that and OMITS the dictionary on
-    # NaN-bearing float columns (sound: only a pruning opportunity)
-    import math
-
-    rows = [(float("nan"),), (1.5,), (-2.0,), (None,), (0.0,), (-0.0,)]
-    df = spark.createDataFrame(rows, schema="x double")
-    st = _stats_of(spark, tmp_path, "nan_arrow", df, monkeypatch, 0)
-    mn, mx, nulls = st["cols"]["x"][0], st["cols"]["x"][1], st["cols"]["x"][2]
-    assert mn == -2.0 and math.isnan(mx) and nulls == 1
-    assert len(st["cols"]["x"]) == 3  # no dictionary recorded
-    # and the Spark-side min/max agree
-    st2 = _stats_of(spark, tmp_path, "nan_obs", df, monkeypatch, 1000)
-    assert st2["cols"]["x"][0] == mn and math.isnan(st2["cols"]["x"][1])
-    assert st2["cols"]["x"][2] == nulls
-
-
-def test_wide_stats_arrow_partitioned(spark, tmp_path, monkeypatch):
-    df = spark.range(100).select(
-        F.col("id").cast("long"),
-        (F.col("id") % 3).cast("int").alias("p"),
-        (F.col("id") % 6).cast("int").alias("dict_i"),
-        F.concat(F.lit("s"), F.col("id")).alias("s"),
-    )
-    d_obs = str(tmp_path / "part_obs")
-    d_arr = str(tmp_path / "part_arr")
-    monkeypatch.setattr(C, "_STATS_OBSERVE_MAX_COLS", 1000)
-    append_snapshot(Frame(df, ()), d_obs, batch_id=0, partition_by=["p"])
-    monkeypatch.setattr(C, "_STATS_OBSERVE_MAX_COLS", 0)
-    append_snapshot(Frame(df, ()), d_arr, batch_id=0, partition_by=["p"])
-    s_obs = _read_log(_TableFS(d_obs))
-    s_arr = _read_log(_TableFS(d_arr))
-    assert (
-        s_arr["stats"][s_arr["segments"][0]]
-        == s_obs["stats"][s_obs["segments"][0]]
-    )
-
-
-def test_wide_stats_arrow_schema_merge_missing_col(spark, tmp_path, monkeypatch):
-    # a merge-mode batch omitting a table column: the written files
-    # lack it entirely; both paths must record [None, None, rows]
-    base = spark.range(10).select(
-        F.col("id").cast("long"), (F.col("id") * 2).alias("v"),
-        F.lit("t").alias("tag"),
-    )
-    for name, thresh in (("mm_obs", 1000), ("mm_arr", 0)):
-        d = str(tmp_path / name)
-        monkeypatch.setattr(C, "_STATS_OBSERVE_MAX_COLS", thresh)
-        append_snapshot(Frame(base, ()), d, batch_id=0)
-        batch = spark.range(5).select((F.col("id") + 100).cast("long").alias("id"))
-        append_snapshot(
-            Frame(batch, ()), d, batch_id=1, schema_mode="merge"
-        )
-        log = _read_log(_TableFS(d))
-        seg2 = log["segments"][1]
-        assert log["stats"][seg2]["cols"]["v"] == [None, None, 5]
-        assert log["stats"][seg2]["cols"]["tag"] == [None, None, 5]
-        assert log["stats"][seg2]["cols"]["id"][:2] == [100, 104]
-
-
-def test_hashset_gate_skips_overflowing_dictionary_pass(spark, tmp_path, monkeypatch):
-    # a 40-distinct int column: the old HLL flag (<= 48) launched a
-    # collect_set job whose result was discarded (> 32); the hash-set
-    # gate proves the overflow in pass 1 — NO follow-up pass at all
-    calls = []
-    real = C._dict_sets_arrow
-    monkeypatch.setattr(
-        C, "_dict_sets_arrow",
-        lambda *a, **k: (calls.append(a), real(*a, **k))[1],
-    )
-    real_read = C._read_parquet_at
-    reads = []
-    monkeypatch.setattr(
-        C, "_read_parquet_at",
-        lambda *a, **k: (reads.append(a), real_read(*a, **k))[1],
-    )
-    d = str(tmp_path / "gate40")
-    df = spark.range(2000).select(
-        (F.col("id") % 40).cast("int").alias("k40"),
-        (F.col("id") % 10).cast("int").alias("k10"),
-    )
-    append_snapshot(Frame(df, ()), d, batch_id=0)
-    log = _read_log(_TableFS(d))
-    st = log["stats"][log["segments"][0]]
-    assert len(st["cols"]["k40"]) == 3       # no dictionary (40 > 32)
-    assert st["cols"]["k10"][3] == list(range(10))  # exact dictionary
-    # the second pass ran once for the true candidate set (k10), and
-    # the Spark read-back never ran
-    assert len(calls) == 1 and reads == []
-    (args,) = calls
-    assert [c for _, c in args[5]] == ["k10"]
-
-
-def test_dict_sets_arrow_matches_spark_fallback(spark, tmp_path, monkeypatch):
-    import datetime
-    from decimal import Decimal
-
-    rows = [
-        (i, ["a", "b", None][i % 3],
-         datetime.date(2020, 1, 1 + i % 3),
-         Decimal("1.50") if i % 2 else Decimal("-7.25"),
-         datetime.datetime(2022, 5, 1, i % 4, 0))
-        for i in range(50)
-    ]
-    ddl = "id bigint, s string, dt date, dec decimal(6,2), ts timestamp"
-    df = spark.createDataFrame(rows, schema=ddl)
-    d1 = str(tmp_path / "ds_arrow")
-    append_snapshot(Frame(df, ()), d1, batch_id=0)
-    # same batch with the arrow second pass disabled -> Spark fallback
-    monkeypatch.setattr(C, "_dict_sets_arrow", lambda *a, **k: None)
-    d2 = str(tmp_path / "ds_spark")
-    append_snapshot(Frame(df, ()), d2, batch_id=0)
-    l1, l2 = _read_log(_TableFS(d1)), _read_log(_TableFS(d2))
-    assert l1["stats"][l1["segments"][0]] == l2["stats"][l2["segments"][0]]
-
-
-def test_set_ride_cell_bound(spark, tmp_path, monkeypatch):
-    # ADVICE r15: with_sets must not buffer rows x cols without bound.
-    # Under a tiny cell budget the sets do NOT ride the observation,
-    # yet the manifest still records the identical dictionaries via
-    # the second pass.
-    d1 = str(tmp_path / "cells_ride")
-    d2 = str(tmp_path / "cells_noride")
-    base = spark.range(100).select(
-        F.col("id").cast("long"), (F.col("id") % 4).alias("g"),
-        (F.col("id") * 2).alias("v"),
-    )
-    batch = base.select("id", "g", (F.col("v") + 1).alias("v"))
-    observed = []
-    real_obs = C._stats_observe
-
-    def spy(df, schema, pby, with_sets=False):
-        observed.append(with_sets)
-        return real_obs(df, schema, pby, with_sets=with_sets)
-
-    monkeypatch.setattr(C, "_stats_observe", spy)
-    append_snapshot(Frame(base, ()), d1, batch_id=0)
-    upsert_append_rows(Frame(batch, ()), d1, key=["id"], _rows_bounded=100)
-    assert observed[-1] is True  # within budget: sets ride
-    monkeypatch.setattr(C, "_SET_RIDE_MAX_CELLS", 10)
-    append_snapshot(Frame(base, ()), d2, batch_id=0)
-    upsert_append_rows(Frame(batch, ()), d2, key=["id"], _rows_bounded=100)
-    assert observed[-1] is False  # over budget: two-pass shape
-    l1, l2 = _read_log(_TableFS(d1)), _read_log(_TableFS(d2))
-    s1 = l1["stats"][l1["segments"][-1]]
-    s2 = l2["stats"][l2["segments"][-1]]
-    assert s1 == s2
 
 
 # -- IVF: library-owned index layout + staged-path query source -------------
