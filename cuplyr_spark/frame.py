@@ -246,11 +246,14 @@ def _zip_index(df: DataFrame, idx: str) -> DataFrame:
     )
 
 
-def _qcol(name: str) -> Column:
-    """Column ref by exact name — backticked so dotted names (join
-    suffixes ``v.x``, bind_cols repairs ``a...2``) resolve as top-level
-    columns, not nested-field paths."""
-    return F.col("`" + name.replace("`", "``") + "`")
+def _q(name: str) -> str:
+    """Quoted SQL identifier for an exact column name — backticked so
+    dotted names (join suffixes ``v.x``, bind_cols repairs ``a...2``)
+    resolve as top-level columns, not nested-field paths. Internal
+    projections are built from this text in one DataFrame call
+    (``toDF``, ``selectExpr``, ``F.expr``): in pyspark 4 each ``F.col``
+    or ``Column`` method costs a dozen py4j round trips."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 class Frame:
@@ -319,7 +322,7 @@ class Frame:
         """
         cols = resolve_selection(args, self._df.columns, self._df.schema)
         groups = tuple(g for g in self._groups if g in cols)
-        return Frame(self._df.select(*[_qcol(c) for c in cols]), groups)
+        return Frame(self._df.selectExpr(*[_q(c) for c in cols]), groups)
 
     def set_names(self, *names: str) -> Frame:
         """Replace ALL column names positionally (reference ``names<-``,
@@ -406,9 +409,9 @@ class Frame:
         if limit and limit > 0:
             aggs = []
             for c in cols:
-                aggs.append(F.count_distinct(_qcol(c)).alias(f"__n_{c}"))
+                aggs.append(F.expr(f"count(DISTINCT {_q(c)}) AS {_q('__n_' + c)}"))
                 aggs.append(
-                    F.max(_qcol(c).isNull().cast("int")).alias(f"__null_{c}")
+                    F.expr(f"max(CAST({_q(c)} IS NULL AS INT)) AS {_q('__null_' + c)}")
                 )
             row = self._df.agg(*aggs).first()
             cells = 1
@@ -425,19 +428,15 @@ class Frame:
                 )
         grid = None
         for c in cols:
-            d = self._df.select(_qcol(c)).distinct()
+            d = self._df.selectExpr(_q(c)).distinct()
             grid = d if grid is None else grid.crossJoin(d)
         # Null-safe key matching: tidyr::complete keeps NA as a level, so
         # a source row with NULL in a completed key must join back to the
         # grid's NULL row rather than silently vanish (same na_matches
         # default as _join). Rename the right side to avoid ambiguity.
         tag = "__cuplyr_complete__"
-        right = self._df
-        for c in cols:
-            right = right.withColumnRenamed(c, tag + c)
-        cond = functools.reduce(
-            operator.and_, [grid[c].eqNullSafe(right[tag + c]) for c in cols]
-        )
+        right = self._df.withColumnsRenamed({c: tag + c for c in cols})
+        cond = F.expr(" AND ".join(f"{_q(c)} <=> {_q(tag + c)}" for c in cols))
         out = grid.join(right, on=cond, how="left").drop(*[tag + c for c in cols])
         frame = self._with(out)
         return frame.replace_na(**fill) if fill else frame
@@ -466,7 +465,7 @@ class Frame:
         else:
             i = 0
         new_order = existing[:i] + moved + existing[i:]
-        return self._with(self._df.select(*[_qcol(c) for c in new_order]))
+        return self._with(self._df.selectExpr(*[_q(c) for c in new_order]))
 
     # -- filter (§2.3) -------------------------------------------------
 
@@ -516,7 +515,7 @@ class Frame:
                 # group through one task, while the agg is partial+final
                 # and the per-group result is tiny (broadcast-joinable).
                 agg_row = (
-                    df.groupBy(*[_qcol(g) for g in self._groups]).agg(
+                    df.groupBy(*[_q(g) for g in self._groups]).agg(
                         value.resolve(df).alias(name)
                     )
                     if self._groups
@@ -542,7 +541,7 @@ class Frame:
         """mutate + keep only the results (and grouping columns)."""
         out = self.mutate(**exprs)
         keep = [c for c in self._groups if c not in exprs] + list(exprs)
-        return Frame(out._df.select(*[_qcol(c) for c in keep]), self._groups)
+        return Frame(out._df.selectExpr(*[_q(c) for c in keep]), self._groups)
 
     # -- arrange (§2.5) ------------------------------------------------
 
@@ -555,11 +554,19 @@ class Frame:
         reflects current partition order. ``by_group`` prepends the
         grouping columns to the sort keys (``R/arrange.R:102-140``).
         """
+        def order(k, descending: bool) -> Column:
+            # column names sort by their quoted name text (one JVM call);
+            # other strings are expressions, Columns pass through
+            if isinstance(k, str) and k.isidentifier():
+                return (F.desc_nulls_first if descending else F.asc_nulls_last)(_q(k))
+            c = _as_column(k)
+            return c.desc_nulls_first() if descending else c.asc_nulls_last()
+
         sort_cols: list[Column] = []
         if by_group:
             seen_keys = {k if isinstance(k, str) else None for k in keys}
             sort_cols.extend(
-                F.col(g).asc_nulls_last() for g in self._groups if g not in seen_keys
+                F.asc_nulls_last(_q(g)) for g in self._groups if g not in seen_keys
             )
         for k in keys:
             # "-col" string is the reference's unary-minus descending
@@ -567,10 +574,9 @@ class Frame:
             if isinstance(k, str) and k.startswith("-") and k[1:].isidentifier():
                 k = Desc(k[1:])
             if isinstance(k, Desc):
-                c = _as_column(k.col)
-                sort_cols.append(c.desc_nulls_first())
+                sort_cols.append(order(k.col, True))
             else:
-                sort_cols.append(_as_column(k).asc_nulls_last())
+                sort_cols.append(order(k, False))
         df = self._df
         if stable:
             idx = "__cuplyr_row_idx__"
@@ -640,7 +646,7 @@ class Frame:
                 probe = getattr(self, "_gm_probe", None)
                 if probe is None:
                     probe = (
-                        self._df.groupBy(*[_qcol(g) for g in self._groups])
+                        self._df.groupBy(*[_q(g) for g in self._groups])
                         .count()
                         .agg(F.max("count").alias("mx"), F.sum("count").alias("tot"))
                         .collect()[0]
@@ -658,7 +664,7 @@ class Frame:
                             "or pass max_group_bytes=0 to silence.",
                             stacklevel=2,
                         )
-        out = self._df.groupBy(*[_qcol(g) for g in self._groups]).applyInPandas(
+        out = self._df.groupBy(*[_q(g) for g in self._groups]).applyInPandas(
             fn, schema
         )
         return Frame(out, self._groups)
@@ -688,7 +694,7 @@ class Frame:
             packed = self._packed_int_groupby(cols)
             if packed is not None:
                 return packed
-            gcols = [_qcol(g) for g in self._groups]
+            gcols = [_q(g) for g in self._groups]
             base = {
                 "cube": self._df.cube,
                 "rollup": self._df.rollup,
@@ -744,38 +750,36 @@ class Frame:
             los.append(off)
             off += w
         los.reverse()
-        key = F.lit(0).cast("long")
+        # the key and its restore are SQL text: one JVM call each
+        key = "CAST(0 AS BIGINT)"
         null_bit = 0
         null_pos: list[int | None] = []
         for g, w, lo, isnull in zip(self._groups, widths, los, nullable):
-            val = F.coalesce(F.col(g).cast("long"), F.lit(0)).bitwiseAND(
-                F.lit((1 << w) - 1)
-            )
-            key = key.bitwiseOR(F.shiftleft(val, lo) if lo else val)
+            val = f"(coalesce(CAST({_q(g)} AS BIGINT), 0) & {(1 << w) - 1})"
+            key = f"({key} | {f'shiftleft({val}, {lo})' if lo else val})"
             if isnull:
-                key = key.bitwiseOR(
-                    F.shiftleft(F.col(g).isNull().cast("long"), null_bit)
-                    if null_bit
-                    else F.col(g).isNull().cast("long")
-                )
+                bit = f"CAST({_q(g)} IS NULL AS BIGINT)"
+                key = f"({key} | {f'shiftleft({bit}, {null_bit})' if null_bit else bit})"
                 null_pos.append(null_bit)
                 null_bit += 1
             else:
                 null_pos.append(None)
-        agged = self._df.groupBy(key.alias("__cuplyr_pk__")).agg(*agg_cols)
+        agged = self._df.groupBy(F.expr(f"{key} AS __cuplyr_pk__")).agg(*agg_cols)
         agg_names = [c for c in agged.columns if c != "__cuplyr_pk__"]
-        pk = F.col("__cuplyr_pk__")
         restored = []
         for g, w, lo, npos in zip(self._groups, widths, los, null_pos):
             # sign-extending restore of the w-bit field at offset lo
-            val = F.shiftright(F.shiftleft(pk, 64 - lo - w), 64 - w).cast(
-                fields[g].dataType
+            val = (
+                f"CAST(shiftright(shiftleft(__cuplyr_pk__, {64 - lo - w}), {64 - w})"
+                f" AS {fields[g].dataType.simpleString()})"
             )
             if npos is not None:
-                is_null = F.shiftright(pk, npos).bitwiseAND(F.lit(1)) == 1
-                val = F.when(is_null, F.lit(None)).otherwise(val)
-            restored.append(val.alias(g))
-        return Frame(agged.select(*restored, *agg_names), ())
+                val = (
+                    f"CASE WHEN (shiftright(__cuplyr_pk__, {npos}) & 1) = 1"
+                    f" THEN NULL ELSE {val} END"
+                )
+            restored.append(f"{val} AS {_q(g)}")
+        return Frame(agged.selectExpr(*restored, *[_q(c) for c in agg_names]), ())
 
     summarize = summarise
 
@@ -783,11 +787,11 @@ class Frame:
         """dplyr ``count()``: group sizes."""
         groups = list(cols) or list(self._groups)
         if groups:
-            out = self._df.groupBy(*[_qcol(g) for g in groups]).agg(F.count(F.lit(1)).alias(name))
+            out = self._df.groupBy(*[_q(g) for g in groups]).agg(F.expr(f"count(1) AS {_q(name)}"))
         else:
-            out = self._df.agg(F.count(F.lit(1)).alias(name))
+            out = self._df.agg(F.expr(f"count(1) AS {_q(name)}"))
         if sort:
-            out = out.orderBy(F.col(name).desc_nulls_first())
+            out = out.orderBy(F.desc_nulls_first(_q(name)))
         return Frame(out, ())
 
     def tally(self, name: str = "n", sort: bool = False) -> Frame:
@@ -800,14 +804,16 @@ class Frame:
         groups = list(cols) or list(self._groups)
         if not groups:
             raise ValueError("add_count() needs columns or group_by() keys")
-        w = Window.partitionBy(*[_qcol(g) for g in groups])
-        return self._with(self._df.withColumn(name, F.count(F.lit(1)).over(w)))
+        keys = ", ".join(_q(g) for g in groups)
+        return self._with(
+            self._df.withColumn(name, F.expr(f"count(1) OVER (PARTITION BY {keys})"))
+        )
 
     def n_groups(self) -> int:
         """dplyr n_groups(): distinct group-key combinations (count job)."""
         if not self._groups:
             return 1
-        return self._df.select(*[_qcol(g) for g in self._groups]).distinct().count()
+        return self._df.selectExpr(*[_q(g) for g in self._groups]).distinct().count()
 
     def slice_sample(
         self,
@@ -828,7 +834,7 @@ class Frame:
         """Distinct rows (Spark-native; absent from the reference but
         free here — SURVEY §2.8)."""
         if cols:
-            return Frame(self._df.select(*[_qcol(c) for c in cols]).distinct(), ())
+            return Frame(self._df.selectExpr(*[_q(c) for c in cols]).distinct(), ())
         return self._with(self._df.distinct())
 
     # -- joins (§2.7) ----------------------------------------------------
@@ -900,7 +906,8 @@ class Frame:
 
     def _rows_merge(self, y: Frame, by, take_y) -> Frame:
         """Shared matched-row merge: left join on keys, per-column
-        choice between x's and y's value via ``take_y(xcol, ycol)``."""
+        choice between x's and y's value via ``take_y(xcol, ycol)``,
+        which maps the two quoted column names to SQL text."""
         keys, payload = self._rows_prep(y, by)
         if not payload:
             raise ValueError(
@@ -908,23 +915,20 @@ class Frame:
                 f"columns (keys={keys}) — nothing to merge. Pass by= "
                 "naming the key column(s) explicitly."
             )
-        ydf = y._df.select(
-            *[_qcol(k) for k in keys],
-            F.lit(True).alias("__m"),
-            *[_qcol(c).alias(f"__y_{c}") for c in payload],
+        ydf = y._df.selectExpr(
+            *[_q(k) for k in keys],
+            "true AS __m",
+            *[f"{_q(c)} AS {_q('__y_' + c)}" for c in payload],
         )
         joined = self._df.join(ydf, on=keys, how="left")
         cols = []
         for c in self._df.columns:
             if c in payload:
-                cols.append(
-                    F.when(F.col("__m"), take_y(_qcol(c), F.col(f"__y_{c}")))
-                    .otherwise(_qcol(c))
-                    .alias(c)
-                )
+                x, yv = _q(c), _q("__y_" + c)
+                cols.append(f"CASE WHEN __m THEN {take_y(x, yv)} ELSE {x} END AS {x}")
             else:
-                cols.append(_qcol(c))
-        return Frame(joined.select(*cols), self._groups)
+                cols.append(_q(c))
+        return Frame(joined.selectExpr(*cols), self._groups)
 
     def rows_update(self, y: Frame, by=None) -> Frame:
         """dplyr ``rows_update`` (unmatched="ignore"): matched x rows
@@ -934,7 +938,7 @@ class Frame:
     def rows_patch(self, y: Frame, by=None) -> Frame:
         """dplyr ``rows_patch``: like update but only fills x's NULLs —
         matched rows take ``coalesce(x, y)``."""
-        return self._rows_merge(y, by, lambda xc, yc: F.coalesce(xc, yc))
+        return self._rows_merge(y, by, lambda xc, yc: f"coalesce({xc}, {yc})")
 
     def rows_upsert(self, y: Frame, by=None) -> Frame:
         """dplyr ``rows_upsert``: update matched keys, insert new ones
@@ -974,35 +978,34 @@ class Frame:
                 "suffix; here an explicit name= avoids two same-named "
                 "columns with ambiguous resolution)"
             )
+        # right keys get the join prefix so the condition can name both
+        # sides by text
+        rp = "__cuplyr_r__"
+        fields = ", ".join(_q(c) for c in payload_cols)
         packed = (
-            other._df.groupBy(*[_qcol(k) for k in rkeys])
-            .agg(
-                F.sort_array(
-                    F.collect_list(F.struct(*[_qcol(c) for c in payload_cols]))
-                ).alias(name)
-            )
+            other._df.groupBy(*[_q(k) for k in rkeys])
+            .agg(F.expr(f"sort_array(collect_list(struct({fields}))) AS {_q(name)}"))
+            .toDF(*[rp + k for k in rkeys], name)
         )
-        cond = [self._df[lk] == packed[rk] for lk, rk in keys.items()]
+        cond = F.expr(
+            " AND ".join(f"{_q(lk)} = {_q(rp + rk)}" for lk, rk in keys.items())
+        )
         joined = self._df.join(packed, cond, "left")
         empty = F.array().cast(joined.schema[name].dataType)
         out = joined.select(
-            *[self._df[c] for c in self._df.columns],
-            F.coalesce(packed[name], empty).alias(name),
+            *[_q(c) for c in self._df.columns],
+            F.coalesce(F.col(_q(name)), empty).alias(name),
         )
         return Frame(out, self._groups)
 
     def cross_join(self, other: Frame, suffix=(".x", ".y")) -> Frame:
-        lp, rp = "__cuplyr_l__", "__cuplyr_r__"
-        ldf = self._df.select([_qcol(c).alias(lp + c) for c in self._df.columns])
-        rdf = other._df.select([_qcol(c).alias(rp + c) for c in other._df.columns])
-        joined = ldf.crossJoin(rdf)
-        out_cols = []
-        conflicts = set(self._df.columns) & set(other._df.columns)
-        for c in self._df.columns:
-            out_cols.append(_qcol(lp + c).alias(c + suffix[0] if c in conflicts else c))
-        for c in other._df.columns:
-            out_cols.append(_qcol(rp + c).alias(c + suffix[1] if c in conflicts else c))
-        return Frame(joined.select(*out_cols), ())
+        lcols, rcols = self._df.columns, other._df.columns
+        conflicts = set(lcols) & set(rcols)
+        names = [c + suffix[0] if c in conflicts else c for c in lcols] + [
+            c + suffix[1] if c in conflicts else c for c in rcols
+        ]
+        # the output is left columns then right columns: rename by position
+        return Frame(self._df.crossJoin(other._df).toDF(*names), ())
 
     def _join(self, other: Frame, by, how: str, suffix, na_matches: str, keep: bool) -> Frame:
         """Shared mutating/filtering join implementation.
@@ -1021,50 +1024,51 @@ class Frame:
 
         Implementation: both sides are prefixed to globally unique
         names before the join, which makes self-joins and repeated
-        column names unambiguous; the prefix projections are zero-cost
-        (Catalyst collapses them into the scan).
+        column names unambiguous. The prefix projections are free at
+        execution (Catalyst collapses them into the scan) but not to
+        build on the driver, so they, the condition and the output list
+        are each one DataFrame call on quoted name text.
         """
         by_map = self._resolve_by(other, by)
         self._validate_key_types(other, by_map)
         lp, rp = "__cuplyr_l__", "__cuplyr_r__"
-        ldf = self._df.select([_qcol(c).alias(lp + c) for c in self._df.columns])
-        rdf = other._df.select([_qcol(c).alias(rp + c) for c in other._df.columns])
-
-        def key_eq(lk: str, rk: str) -> Column:
-            l, r = _qcol(lp + lk), _qcol(rp + rk)
-            return l.eqNullSafe(r) if na_matches == "na" else l == r
-
-        cond = functools.reduce(operator.and_, [key_eq(lk, rk) for lk, rk in by_map.items()])
+        lcols, rcols = self._df.columns, other._df.columns
+        ldf = self._df.toDF(*[lp + c for c in lcols])
+        rdf = other._df.toDF(*[rp + c for c in rcols])
+        eq = " <=> " if na_matches == "na" else " = "
+        cond = F.expr(
+            " AND ".join(_q(lp + lk) + eq + _q(rp + rk) for lk, rk in by_map.items())
+        )
         joined = ldf.join(rdf, cond, how)
 
         if how in ("left_semi", "left_anti"):
-            out = joined.select([_qcol(lp + c).alias(c) for c in self._df.columns])
-            return Frame(out, self._groups)
+            return Frame(joined.toDF(*lcols), self._groups)
 
         left_keys = set(by_map.keys())
         right_keys = set(by_map.values())
         if keep:
-            conflicts = set(self._df.columns) & set(other._df.columns)
+            conflicts = set(lcols) & set(rcols)
         else:
-            conflicts = (set(self._df.columns) & set(other._df.columns)) - {
+            conflicts = (set(lcols) & set(rcols)) - {
                 c for c in by_map if c == by_map[c]
             }
-        out_cols: list[Column] = []
-        for c in self._df.columns:
+        out_cols: list[str] = []
+        for c in lcols:
             if not keep and c in left_keys:
-                rk = by_map[c]
                 # Unmatched right rows (right/full join) carry the key
                 # value only on the right side.
-                out_cols.append(F.coalesce(_qcol(lp + c), _qcol(rp + rk)).alias(c))
+                out_cols.append(
+                    f"coalesce({_q(lp + c)}, {_q(rp + by_map[c])}) AS {_q(c)}"
+                )
             else:
                 name = c + suffix[0] if c in conflicts else c
-                out_cols.append(_qcol(lp + c).alias(name))
-        for c in other._df.columns:
+                out_cols.append(f"{_q(lp + c)} AS {_q(name)}")
+        for c in rcols:
             if not keep and c in right_keys:
                 continue
             name = c + suffix[1] if c in conflicts else c
-            out_cols.append(_qcol(rp + c).alias(name))
-        return Frame(joined.select(*out_cols), self._groups)
+            out_cols.append(f"{_q(rp + c)} AS {_q(name)}")
+        return Frame(joined.selectExpr(*out_cols), self._groups)
 
     def _validate_key_types(self, other: Frame, by_map: dict[str, str]) -> None:
         """Reference ``validate_key_types`` (``R/join.R:45-68``):
@@ -1123,7 +1127,7 @@ class Frame:
         for i, f in enumerate(frames):
             have = set(f._df.columns)
             cols = [
-                (_qcol(name).cast(dtype) if name in have else F.lit(None).cast(dtype)).alias(name)
+                (F.col(_q(name)).cast(dtype) if name in have else F.lit(None).cast(dtype)).alias(name)
                 for name, dtype in target
             ]
             if id is not None:
@@ -1189,14 +1193,14 @@ class Frame:
 
     def unite(self, col: str, *cols: str, sep: str = "_", remove: bool = True) -> Frame:
         """tidyr unite: concatenate columns into one string column."""
-        out = self._df.withColumn(col, F.concat_ws(sep, *[_qcol(c) for c in cols]))
+        out = self._df.withColumn(col, F.concat_ws(sep, *[_q(c) for c in cols]))
         if remove:
             out = out.drop(*[c for c in cols if c != col])
         return self._with(out)
 
     def separate(self, col: str, into: list[str], sep: str = "_", remove: bool = True) -> Frame:
         """tidyr separate: split one string column into several."""
-        parts = F.split(_qcol(col), sep)
+        parts = F.split(_q(col), sep)
         out = self._df
         for i, name in enumerate(into):
             out = out.withColumn(name, F.element_at(parts, i + 1))
@@ -1223,7 +1227,7 @@ class Frame:
         if not cols:
             raise ValueError("separate_rows needs at least one column")
         out = self._df
-        split = {c: F.split(_qcol(c), sep) for c in cols}
+        split = {c: F.split(_q(c), sep) for c in cols}
         if len(cols) == 1:
             c = cols[0]
             out = out.withColumn(c, F.explode_outer(split[c]))
@@ -1242,9 +1246,9 @@ class Frame:
             num_re = r"^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$"
             probes = [
                 F.max(
-                    F.when(_qcol(c).isNull(), F.lit(0))
-                    .when(F.trim(_qcol(c)).rlike(int_re), F.lit(0))
-                    .when(F.trim(_qcol(c)).rlike(num_re), F.lit(1))
+                    F.when(F.col(_q(c)).isNull(), F.lit(0))
+                    .when(F.trim(_q(c)).rlike(int_re), F.lit(0))
+                    .when(F.trim(_q(c)).rlike(num_re), F.lit(1))
                     .otherwise(F.lit(2))
                 ).alias(f"__t{i}")
                 for i, c in enumerate(cols)
@@ -1253,9 +1257,9 @@ class Frame:
             for i, c in enumerate(cols):
                 k = kinds[i]
                 if k is None or k == 0:
-                    out = out.withColumn(c, _qcol(c).cast("long"))
+                    out = out.withColumn(c, F.col(_q(c)).cast("long"))
                 elif k == 1:
-                    out = out.withColumn(c, _qcol(c).cast("double"))
+                    out = out.withColumn(c, F.col(_q(c)).cast("double"))
         return self._with(out)
 
     def uncount(self, weights, *, id_col: str | None = None) -> Frame:
@@ -1281,13 +1285,13 @@ class Frame:
         forward: NULLs take the most recent non-NULL value in
         ``order_by`` order (per partition key). One keyed window."""
         w = (
-            Window.partitionBy(*[_qcol(p) for p in (partition_by or [])])
-            .orderBy(_qcol(order_by).asc())
+            Window.partitionBy(*[_q(p) for p in (partition_by or [])])
+            .orderBy(F.asc(_q(order_by)))
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
         out = self._df
         for c in cols:
-            out = out.withColumn(c, F.last(_qcol(c), ignorenulls=True).over(w))
+            out = out.withColumn(c, F.last(_q(c), ignorenulls=True).over(w))
         return self._with(out)
 
     def drop_na(self, *cols: str) -> Frame:
@@ -1295,7 +1299,7 @@ class Frame:
         (all columns if none given). Pure filter — pushes down to the
         scan as IsNotNull."""
         targets = list(cols) or self.columns
-        cond = functools.reduce(operator.and_, [_qcol(c).isNotNull() for c in targets])
+        cond = " AND ".join(f"{_q(c)} IS NOT NULL" for c in targets)
         return self._with(self._df.filter(cond))
 
     def replace_na(self, **repl: Any) -> Frame:
@@ -1303,12 +1307,12 @@ class Frame:
         (``replace_na(x=0, name="unknown")``). Narrow projection."""
         out = self._df
         for c, v in repl.items():
-            out = out.withColumn(c, F.coalesce(_qcol(c), F.lit(v)))
+            out = out.withColumn(c, F.coalesce(F.col(_q(c)), F.lit(v)))
         return self._with(out)
 
     def pull(self, col: str) -> list:
         """dplyr pull: one column to the driver as a Python list."""
-        return [r[0] for r in self._df.select(_qcol(col)).collect()]
+        return [r[0] for r in self._df.selectExpr(_q(col)).collect()]
 
     def nest(self, name: str = "data", cols: list[str] | None = None) -> Frame:
         """tidyr nest: collapse each group's non-group rows into one
@@ -1320,17 +1324,17 @@ class Frame:
         if not self._groups:
             raise ValueError("nest() requires group_by() keys")
         value_cols = cols or [c for c in self.columns if c not in self._groups]
-        packed = F.sort_array(F.collect_list(F.struct(*[_qcol(c) for c in value_cols])))
-        out = self._df.groupBy(*[_qcol(g) for g in self._groups]).agg(packed.alias(name))
+        packed = F.sort_array(F.collect_list(F.struct(*[_q(c) for c in value_cols])))
+        out = self._df.groupBy(*[_q(g) for g in self._groups]).agg(packed.alias(name))
         return Frame(out, ())
 
     def unnest(self, col: str) -> Frame:
         """Inverse of nest: explode the array and expand struct fields
         back to top-level columns. Narrow (no shuffle)."""
         tmp = "__cuplyr_unnest__"
-        df = self._df.withColumn(tmp, F.explode(_qcol(col))).drop(col)
-        keep = [_qcol(c) for c in df.columns if c != tmp]
-        out = df.select(*keep, F.col(tmp + ".*"))
+        df = self._df.withColumn(tmp, F.explode(_q(col))).drop(col)
+        keep = [_q(c) for c in df.columns if c != tmp]
+        out = df.selectExpr(*keep, tmp + ".*")
         return self._with(out, tuple(g for g in self._groups if g != col))
 
     # -- reshape (tidyr-adjacent; Spark-native pivot) -----------------------
@@ -1357,7 +1361,7 @@ class Frame:
             agg_col = agg.resolve(self._df)
         else:
             agg_col = agg
-        grouped = self._df.groupBy(*[_qcol(c) for c in ids])
+        grouped = self._df.groupBy(*[_q(c) for c in ids])
         pivoted = grouped.pivot(names_from, values) if values else grouped.pivot(names_from)
         return Frame(pivoted.agg(agg_col), ())
 
@@ -1456,18 +1460,15 @@ class Frame:
         }
         aggs = []
         for i, c in enumerate(names):
-            qc = _qcol(c)
-            aggs.append(
-                F.count(F.when(qc.isNull(), F.lit(1))).alias(f"__nn_{i}")
-            )
-            aggs.append(F.count_distinct(qc).alias(f"__nd_{i}"))
-            if c in numeric:
-                aggs.append(F.min(qc).cast("double").alias(f"__mn_{i}"))
-                aggs.append(F.max(qc).cast("double").alias(f"__mx_{i}"))
-            else:
-                aggs.append(F.lit(None).cast("double").alias(f"__mn_{i}"))
-                aggs.append(F.lit(None).cast("double").alias(f"__mx_{i}"))
-        row = self._df.agg(*aggs)
+            q = _q(c)
+            mn, mx = (f"min({q})", f"max({q})") if c in numeric else ("NULL", "NULL")
+            aggs += [
+                f"count(CASE WHEN {q} IS NULL THEN 1 END) AS __nn_{i}",
+                f"count(DISTINCT {q}) AS __nd_{i}",
+                f"CAST({mn} AS DOUBLE) AS __mn_{i}",
+                f"CAST({mx} AS DOUBLE) AS __mx_{i}",
+            ]
+        row = self._df.agg(*[F.expr(a) for a in aggs])
         parts = []
         for i, c in enumerate(names):
             lit = c.replace("\\", "\\\\").replace("'", "\\'")

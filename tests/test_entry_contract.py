@@ -37,3 +37,25 @@ def test_query_runs_at_sf0001(spark, name):
     df = em.queries()[name](spark, SF)
     assert df.columns, f"{name}: empty schema"
     df.limit(5).collect()  # end-to-end execution, bounded output
+
+
+def test_bench_cache_hit_skips_the_read(spark, monkeypatch):
+    """Cached bench mode (CUPLYR_BENCH_CACHED) reads a table's parquet
+    on a cache miss only: a hit returns the cached frame without
+    listing or opening the file, and still pins the session's
+    arithmetic and time zone settings."""
+    monkeypatch.setenv("CUPLYR_BENCH_CACHED", "1")
+    monkeypatch.setattr(em, "_TABLE_CACHE", {})
+    first = em._t(spark, SF, "nation")
+    try:
+
+        def no_read(*args, **kwargs):
+            raise AssertionError("read_parquet called on a cache hit")
+
+        monkeypatch.setattr(em, "read_parquet", no_read)
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        assert em._t(spark, SF, "nation") is first
+        assert spark.conf.get("spark.sql.ansi.enabled") == "false"
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    finally:
+        first.df.unpersist()

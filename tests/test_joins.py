@@ -9,11 +9,13 @@ divergence SURVEY §7).
 """
 
 import os
+from collections import Counter
 
 import pandas as pd
 import pytest
+from pyspark.sql import types as T
 
-from cuplyr_spark import from_pandas, read_parquet
+from cuplyr_spark import Frame, from_pandas, read_parquet
 from tests.helpers import assert_frame_matches, oracle
 
 
@@ -202,3 +204,125 @@ def test_broadcast_size_guard(customer):
         assert _has_hint(customer.broadcast())
         # check disabled — silent, hint applied
         assert _has_hint(customer.broadcast(max_bytes=0))
+
+
+# -- quoting and key semantics --------------------------------------------
+# Expected rows are written out by hand (dplyr semantics), compared as
+# multisets; column order is compared exactly.
+
+
+def _frame(spark, names, types, rows):
+    schema = T.StructType([T.StructField(n, t) for n, t in zip(names, types)])
+    return Frame(spark.createDataFrame(rows, schema))
+
+
+def _rows(frame):
+    return Counter(tuple(r) for r in frame.collect_rows())
+
+
+@pytest.fixture(scope="module")
+def odd_names(spark):
+    """Key and value names with a dot, a backtick, a space and mixed
+    case; ``a b`` is a non-key name on both sides."""
+    i, s = T.IntegerType(), T.StringType()
+    left = _frame(
+        spark, ["key.id", "Val`x", "a b", "CamelCase"], [i, s, i, i],
+        [(1, "p", 10, 100), (2, "q", 20, 200), (None, "n", 30, 300)],
+    )
+    right = _frame(
+        spark, ["key.id", "a b", "R.Only"], [i, i, s],
+        [(1, 11, "x"), (1, 12, "y"), (None, 13, "z"), (5, 15, "w")],
+    )
+    return left, right
+
+
+def test_odd_names_mutating_joins(odd_names):
+    left, right = odd_names
+    cols = ["key.id", "Val`x", "a b.x", "CamelCase", "a b.y", "R.Only"]
+    matched = [
+        (1, "p", 10, 100, 11, "x"), (1, "p", 10, 100, 12, "y"),
+        (None, "n", 30, 300, 13, "z"),  # NULL keys match by default
+    ]
+    left_only = [(2, "q", 20, 200, None, None)]
+    right_only = [(5, None, None, None, 15, "w")]  # key from the right side
+    for how, want in {
+        "inner": matched,
+        "left": matched + left_only,
+        "right": matched + right_only,
+        "full": matched + left_only + right_only,
+    }.items():
+        out = getattr(left, f"{how}_join")(right, by="key.id")
+        assert out.columns == cols, how
+        assert _rows(out) == Counter(want), how
+
+
+def test_odd_names_filtering_joins(odd_names):
+    left, right = odd_names
+    semi = left.semi_join(right, by="key.id")
+    anti = left.anti_join(right, by="key.id")
+    assert semi.columns == anti.columns == left.columns
+    assert _rows(semi) == Counter([(1, "p", 10, 100), (None, "n", 30, 300)])
+    assert _rows(anti) == Counter([(2, "q", 20, 200)])
+    assert semi.select("Val`x", "CamelCase").columns == ["Val`x", "CamelCase"]
+
+
+def test_suffixed_output_rejoined_on_itself(spark):
+    i = T.IntegerType()
+    l = _frame(spark, ["k", "v"], [i, i], [(1, 10), (2, 20)])
+    r = _frame(spark, ["k", "v"], [i, i], [(1, 11), (2, 22)])
+    out = l.inner_join(r, by="k")
+    assert out.columns == ["k", "v.x", "v.y"]
+    again = out.inner_join(out, by="v.x")
+    assert again.columns == ["k.x", "v.x", "v.y.x", "k.y", "v.y.y"]
+    assert _rows(again) == Counter([(1, 10, 11, 1, 11), (2, 20, 22, 2, 22)])
+    assert _rows(again.select("v.x")) == Counter([(10,), (20,)])
+
+
+def test_na_matches_never_null_keys_both_sides(spark):
+    i = T.IntegerType()
+    l = _frame(spark, ["k", "a"], [i, i], [(1, 10), (None, 20)])
+    r = _frame(spark, ["k", "b"], [i, i], [(1, 100), (None, 200)])
+    want = {
+        "inner": [(1, 10, 100)],
+        "left": [(1, 10, 100), (None, 20, None)],
+        "full": [(1, 10, 100), (None, 20, None), (None, None, 200)],
+    }
+    for how, rows in want.items():
+        out = getattr(l, f"{how}_join")(r, by="k", na_matches="never")
+        assert out.columns == ["k", "a", "b"], how
+        assert _rows(out) == Counter(rows), how
+
+
+def test_right_full_renamed_keys_take_right_key(spark):
+    i = T.IntegerType()
+    l = _frame(spark, ["lk", "a"], [i, i], [(1, 10), (2, 20)])
+    r = _frame(spark, ["rk", "b"], [i, i], [(2, 200), (3, 300)])
+    right = l.right_join(r, by={"lk": "rk"})
+    assert right.columns == ["lk", "a", "b"]
+    assert _rows(right) == Counter([(2, 20, 200), (3, None, 300)])
+    full = l.full_join(r, by={"lk": "rk"})
+    assert _rows(full) == Counter([(1, 10, None), (2, 20, 200), (3, None, 300)])
+
+
+def test_keep_true_conflicting_non_keys(spark):
+    i = T.IntegerType()
+    l = _frame(spark, ["k", "v"], [i, i], [(1, 10), (2, 20)])
+    r = _frame(spark, ["k", "v", "w"], [i, i, i], [(1, 11, 7), (3, 33, 9)])
+    same = l.left_join(r, by="k", keep=True)
+    assert same.columns == ["k.x", "v.x", "k.y", "v.y", "w"]
+    assert _rows(same) == Counter([(1, 10, 1, 11, 7), (2, 20, None, None, None)])
+    renamed = l.rename(lk="k").inner_join(r, by={"lk": "k"}, keep=True)
+    assert renamed.columns == ["lk", "v.x", "k", "v.y", "w"]
+    assert _rows(renamed) == Counter([(1, 10, 1, 11, 7)])
+
+
+def test_cross_join_conflicting_names(spark):
+    i = T.IntegerType()
+    l = _frame(spark, ["k", "a.b"], [i, i], [(1, 10), (2, 20)])
+    r = _frame(spark, ["k", "c"], [i, i], [(7, 70)])
+    out = l.cross_join(r)
+    assert out.columns == ["k.x", "a.b", "k.y", "c"]
+    assert _rows(out) == Counter([(1, 10, 7, 70), (2, 20, 7, 70)])
+    self_cross = l.cross_join(l, suffix=("_l", "_r"))
+    assert self_cross.columns == ["k_l", "a.b_l", "k_r", "a.b_r"]
+    assert len(self_cross.collect_rows()) == 4
