@@ -111,10 +111,16 @@ class ConcurrentWriteError(RuntimeError):
     detected the conflict and published nothing (at worst it left an
     orphan data directory that vacuum reclaims). Recovery is Delta's:
     re-read the table and re-run the operation against the new base.
-    Blind appends retry internally; read-modify-write operations
-    (``upsert_snapshot``, ``compact_snapshot``,
-    ``compact_append_snapshot``) surface this because only the caller
-    can recompute the merge."""
+    Append-log mutations whose work stays valid on top of a concurrent
+    append retry internally (``_commit``): ``append_snapshot``, and —
+    rebasing over appends, raising on a concurrent fold or row-level
+    write of a segment they touched — ``delete_append_rows``,
+    ``update_append_rows``, ``upsert_append_rows`` and
+    ``merge_append_dvs``. Operations whose result was computed from a
+    superseded table surface this: ``upsert_snapshot`` and
+    ``compact_snapshot`` on copy-on-write tables,
+    ``compact_append_snapshot`` and ``restore_append_snapshot`` on
+    append tables."""
 
 
 # Conditional-put backends for the exclusive-create commit primitive,
@@ -600,11 +606,11 @@ def _advance_ptr(
     commit evidence already proves ``n`` visible to readers
     (``committed() >= n`` — readers take ``max(pointer, floor)``, so
     a lagging pointer cannot hide the commit), the publish IS durable
-    and we return; raising here would make ``append_snapshot``'s
-    rebase loop re-append a segment that already committed (duplicate
-    rows). Only without such evidence does the failure surface as
-    :class:`ConcurrentWriteError` — a publish must never report
-    success while readers may not see it."""
+    and we return; raising here would make the rebase loop
+    (:func:`_commit`) re-append a segment that already committed
+    (duplicate rows). Only without such evidence does the failure
+    surface as :class:`ConcurrentWriteError` — a publish must never
+    report success while readers may not see it."""
     target = n
     for _ in range(8):
         if committed is not None:
@@ -1585,6 +1591,18 @@ def _read_log(fs: _TableFS, version: int | None = None) -> dict | None:
     return _reconstruct_log(fs, version)
 
 
+def _require_log(
+    fs: _TableFS, table_dir: str, version: int | None = None
+) -> dict:
+    """:func:`_read_log` for operations that need a published table."""
+    log = _read_log(fs, version)
+    if log is None:
+        raise FileNotFoundError(
+            f"no published append log at {table_dir!r} (missing {_LOG_PTR})"
+        )
+    return log
+
+
 def _iter_log_states(fs: _TableFS, lo: int, hi: int):
     """Yield ``(k, full-state)`` for versions ``lo..hi`` ascending,
     reconstructing ``lo`` once and rolling deltas forward — O(window)
@@ -1618,11 +1636,9 @@ def append_version_as_of(
     elif isinstance(as_of, datetime.datetime):
         as_of = as_of.timestamp()
     fs = _TableFS(table_dir, spark)
-    head = _log_head_version(fs)
-    if head == 0:
-        raise FileNotFoundError(
-            f"no published append log at {table_dir!r} (missing {_LOG_PTR})"
-        )
+    # nothing published: _require_log raises (or reads a first commit
+    # that landed in between)
+    head = _log_head_version(fs) or _require_log(fs, table_dir)["version"]
     oldest = None
     for v in range(head, 0, -1):
         try:
@@ -1673,10 +1689,10 @@ def _write_log(fs: _TableFS, log: dict, prev: dict | None = None) -> int:
     writers racing to publish version n get exactly one winner, the
     concurrency model of the Delta log itself — then the monotonic
     ``_LATEST_LOG`` pointer swap. Raises
-    :class:`ConcurrentWriteError` for the loser; ``append_snapshot``
-    retries it internally (re-reading the new log), heavier
-    operations surface it. ``max_batch_id`` mirrors the default app's
-    watermark for pre-rework readers.
+    :class:`ConcurrentWriteError` for the loser; the append-log
+    mutations retry it through :func:`_commit` (re-reading the new
+    log), the others surface it. ``max_batch_id`` mirrors the default
+    app's watermark for pre-rework readers.
 
     ``prev`` — the materialized state of version n-1 exactly as
     :func:`_read_log` returned it — switches the serialized record to
@@ -3367,13 +3383,6 @@ def _bloom_positions(value, m: int, k: int) -> list[int]:
     ]
 
 
-def _bloom_might_contain(words: list[int], value, m: int, k: int) -> bool:
-    for pos in _bloom_positions(value, m, k):
-        if not (words[pos // 64] >> (pos % 64)) & 1:
-            return False
-    return True
-
-
 def _bloom_hash_cols(c: str, m: int, k: int):
     """The k JVM-side position expressions — sha256 over the value's
     canonical string form + '|<i>', first 15 hex chars as a long,
@@ -3545,11 +3554,7 @@ def table_stats(
     from pyspark.sql import functions as F
 
     fs = _TableFS(table_dir, spark)
-    log = _read_log(fs, version)
-    if log is None:
-        raise FileNotFoundError(
-            f"no published append log at {table_dir!r} (missing {_LOG_PTR})"
-        )
+    log = _require_log(fs, table_dir, version)
     spec = log.get("sketch_spec")
     if spec is None:
         raise ValueError(
@@ -4758,15 +4763,14 @@ def append_snapshot(
     the other writer, the retry degrades to the no-op replay path).
     Appends therefore need no external coordination on HDFS/local
     filesystems. Returns the published log version."""
-    import uuid
-
     if isinstance(partition_by, str):
         partition_by = [partition_by]
     if schema_mode not in ("strict", "merge"):
         raise ValueError(
             f"schema_mode must be 'strict' or 'merge', got {schema_mode!r}"
         )
-    fs = _TableFS(table_dir, frame.df.sparkSession)
+    spark = frame.df.sparkSession
+    fs = _TableFS(table_dir, spark)
     fs.mkdirs()
     key = app_id or _DEFAULT_APP
     incoming = _frame_schema_pairs(frame.df)
@@ -4876,7 +4880,7 @@ def append_snapshot(
         table = cur.get("schema")
         if table is None:  # legacy manifest: one footer read, then stamped
             table = _frame_schema_pairs(
-                frame.df.sparkSession.read.parquet(
+                spark.read.parquet(
                     fs.join(cur["segments"][-1])
                 )
             )
@@ -4988,166 +4992,83 @@ def append_snapshot(
         else (batch_df, {})
     )
     if ukey:
-        out_df = _enforce_unique(
-            frame.df.sparkSession, fs, cur, out_df, ukey, on_conflict
-        )
+        out_df = _enforce_unique(spark, fs, cur, out_df, ukey, on_conflict)
     if cby:
         # clustered table: one range shuffle of the batch so each
         # written file covers a narrow cluster-key slice
         out_df = _cluster_shape(out_df, cby, cluster_files)
-    # write the data ONCE — the unique segment name never collides, so
-    # only the cheap log commit below ever needs to retry
-    n = (cur["version"] if cur else 0) + 1
-    seg = f"seg={n}-{uuid.uuid4().hex[:8]}"
-    writer = out_df.write.mode("errorifexists")
-    if pby:
-        writer = writer.partitionBy(*pby)
-    writer.parquet(fs.join(seg))
-    pdirs = _partition_dirs(fs, seg, len(pby)) if pby else None
-    seg_stats, f_stats = (
-        _segment_stats(frame.df.sparkSession, fs, seg, schema, pby,
-                       file_cols=cby)
-        if collect_stats
-        else (None, None)
+    staged = _stage_segment(
+        spark, fs, (cur["version"] if cur else 0) + 1, out_df, schema, pby,
+        cby, collect_stats, spec,
     )
-    if spec is not None:
-        _write_segment_sketch(frame.df.sparkSession, fs, seg, spec)
-    for _ in range(6):
-        wms = _log_watermarks(cur)
+
+    def build(cur):
+        log = _log_with_extras(cur or {})
         if batch_id is not None:
-            old = wms.get(key)
-            wms[key] = batch_id if old is None else max(old, batch_id)
-        log = {
-            "version": n,
-            "segments": (cur["segments"] if cur else []) + [seg],
-            "watermarks": wms,
-            "schema": schema,
-        }
-        if pby:
-            log["partition_by"] = pby
-            log["partitions"] = {
-                **((cur.get("partitions") if cur else None) or {}),
-                seg: pdirs,
-            }
-        cur_stats = (cur.get("stats") if cur else None) or {}
-        if added and cur_stats:
-            # pre-evolution segments: the new columns are all-NULL
-            # there — exact stats stamped with zero IO
-            cur_stats = _grow_schema_stats(cur_stats, added)
-        if seg_stats is not None or cur_stats:
-            log["stats"] = {
-                **cur_stats,
-                **({seg: seg_stats} if seg_stats is not None else {}),
-            }
-        if cby:
-            log["cluster_by"] = cby
-        if ukey:
-            log["unique_key"] = ukey
-        # file stats carry independently of clustering — z-ordered
-        # compaction folds record them on unclustered tables too
-        cur_files = (cur.get("file_stats") if cur else None) or {}
-        if f_stats is not None or cur_files:
-            log["file_stats"] = {
-                **cur_files,
-                **({seg: f_stats} if f_stats is not None else {}),
-            }
-        if spec is not None:
-            log["sketch_spec"] = spec
-        if exps:
-            log["expectations"] = exps
+            old = log["watermarks"].get(key)
+            log["watermarks"][key] = (
+                batch_id if old is None else max(old, batch_id)
+            )
+        if added:
+            _grow_log_schema(log, added, f"append to {table_dir!r}")
+        log["schema"] = schema  # with this batch's widenings
+        # the layout this batch was written with: the table's, or the
+        # one a first append stamps
+        _stamp_layout(
+            log, partition_by=pby, cluster_by=cby, unique_key=ukey,
+            sketch_spec=spec, expectations=exps,
+        )
+        _add_segment(log, staged)
         if exp_drops:  # per-version audit field, not carried forward
             log["expectation_drops"] = exp_drops
-        if cur and cur.get("deletes"):  # deletion vectors carry through
-            log["deletes"] = cur["deletes"]
-        if cur and cur.get("delete_counts"):
-            log["delete_counts"] = cur["delete_counts"]
-        if cur and cur.get("renames"):  # column-name eras carry through
-            log["renames"] = cur["renames"]
-        if cur and cur.get("retired_names"):
-            log["retired_names"] = cur["retired_names"]
-        try:
-            return _write_log(fs, log, prev=cur)
-        except ConcurrentWriteError:
-            # rebase on the winner's log. _LOG.<k> files are written
-            # atomically BEFORE the pointer swap, so the newest one
-            # that exists IS a complete commit — roll the pointer
-            # forward to it (heals a winner that died mid-publish,
-            # same rule as the copy-on-write _NEXT roll-forward).
-            m = n
-            while fs.exists(f"_LOG.{m + 1}"):
-                m += 1
-            _advance_ptr(
-                fs, _LOG_PTR, m, "ptr",
-                committed=lambda: _log_probe_committed(fs, m),
+        return log
+
+    def on_race(old, new):
+        nonlocal schema, added
+        checked = check(new)
+        if checked is None:  # the winner WAS this batch (replay race)
+            return new["version"]  # our segment is an orphan; vacuum
+        # rebased upcasts are moot: the segment is already on disk
+        # (narrower files read through the table schema natively)
+        schema, r_pby, r_spec, added, r_cby, r_ukey, _ = checked
+        for name, theirs, ours, how in (
+            ("partition_by", r_pby, pby, "written with"),
+            ("sketch_spec", r_spec, spec, "sketched with"),
+            ("cluster_by", r_cby, cby, "clustered with"),
+            ("unique_key", r_ukey, ukey, "checked against"),
+        ):
+            if theirs != ours:  # a first-append race decided a
+                raise ValueError(  # different layout than we wrote
+                    f"append_snapshot: a concurrent first append fixed "
+                    f"{name}={theirs!r} but this batch was {how} "
+                    f"{ours!r} — re-run the append"
+                )
+        prev_segs = set((old or {}).get("segments") or ())
+        new_segs = [s for s in new["segments"] if s not in prev_segs]
+        if ukey and new_segs:
+            # the uniqueness probe ran against the snapshot we read; a
+            # winner's NEW segments were never probed — a silent
+            # violation would slip through the rebase
+            batch_keys = (
+                _read_parquet_at(spark, schema, fs.join(staged["seg"]))
+                .select(*ukey)
+                .na.drop()
+                .distinct()
             )
-            cur = _read_log(fs, m)
-            prev_segs = set(log["segments"]) - {seg}
-            checked = check(cur)
-            if checked is None:  # the winner WAS this batch (replay race)
-                return cur["version"]  # our segment is an orphan; vacuum
-            # rebased upcasts are moot: the segment is already on disk
-            # (narrower files read through the table schema natively)
-            (schema, rebased_pby, rebased_spec, added, rebased_cby,
-             rebased_ukey, _rebased_upcasts) = checked
-            if rebased_pby != pby:  # first-append race decided a
-                raise ValueError(   # different layout than we wrote
-                    f"append_snapshot: a concurrent first append fixed "
-                    f"partition_by={rebased_pby} but this batch was "
-                    f"written with {pby} — re-run the append"
+            hit = _probe_existing_keys(
+                spark, fs, new, batch_keys, ukey, segs=new_segs
+            )[0].first()
+            if hit is not None:
+                raise ConcurrentWriteError(
+                    f"append to {table_dir!r}: a concurrent append "
+                    f"committed key {tuple(hit[c] for c in ukey)} this "
+                    "batch also carries — UNIQUE constraint cannot "
+                    "rebase; re-run the append (the staged segment is "
+                    "an orphan vacuum sweeps)"
                 )
-            if rebased_spec != spec:  # same rule for the sketch spec
-                raise ValueError(
-                    f"append_snapshot: a concurrent first append fixed "
-                    f"sketch_spec={rebased_spec!r} but this batch was "
-                    f"sketched with {spec!r} — re-run the append"
-                )
-            if rebased_cby != cby:  # and the cluster layout
-                raise ValueError(
-                    f"append_snapshot: a concurrent first append fixed "
-                    f"cluster_by={rebased_cby} but this batch was "
-                    f"clustered with {cby} — re-run the append"
-                )
-            if rebased_ukey != ukey:
-                raise ValueError(
-                    f"append_snapshot: a concurrent first append fixed "
-                    f"unique_key={rebased_ukey} but this batch was "
-                    f"checked against {ukey} — re-run the append"
-                )
-            if ukey:
-                # the uniqueness probe ran against the snapshot we
-                # read; a winner's NEW segments were never probed — a
-                # silent violation would slip through the rebase
-                new_segs = [
-                    s for s in cur["segments"] if s not in prev_segs
-                ]
-                if new_segs:
-                    ours = (
-                        _read_parquet_at(
-                            frame.df.sparkSession, schema, fs.join(seg)
-                        )
-                        .select(*ukey)
-                        .na.drop()
-                        .distinct()
-                    )
-                    hit = _probe_existing_keys(
-                        frame.df.sparkSession, fs, cur, ours, ukey,
-                        segs=new_segs,
-                    )[0].first()
-                    if hit is not None:
-                        raise ConcurrentWriteError(
-                            f"append to {table_dir!r}: a concurrent "
-                            f"append committed key "
-                            f"{tuple(hit[c] for c in ukey)} this batch "
-                            "also carries — UNIQUE constraint cannot "
-                            "rebase; re-run the append (the staged "
-                            "segment is an orphan vacuum sweeps)"
-                        )
-            n = cur["version"] + 1
-    raise ConcurrentWriteError(
-        f"append to {table_dir!r} lost 6 straight log-commit races — "
-        "writer storm; the data segment is written and the append can "
-        "be retried cheaply"
-    )
+        return None
+
+    return _commit(fs, cur, build, on_race, f"append to {table_dir!r}")
 
 
 def reset_append_watermark(
@@ -5160,14 +5081,10 @@ def reset_append_watermark(
     segments, same schema, same other apps' watermarks. Returns the
     new log version."""
     fs = _TableFS(table_dir, spark)
-    cur = _read_log(fs)
-    if cur is None:
-        raise FileNotFoundError(
-            f"no published append log at {table_dir!r} (missing {_LOG_PTR})"
-        )
+    cur = _require_log(fs, table_dir)
     # every metadata family carries through; only the one watermark
     # slot is dropped
-    log = _log_with_extras(cur, cur["version"] + 1, list(cur["segments"]))
+    log = _log_with_extras(cur)
     log["watermarks"].pop(app_id or _DEFAULT_APP, None)
     return _write_log(fs, log, prev=cur)
 
@@ -5269,11 +5186,7 @@ def rename_append_column(
 
     Returns the new log version."""
     fs = _TableFS(table_dir, spark)
-    cur = _read_log(fs)
-    if cur is None:
-        raise FileNotFoundError(
-            f"no published append log at {table_dir!r} (missing {_LOG_PTR})"
-        )
+    cur = _require_log(fs, table_dir)
     if not _IDENT_RE.match(new):
         raise ValueError(
             f"rename_append_column: {new!r} is not a plain identifier"
@@ -5290,8 +5203,8 @@ def rename_append_column(
             "or dropped — reusing it would resurrect old physical bytes; "
             "pick a fresh name"
         )
-    n = cur["version"] + 1
-    log = _log_with_extras(cur, n, list(cur["segments"]))
+    log = _log_with_extras(cur)
+    n = log["version"]
     log["schema"] = [
         [new if c == old else c, t] for c, t in cur.get("schema") or []
     ]
@@ -5339,14 +5252,9 @@ def migrate_rename_append_column(
     Versions before the migration remain readable via ``version=`` —
     vacuum ages their files out. Returns the new log version."""
     import re as _re
-    import uuid
 
     fs = _TableFS(table_dir, spark)
-    cur = _read_log(fs)
-    if cur is None:
-        raise FileNotFoundError(
-            f"no published append log at {table_dir!r} (missing {_LOG_PTR})"
-        )
+    cur = _require_log(fs, table_dir)
     if not _IDENT_RE.match(new):
         raise ValueError(
             f"migrate_rename_append_column: {new!r} is not a plain "
@@ -5396,7 +5304,6 @@ def migrate_rename_append_column(
             k: [pat.sub(new, v[0]), v[1]] for k, v in exps.items()
         }
     n = cur["version"] + 1
-    seg = f"seg={n}-{uuid.uuid4().hex[:8]}"
     conformed = _conform_schema(df, new_schema)
     if cby:
         # cluster_files sizes the re-clustered layout (the write-time
@@ -5404,31 +5311,17 @@ def migrate_rename_append_column(
         # table into one segment, so pick it ∝ table bytes / target
         # file size to keep file-grain pruning selective
         conformed = _cluster_shape(conformed, cby, cluster_files)
-    writer = conformed.write.mode("errorifexists")
-    if pby:
-        writer = writer.partitionBy(*pby)
-    writer.parquet(fs.join(seg))
-    log = _log_with_extras(cur, n, [seg])
+    staged = _stage_segment(
+        spark, fs, n, conformed, new_schema, pby, cby,
+        bool(cur.get("stats")), spec,
+    )
+    log = _log_with_extras(cur, n, [])
     log["schema"] = new_schema
-    if pby:
-        log["partition_by"] = pby
-        log["partitions"] = {seg: _partition_dirs(fs, seg, len(pby))}
-    if cby:
-        log["cluster_by"] = cby
-    if ukey:
-        log["unique_key"] = ukey
-    if spec is not None and cur.get("sketch_spec"):
-        log["sketch_spec"] = spec
-        _write_segment_sketch(spark, fs, seg, spec)
-    if exps is not None and cur.get("expectations"):
-        log["expectations"] = exps
-    if cur.get("stats"):
-        seg_stats, f_stats = _segment_stats(
-            spark, fs, seg, new_schema, pby, file_cols=cby
-        )
-        log["stats"] = {seg: seg_stats}
-        if cby:
-            log["file_stats"] = {seg: f_stats}
+    _stamp_layout(
+        log, partition_by=pby, cluster_by=cby, unique_key=ukey,
+        sketch_spec=spec, expectations=exps,
+    )
+    _add_segment(log, staged)
     log["retired_names"] = sorted(
         set(cur.get("retired_names") or ()) | {old}
     )
@@ -5447,19 +5340,14 @@ def drop_append_column(
     structural guards as :func:`rename_append_column` apply. Returns
     the new log version."""
     fs = _TableFS(table_dir, spark)
-    cur = _read_log(fs)
-    if cur is None:
-        raise FileNotFoundError(
-            f"no published append log at {table_dir!r} (missing {_LOG_PTR})"
-        )
+    cur = _require_log(fs, table_dir)
     _rename_drop_guards(cur, col, table_dir, "drop_append_column")
     schema = [p for p in (cur.get("schema") or []) if p[0] != col]
     if not schema:
         raise ValueError(
             f"drop_append_column: {col!r} is the table's only column"
         )
-    n = cur["version"] + 1
-    log = _log_with_extras(cur, n, list(cur["segments"]))
+    log = _log_with_extras(cur)
     log["schema"] = schema
     log["retired_names"] = sorted(
         set(cur.get("retired_names") or ()) | {col}
@@ -5524,11 +5412,7 @@ def read_append_snapshot(
             raise ValueError("pass version= or as_of=, not both")
         version = append_version_as_of(table_dir, as_of, spark)
     fs = _TableFS(table_dir, spark)
-    log = _read_log(fs, version)
-    if log is None:
-        raise FileNotFoundError(
-            f"no published append log at {table_dir!r} (missing {_LOG_PTR})"
-        )
+    log = _require_log(fs, table_dir, version)
     if not log["segments"]:
         raise FileNotFoundError(f"log version {log['version']} has no segments")
     derived = (
@@ -5600,11 +5484,7 @@ def explain_append_scan(
     ``where`` whose derivation mismatches the schema degrades to the
     full scan exactly like the read does."""
     fs = _TableFS(table_dir, spark)
-    log = _read_log(fs, version)
-    if log is None:
-        raise FileNotFoundError(
-            f"no published append log at {table_dir!r} (missing {_LOG_PTR})"
-        )
+    log = _require_log(fs, table_dir, version)
     schema = log.get("schema")
     pby = log.get("partition_by") or []
     if partition_filter and not pby:
@@ -5779,17 +5659,13 @@ def set_append_expectations(
     sees nothing. Expectations can also be stamped at table creation
     via ``append_snapshot(..., expectations=...)``."""
     fs = _TableFS(table_dir, spark)
-    cur = _read_log(fs)
-    if cur is None:
-        raise FileNotFoundError(
-            f"no published append log at {table_dir!r} (missing {_LOG_PTR})"
-        )
+    cur = _require_log(fs, table_dir)
     norm = (
         _normalize_expectations(expectations)
         if expectations is not None
         else None
     )
-    log = _log_with_extras(cur, cur["version"] + 1, list(cur["segments"]))
+    log = _log_with_extras(cur)
     if norm:
         log["expectations"] = norm
     else:
@@ -5840,11 +5716,7 @@ def read_append_changes(
     ``read + filter`` semantics at pruned-IO cost over just the
     window's new segments."""
     fs = _TableFS(table_dir, spark)
-    cur = _read_log(fs, version)
-    if cur is None:
-        raise FileNotFoundError(
-            f"no published append log at {table_dir!r} (missing {_LOG_PTR})"
-        )
+    cur = _require_log(fs, table_dir, version)
     end = cur["version"]
     if since_version > end:
         raise ValueError(
@@ -6013,10 +5885,17 @@ def _rm_dir(fs: _TableFS, rel: str) -> None:
         shutil.rmtree(target, ignore_errors=True)
 
 
-def _log_with_extras(cur: dict, n: int, segments: list[str]) -> dict:
+def _log_with_extras(cur: dict, n: int | None = None,
+                     segments: list[str] | None = None) -> dict:
     """A new log version carrying every metadata family forward for the
     surviving ``segments`` — the one place the carry rules live so a
-    publish path can't silently drop deletion vectors or zone maps."""
+    publish path can't silently drop deletion vectors or zone maps.
+    Defaults: the version after ``cur``, over ``cur``'s segments (an
+    empty ``cur`` stands for a table with no log yet)."""
+    if n is None:
+        n = cur.get("version", 0) + 1
+    if segments is None:
+        segments = list(cur.get("segments") or [])
     log = {
         "version": n,
         "segments": segments,
@@ -6061,6 +5940,124 @@ def _log_with_extras(cur: dict, n: int, segments: list[str]) -> dict:
     if cmap:
         log["delete_counts"] = cmap
     return log
+
+
+def _stage_segment(spark, fs: _TableFS, n: int, df, schema, pby, cby,
+                   stats: bool, spec) -> dict:
+    """Write ``df`` as a new segment of version ``n`` and gather what
+    its log entry records: partition dirs, zone maps (per-file ones
+    for the cluster columns) when ``stats``, and the sketch sidecar
+    when ``spec``. The name carries a random suffix, so the write
+    never collides and only the log commit ever retries."""
+    import uuid
+
+    seg = f"seg={n}-{uuid.uuid4().hex[:8]}"
+    writer = df.write.mode("errorifexists")
+    if pby:
+        writer = writer.partitionBy(*pby)
+    writer.parquet(fs.join(seg))
+    staged = {
+        "seg": seg,
+        "partitions": _partition_dirs(fs, seg, len(pby)) if pby else None,
+    }
+    staged["stats"], staged["file_stats"] = (
+        _segment_stats(spark, fs, seg, schema, pby, file_cols=cby)
+        if stats
+        else (None, None)
+    )
+    if spec is not None:
+        _write_segment_sketch(spark, fs, seg, spec)
+    return staged
+
+
+def _stamp_layout(log: dict, **fields) -> None:
+    """Set the table-layout fields of a log being built, dropping the
+    empty ones (and the partition map of an unpartitioned layout)."""
+    for k, v in fields.items():
+        if v:
+            log[k] = v
+        else:
+            log.pop(k, None)
+    if not log.get("partition_by"):
+        log.pop("partitions", None)
+
+
+def _add_segment(log: dict, staged: dict) -> None:
+    """Add a :func:`_stage_segment` result to a log being built."""
+    seg = staged["seg"]
+    log["segments"] = list(log["segments"]) + [seg]
+    # file stats carry independently of clustering — z-ordered
+    # compaction folds record them on unclustered tables too
+    for fam in ("partitions", "stats", "file_stats"):
+        if staged[fam] is not None:
+            log[fam] = {**(log.get(fam) or {}), seg: staged[fam]}
+
+
+def _add_dvs(log: dict, dv_rel, counts: dict, tombstones=None) -> None:
+    """Mark rows deleted in a log being built: each segment in
+    ``counts`` gains the DV directory ``dv_rel`` and its row count;
+    each segment in ``tombstones`` (fully replaced, no DV file) gains
+    only the count."""
+    dmap = dict(log.get("deletes") or {})
+    cmap = dict(log.get("delete_counts") or {})
+    for s, c in sorted({**counts, **(tombstones or {})}.items()):
+        if s in counts:
+            dmap[s] = list(dmap.get(s, [])) + [dv_rel]
+        cmap[s] = int(cmap.get(s, 0)) + int(c)
+    log["deletes"], log["delete_counts"] = dmap, cmap
+
+
+def _grow_log_schema(log: dict, added, what: str) -> None:
+    """Additive evolution of a log being built: append the ``added``
+    columns to its schema and stamp the exact all-NULL zone maps on
+    the segments that predate them. Checked against the head the log
+    is built on, so a concurrent writer that added the same name with
+    a different type is a conflict, not a merge."""
+    have = dict(map(tuple, log.get("schema") or []))
+    clash = sorted(c for c, t in added if have.get(c, t) != t)
+    if clash:
+        raise ConcurrentWriteError(
+            f"{what}: concurrent writer added {clash} with different "
+            "types — re-run"
+        )
+    log["schema"] = list(log.get("schema") or []) + [
+        [c, t] for c, t in added if c not in have
+    ]
+    if log.get("stats"):
+        log["stats"] = _grow_schema_stats(log["stats"], added)
+
+
+def _commit(fs: _TableFS, cur: dict | None, build, on_race, what: str):
+    """The publish-and-rebase loop every append-log mutation commits
+    through. Each attempt builds the next log from the head it read
+    (``build(cur)``) and publishes it (:func:`_write_log`: exclusive
+    create of ``_LOG.<n>``, then the pointer swap). A lost race rolls
+    ``_LATEST_LOG`` forward to the newest commit record — ``_LOG.<k>``
+    files are complete before their pointer swap, so this heals a
+    winner that died mid-publish — and asks ``on_race(old, new)``
+    whether the work survives the winner: it raises
+    :class:`ConcurrentWriteError` to refuse, returns None to rebase
+    onto ``new``, or returns the version to report instead (an
+    append's replay race). Returns the published version."""
+    for _ in range(6):
+        log = build(cur)
+        try:
+            return _write_log(fs, log, prev=cur)
+        except ConcurrentWriteError:
+            m = _log_probe_committed(fs, log["version"])
+            _advance_ptr(
+                fs, _LOG_PTR, m, "ptr",
+                committed=lambda: _log_probe_committed(fs, m),
+            )
+            new = _read_log(fs, m)
+            done = on_race(cur, new)
+            if done is not None:
+                return done
+            cur = new
+    raise ConcurrentWriteError(
+        f"{what} lost 6 straight log-commit races — writer storm; "
+        "nothing was published, re-run it"
+    )
 
 
 def _prune_by_stats(
@@ -6228,6 +6225,66 @@ def _partition_scope(cur: dict, segs, partition_filter):
     return segs, cond
 
 
+def _match_rows(spark, fs: _TableFS, cur: dict, where, residual,
+                partition_filter, verb: str):
+    """The rows a row-level write (``verb``: delete/update) targets,
+    with candidate segments pruned first: partition map, then zone
+    maps / dictionaries / blooms / file grain for the dict form of
+    ``where`` or the conjuncts a string predicate implies. Returns
+    ``(candidate segments, matching rows as a position-addressed
+    scan)``; the rows are None when no candidate survives."""
+    if where is None and partition_filter is None:
+        raise ValueError(
+            f"{verb}_append_rows needs where= and/or partition_filter= "
+            f"(an unconditional full-table {verb} is surely a mistake; "
+            "pass where=True explicitly if you mean it)"
+        )
+    segs = _skip_fully_deleted(cur, list(cur["segments"]))
+    segs, pcond = _partition_scope(cur, segs, partition_filter)
+    fmap: dict = {}
+    if isinstance(where, dict):
+        segs, cond, fmap = _prune_by_stats(spark, fs, cur, segs, where)
+        matcher = lambda df: df.filter(cond)  # noqa: E731
+    elif where is None:
+        matcher = lambda df: df  # noqa: E731  (partition-only write)
+    else:
+        if residual is not None:
+            raise ValueError(
+                "residual= requires the dict (stats_filter) form of "
+                "where — fold the condition into the predicate instead"
+            )
+        if isinstance(where, str):
+            # free-form predicate: compile its implied conjuncts into
+            # the stats_filter form and prune candidates the same way —
+            # the full predicate still runs over the survivors, so a
+            # failed/partial derivation only costs IO, never rows
+            derived = _derive_stats_filter(where, cur.get("schema"))
+            if derived:
+                try:
+                    segs, _, fmap = _prune_by_stats(
+                        spark, fs, cur, segs, derived, with_cond=False
+                    )
+                except ValueError:
+                    pass  # stats/value mismatch: keep the full scan
+            # partition-column equality conjuncts prune through the
+            # manifest PARTITION map the same way (zone maps skip
+            # partition columns, so stats derivation can't see them)
+            dpf = _derive_pfilter(
+                where, cur.get("partition_by"), cur.get("schema")
+            )
+            if dpf:
+                segs, _ = _partition_scope(cur, segs, dpf)
+        matcher = lambda df: Frame(df, ()).filter(where).df  # noqa: E731
+    if not segs:
+        return segs, None
+    matches = matcher(_scan_with_dv(spark, fs, cur, segs, fmap=fmap))
+    if pcond is not None:
+        matches = matches.filter(pcond)
+    if residual is not None:
+        matches = Frame(matches, ()).filter(residual).df
+    return segs, matches
+
+
 def delete_append_rows(
     spark: SparkSession,
     table_dir: str,
@@ -6282,94 +6339,31 @@ def delete_append_rows(
     Returns ``(published_version, rows_deleted)``; a no-match delete
     publishes nothing and returns the current version."""
     fs = _TableFS(table_dir, spark)
-    cur = _read_log(fs)
-    if cur is None:
-        raise FileNotFoundError(
-            f"no published append log at {table_dir!r} (missing {_LOG_PTR})"
-        )
-    if where is None and partition_filter is None:
-        raise ValueError(
-            "delete_append_rows needs where= and/or partition_filter= "
-            "(an unconditional full-table delete is surely a mistake; "
-            "pass where=True explicitly if you mean it)"
-        )
-    segs = _skip_fully_deleted(cur, list(cur["segments"]))
-    segs, pcond = _partition_scope(cur, segs, partition_filter)
-    fmap: dict = {}
-    if isinstance(where, dict):
-        segs, cond, fmap = _prune_by_stats(spark, fs, cur, segs, where)
-        matcher = lambda df: df.filter(cond)  # noqa: E731
-    elif where is None:
-        matcher = lambda df: df  # noqa: E731  (partition-only delete)
-    else:
-        if residual is not None:
-            raise ValueError(
-                "residual= requires the dict (stats_filter) form of "
-                "where — fold the condition into the predicate instead"
-            )
-        if isinstance(where, str):
-            # free-form predicate: compile its implied conjuncts into
-            # the stats_filter form and prune candidates the same way —
-            # the full predicate still runs over the survivors, so a
-            # failed/partial derivation only costs IO, never rows
-            derived = _derive_stats_filter(where, cur.get("schema"))
-            if derived:
-                try:
-                    segs, _, fmap = _prune_by_stats(
-                        spark, fs, cur, segs, derived, with_cond=False
-                    )
-                except ValueError:
-                    pass  # stats/value mismatch: keep the full scan
-            # partition-column equality conjuncts prune through the
-            # manifest PARTITION map the same way (zone maps skip
-            # partition columns, so stats derivation can't see them)
-            dpf = _derive_pfilter(
-                where, cur.get("partition_by"), cur.get("schema")
-            )
-            if dpf:
-                segs, _ = _partition_scope(cur, segs, dpf)
-        matcher = lambda df: Frame(df, ()).filter(where).df  # noqa: E731
-    if not segs:
+    cur = _require_log(fs, table_dir)
+    segs, matches = _match_rows(
+        spark, fs, cur, where, residual, partition_filter, "delete"
+    )
+    if matches is None:
         return cur["version"], 0
-    matches = matcher(_scan_with_dv(spark, fs, cur, segs, fmap=fmap))
-    if pcond is not None:
-        matches = matches.filter(pcond)
-    if residual is not None:
-        matches = Frame(matches, ()).filter(residual).df
     dv_rel, counts = _write_dv(
         spark, fs, cur, matches, list(cur.get("partition_by") or []),
         cand_segs=segs,
     )
     if dv_rel is None:  # nothing matched: no new version
         return cur["version"], 0
-    total = int(sum(counts.values()))
     touched = sorted(counts)
-    for _ in range(6):
-        n = cur["version"] + 1
-        log = _log_with_extras(cur, n, list(cur["segments"]))
-        dmap = dict(log.get("deletes") or {})
-        cmap = dict(log.get("delete_counts") or {})
-        for s in touched:
-            dmap[s] = list(dmap.get(s, [])) + [dv_rel]
-            cmap[s] = int(cmap.get(s, 0)) + int(counts[s])
-        log["deletes"], log["delete_counts"] = dmap, cmap
-        try:
-            return _write_log(fs, log, prev=cur), total
-        except ConcurrentWriteError:
-            m = n
-            while fs.exists(f"_LOG.{m + 1}"):
-                m += 1
-            _advance_ptr(
-                fs, _LOG_PTR, m, "ptr",
-                committed=lambda: _log_probe_committed(fs, m),
-            )
-            new = _read_log(fs, m)
-            _dv_conflict_check(cur, new, touched)
-            cur = new
-    raise ConcurrentWriteError(
-        f"delete on {table_dir!r} lost 6 straight log-commit races — "
-        "writer storm; re-run the delete"
+
+    def build(cur):
+        log = _log_with_extras(cur)
+        _add_dvs(log, dv_rel, counts)
+        return log
+
+    v = _commit(
+        fs, cur, build,
+        lambda old, new: _dv_conflict_check(old, new, touched),
+        f"delete on {table_dir!r}",
     )
+    return v, int(sum(counts.values()))
 
 
 def update_append_rows(
@@ -6409,14 +6403,8 @@ def update_append_rows(
 
     Returns ``(published_version, rows_updated)``; a no-match update
     publishes nothing and returns the current version."""
-    import uuid
-
     fs = _TableFS(table_dir, spark)
-    cur = _read_log(fs)
-    if cur is None:
-        raise FileNotFoundError(
-            f"no published append log at {table_dir!r} (missing {_LOG_PTR})"
-        )
+    cur = _require_log(fs, table_dir)
     if schema_mode not in ("strict", "merge"):
         raise ValueError(
             f"schema_mode must be 'strict' or 'merge', got {schema_mode!r}"
@@ -6451,50 +6439,11 @@ def update_append_rows(
             "delete + append (or a keyed upsert) expresses a key change "
             "explicitly"
         )
-    if where is None and partition_filter is None:
-        raise ValueError(
-            "update_append_rows needs where= and/or partition_filter= "
-            "(an unconditional full-table update is surely a mistake; "
-            "pass where=True explicitly if you mean it)"
-        )
-    segs = _skip_fully_deleted(cur, list(cur["segments"]))
-    segs, pcond = _partition_scope(cur, segs, partition_filter)
-    fmap: dict = {}
-    if isinstance(where, dict):
-        segs, cond, fmap = _prune_by_stats(spark, fs, cur, segs, where)
-        matcher = lambda df: df.filter(cond)  # noqa: E731
-    elif where is None:
-        matcher = lambda df: df  # noqa: E731  (partition-only update)
-    else:
-        if residual is not None:
-            raise ValueError(
-                "residual= requires the dict (stats_filter) form of "
-                "where — fold the condition into the predicate instead"
-            )
-        if isinstance(where, str):
-            # same derivation as delete_append_rows: implied conjuncts
-            # prune candidates, the full predicate guards exactness
-            derived = _derive_stats_filter(where, cur.get("schema"))
-            if derived:
-                try:
-                    segs, _, fmap = _prune_by_stats(
-                        spark, fs, cur, segs, derived, with_cond=False
-                    )
-                except ValueError:
-                    pass
-            dpf = _derive_pfilter(
-                where, cur.get("partition_by"), cur.get("schema")
-            )
-            if dpf:
-                segs, _ = _partition_scope(cur, segs, dpf)
-        matcher = lambda df: Frame(df, ()).filter(where).df  # noqa: E731
-    if not segs:
+    segs, matches = _match_rows(
+        spark, fs, cur, where, residual, partition_filter, "update"
+    )
+    if matches is None:
         return cur["version"], 0
-    matches = matcher(_scan_with_dv(spark, fs, cur, segs, fmap=fmap))
-    if pcond is not None:
-        matches = matches.filter(pcond)
-    if residual is not None:
-        matches = Frame(matches, ()).filter(residual).df
     matches.persist()  # one scan feeds BOTH the DV and the new segment
     try:
         pby = list(cur.get("partition_by") or [])
@@ -6503,7 +6452,6 @@ def update_append_rows(
         )
         if dv_rel is None:
             return cur["version"], 0
-        total = int(sum(counts.values()))
         updated = Frame(
             matches.drop(_DV_SEG, _DV_FILE, _DV_POS, _DV_PART, _DV_RELP), ()
         ).mutate(**assignments)
@@ -6518,88 +6466,34 @@ def update_append_rows(
             got = dict(map(tuple, _frame_schema_pairs(updated.df)))
             added = [[c, got[c]] for c in unknown]
             schema = list(schema) + added
-        n = cur["version"] + 1
-        seg = f"seg={n}-{uuid.uuid4().hex[:8]}"
         conformed = _conform_schema(updated.df, schema)
         cby = list(cur.get("cluster_by") or [])
         if cby:
             # the updated copies keep the table's cluster layout, so
             # the NEXT key probe file-prunes over them too
             conformed = _cluster_shape(conformed, cby)
-        writer = conformed.write.mode("errorifexists")
-        if pby:
-            writer = writer.partitionBy(*pby)
-        writer.parquet(fs.join(seg))
-        pdirs = _partition_dirs(fs, seg, len(pby)) if pby else None
-        seg_stats, f_stats = (
-            _segment_stats(spark, fs, seg, schema, pby, file_cols=cby)
-            if cur.get("stats")
-            else (None, None)
-        )
-        spec = cur.get("sketch_spec")
-        if spec is not None:
-            _write_segment_sketch(spark, fs, seg, spec)
-        touched = sorted(counts)
-        for _ in range(6):
-            n = cur["version"] + 1
-            log = _log_with_extras(cur, n, list(cur["segments"]) + [seg])
-            if added:
-                # additive evolution, rebased against the CURRENT log:
-                # a concurrent writer adding the same name with a
-                # different type is a real conflict, not mergeable
-                have_now = dict(map(tuple, log.get("schema") or []))
-                clash = {
-                    c: (have_now[c], t)
-                    for c, t in added
-                    if have_now.get(c, t) != t
-                }
-                if clash:
-                    raise ConcurrentWriteError(
-                        f"update on {table_dir!r}: concurrent writer "
-                        f"added {sorted(clash)} with different types — "
-                        "re-run the update"
-                    )
-                log["schema"] = list(log.get("schema") or []) + [
-                    [c, t] for c, t in added if c not in have_now
-                ]
-                if log.get("stats"):
-                    log["stats"] = _grow_schema_stats(log["stats"], added)
-            dmap = dict(log.get("deletes") or {})
-            cmap = dict(log.get("delete_counts") or {})
-            for s in touched:
-                dmap[s] = list(dmap.get(s, [])) + [dv_rel]
-                cmap[s] = int(cmap.get(s, 0)) + int(counts[s])
-            log["deletes"], log["delete_counts"] = dmap, cmap
-            if pby:
-                log["partitions"] = {
-                    **(log.get("partitions") or {}),
-                    seg: pdirs,
-                }
-            if seg_stats is not None:
-                log["stats"] = {**(log.get("stats") or {}), seg: seg_stats}
-            if f_stats is not None:
-                log["file_stats"] = {
-                    **(log.get("file_stats") or {}), seg: f_stats,
-                }
-            try:
-                return _write_log(fs, log, prev=cur), total
-            except ConcurrentWriteError:
-                m = n
-                while fs.exists(f"_LOG.{m + 1}"):
-                    m += 1
-                _advance_ptr(
-                    fs, _LOG_PTR, m, "ptr",
-                    committed=lambda: _log_probe_committed(fs, m),
-                )
-                new = _read_log(fs, m)
-                _dv_conflict_check(cur, new, touched)
-                cur = new
-        raise ConcurrentWriteError(
-            f"update on {table_dir!r} lost 6 straight log-commit races — "
-            "writer storm; re-run the update"
+        staged = _stage_segment(
+            spark, fs, cur["version"] + 1, conformed, schema, pby, cby,
+            bool(cur.get("stats")), cur.get("sketch_spec"),
         )
     finally:
         matches.unpersist()
+    touched = sorted(counts)
+
+    def build(cur):
+        log = _log_with_extras(cur)
+        if added:
+            _grow_log_schema(log, added, f"update on {table_dir!r}")
+        _add_dvs(log, dv_rel, counts)
+        _add_segment(log, staged)
+        return log
+
+    v = _commit(
+        fs, cur, build,
+        lambda old, new: _dv_conflict_check(old, new, touched),
+        f"update on {table_dir!r}",
+    )
+    return v, int(sum(counts.values()))
 
 
 def read_append_cdf(
@@ -6635,11 +6529,7 @@ def read_append_cdf(
     from pyspark.sql import functions as F
 
     fs = _TableFS(table_dir, spark)
-    cur = _read_log(fs, version)
-    if cur is None:
-        raise FileNotFoundError(
-            f"no published append log at {table_dir!r} (missing {_LOG_PTR})"
-        )
+    cur = _require_log(fs, table_dir, version)
     end = cur["version"]
     if since_version > end:
         raise ValueError(
@@ -6976,16 +6866,10 @@ def upsert_append_rows(
     function's :func:`join_prune_filter` collect (one fewer driver
     job over the batch); the values must be exactly what that collect
     would have returned or pruning turns unsound."""
-    import uuid
-
     keys = [key] if isinstance(key, str) else list(key)
     spark = frame.df.sparkSession
     fs = _TableFS(table_dir, spark)
-    cur = _read_log(fs)
-    if cur is None:
-        raise FileNotFoundError(
-            f"no published append log at {table_dir!r} (missing {_LOG_PTR})"
-        )
+    cur = _require_log(fs, table_dir)
     schema = cur.get("schema") or []
     known = {name for name, _ in schema}
     missing = sorted(set(keys) - known)
@@ -7150,7 +7034,6 @@ def upsert_append_rows(
         ).first()
         n_appended = int(_cnt["__n"])
         key_width = {k: _cnt[f"__w{i}"] for i, k in enumerate(var_keys)}
-    counts: dict = {}
     dv_rel = None
     pby = list(cur.get("partition_by") or [])
     # full-coverage tombstones: candidate segments whose every row
@@ -7237,8 +7120,6 @@ def upsert_append_rows(
 
         dv_thread = InheritableThread(target=_run_dv, daemon=True)
         dv_thread.start()
-    n = cur["version"] + 1
-    seg = f"seg={n}-{uuid.uuid4().hex[:8]}"
     try:
         conformed = _conform_schema(src, schema)
         cby = list(cur.get("cluster_by") or [])
@@ -7255,58 +7136,33 @@ def upsert_append_rows(
             conformed = conformed.observe(
                 obs, F.count(F.lit(1)).alias("__n")
             )
-        writer = conformed.write.mode("errorifexists")
-        if pby:
-            writer = writer.partitionBy(*pby)
-        writer.parquet(fs.join(seg))
-        pdirs = _partition_dirs(fs, seg, len(pby)) if pby else None
-        seg_stats, f_stats = (
-            _segment_stats(spark, fs, seg, schema, pby, file_cols=cby)
-            if cur.get("stats")
-            else (None, None)
+        staged = _stage_segment(
+            spark, fs, cur["version"] + 1, conformed, schema, pby, cby,
+            bool(cur.get("stats")), cur.get("sketch_spec"),
         )
         if n_appended is None:
             # the stats pass counted the rows exactly
             n_appended = (
                 int(obs.get["__n"])
                 if obs is not None
-                else int(seg_stats["rows"])
+                else int(staged["stats"]["rows"])
             )
-        spec = cur.get("sketch_spec")
-        if spec is not None:
-            _write_segment_sketch(spark, fs, seg, spec)
     finally:
         if dv_thread is not None:
             dv_thread.join()
+    dv_counts: dict = {}
     if dv_thread is not None:
         if "err" in dv_out:
             raise dv_out["err"]
-        dv_rel, counts = dv_out["ok"]
-    dv_segs = set(counts)  # segments whose rows the DV parquet holds;
+        dv_rel, dv_counts = dv_out["ok"]
     # tombstoned segments advance counts with NO file reference
-    counts = {**counts, **full_counts}
-    n_replaced = int(sum(counts.values()))
+    counts = {**dv_counts, **full_counts}
     touched = sorted(counts)
-    for _ in range(6):
-        n = cur["version"] + 1
-        log = _log_with_extras(cur, n, list(cur["segments"]) + [seg])
+
+    def build(cur):
+        log = _log_with_extras(cur)
         if added:
-            have_now = dict(map(tuple, log.get("schema") or []))
-            clash = {
-                c: (have_now[c], t)
-                for c, t in added
-                if have_now.get(c, t) != t
-            }
-            if clash:
-                raise ConcurrentWriteError(
-                    f"upsert on {table_dir!r}: concurrent writer added "
-                    f"{sorted(clash)} with different types — re-run"
-                )
-            log["schema"] = list(log.get("schema") or []) + [
-                [c, t] for c, t in added if c not in have_now
-            ]
-            if log.get("stats"):
-                log["stats"] = _grow_schema_stats(log["stats"], added)
+            _grow_log_schema(log, added, f"upsert on {table_dir!r}")
         if widened:
             # stamp the widened types, re-validated against the state
             # a rebase may have refreshed (a concurrent writer widening
@@ -7325,41 +7181,19 @@ def upsert_append_rows(
                         f"this batch's widening to {g!r} — re-run"
                     )
             log["schema"] = new_schema
-        if counts:
-            dmap = dict(log.get("deletes") or {})
-            cmap = dict(log.get("delete_counts") or {})
-            for s in touched:
-                if dv_rel is not None and s in dv_segs:
-                    dmap[s] = list(dmap.get(s, [])) + [dv_rel]
-                cmap[s] = int(cmap.get(s, 0)) + int(counts[s])
-            log["deletes"], log["delete_counts"] = dmap, cmap
-        if pby:
-            log["partitions"] = {**(log.get("partitions") or {}), seg: pdirs}
-        if seg_stats is not None:
-            log["stats"] = {**(log.get("stats") or {}), seg: seg_stats}
-        if f_stats is not None:
-            log["file_stats"] = {
-                **(log.get("file_stats") or {}), seg: f_stats,
-            }
+        if touched:
+            _add_dvs(log, dv_rel, dv_counts, full_counts)
+        _add_segment(log, staged)
         if exp_drops:  # per-version audit field, not carried forward
             log["expectation_drops"] = exp_drops
-        try:
-            return _write_log(fs, log, prev=cur), n_replaced, int(n_appended)
-        except ConcurrentWriteError:
-            m = n
-            while fs.exists(f"_LOG.{m + 1}"):
-                m += 1
-            _advance_ptr(
-                fs, _LOG_PTR, m, "ptr",
-                committed=lambda: _log_probe_committed(fs, m),
-            )
-            new = _read_log(fs, m)
-            _dv_conflict_check(cur, new, touched)
-            cur = new
-    raise ConcurrentWriteError(
-        f"upsert on {table_dir!r} lost 6 straight log-commit races — "
-        "writer storm; re-run the upsert"
+        return log
+
+    v = _commit(
+        fs, cur, build,
+        lambda old, new: _dv_conflict_check(old, new, touched),
+        f"upsert on {table_dir!r}",
     )
+    return v, int(sum(counts.values())), int(n_appended)
 
 
 def _window_restores(fs: _TableFS, since: int, end: int) -> list[tuple]:
@@ -7464,11 +7298,7 @@ def tail_append_changes(
     fs.mkdirs()
     name = f"_CURSOR.{consumer_id}"
     cursor_text = fs.read_text(name)
-    cur = _read_log(_TableFS(table_dir, spark))
-    if cur is None:
-        raise FileNotFoundError(
-            f"no published append log at {table_dir!r} (missing {_LOG_PTR})"
-        )
+    cur = _require_log(_TableFS(table_dir, spark), table_dir)
     up_to = cur["version"]
     if cursor_text is None:
         # bootstrap reads the published snapshot, which always applies
@@ -7553,11 +7383,7 @@ def tail_append_cdf(
     name = f"_CURSOR.cdf.{consumer_id}"
     cursor_text = cfs.read_text(name)
     fs = _TableFS(table_dir, spark)
-    cur = _read_log(fs)
-    if cur is None:
-        raise FileNotFoundError(
-            f"no published append log at {table_dir!r} (missing {_LOG_PTR})"
-        )
+    cur = _require_log(fs, table_dir)
     up_to = cur["version"]
     if cursor_text is None:
         snap = read_append_snapshot(spark, table_dir, version=up_to)
@@ -7637,11 +7463,7 @@ def merge_append_dvs(
     if min_dvs < 2:
         raise ValueError("min_dvs must be >= 2 (merging fewer is churn)")
     fs = _TableFS(table_dir, spark)
-    cur = _read_log(fs)
-    if cur is None:
-        raise FileNotFoundError(
-            f"no published append log at {table_dir!r} (missing {_LOG_PTR})"
-        )
+    cur = _require_log(fs, table_dir)
     dmap = cur.get("deletes") or {}
     # per family: the segments whose directory count warrants a merge
     plans: dict[bool, list[str]] = {}
@@ -7672,9 +7494,9 @@ def merge_append_dvs(
         )
         merged[is_v2] = rel
     touched = sorted({s for segs in plans.values() for s in segs})
-    for _ in range(6):
-        n = cur["version"] + 1
-        log = _log_with_extras(cur, n, list(cur["segments"]))
+
+    def build(cur):
+        log = _log_with_extras(cur)
         new_dmap = dict(log.get("deletes") or {})
         for is_v2, segs in plans.items():
             for s in segs:
@@ -7683,22 +7505,12 @@ def merge_append_dvs(
                 kept = [d for d in new_dmap[s] if _dv_is_v2(d) != is_v2]
                 new_dmap[s] = kept + [merged[is_v2]]
         log["deletes"] = new_dmap
-        try:
-            return _write_log(fs, log, prev=cur)
-        except ConcurrentWriteError:
-            m = n
-            while fs.exists(f"_LOG.{m + 1}"):
-                m += 1
-            _advance_ptr(
-                fs, _LOG_PTR, m, "ptr",
-                committed=lambda: _log_probe_committed(fs, m),
-            )
-            new = _read_log(fs, m)
-            _dv_conflict_check(cur, new, touched)
-            cur = new
-    raise ConcurrentWriteError(
-        f"DV merge on {table_dir!r} lost 6 straight log-commit races — "
-        "writer storm; re-run the merge"
+        return log
+
+    return _commit(
+        fs, cur, build,
+        lambda old, new: _dv_conflict_check(old, new, touched),
+        f"DV merge on {table_dir!r}",
     )
 
 
@@ -7772,11 +7584,7 @@ def compact_append_snapshot(
     if max_live_segments is not None and max_live_segments < 1:
         raise ValueError("max_live_segments must be >= 1")
     fs = _TableFS(table_dir, spark)
-    cur = _read_log(fs)
-    if cur is None:
-        raise FileNotFoundError(
-            f"no published append log at {table_dir!r} (missing {_LOG_PTR})"
-        )
+    cur = _require_log(fs, table_dir)
     pby = list(cur.get("partition_by") or [])
     if pby and zorder_by and set(zorder_by) & set(pby):
         raise ValueError(
@@ -8037,11 +7845,7 @@ def restore_append_snapshot(
     re-run. Returns the published version (current version when
     ``version`` already is the head — nothing to do)."""
     fs = _TableFS(table_dir, spark)
-    cur = _read_log(fs)
-    if cur is None:
-        raise FileNotFoundError(
-            f"no published append log at {table_dir!r} (missing {_LOG_PTR})"
-        )
+    cur = _require_log(fs, table_dir)
     if version == cur["version"]:
         return cur["version"]
     if version > cur["version"]:
@@ -8158,11 +7962,7 @@ def append_quick_stats(
     Partition columns carry no zone maps (their values live in the
     manifest partition map) and are omitted from ``cols``."""
     fs = _TableFS(table_dir, spark)
-    log = _read_log(fs, version)
-    if log is None:
-        raise FileNotFoundError(
-            f"no published append log at {table_dir!r} (missing {_LOG_PTR})"
-        )
+    log = _require_log(fs, table_dir, version)
     segs = list(log["segments"])
     smap = log.get("stats") or {}
     cmap = log.get("delete_counts") or {}

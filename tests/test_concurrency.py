@@ -360,3 +360,240 @@ def test_rebase_carries_zone_maps_and_orphan_sidecar_swept(spark, tmp_path):
     assert removed == [orphan]
     assert not os.path.exists(os.path.join(d2, "_sketch", orphan))
     assert os.path.isdir(os.path.join(d2, "_sketch", seg1))  # live kept
+
+
+# -- race matrix: every retrying append-log mutation ---------------------
+#
+# Races are injected through the module's ``_write_log``: the hook lets
+# a rival writer commit first, so the mutation's own exclusive-create
+# of ``_LOG.<n>`` loses and it must rebase (or refuse) exactly as a
+# real concurrent loser does.
+
+from pyspark.sql import functions as F  # noqa: E402
+
+import cuplyr_spark.sources.connectors as C  # noqa: E402
+from cuplyr_spark.frame import Frame  # noqa: E402
+from cuplyr_spark.sources.connectors import (  # noqa: E402
+    compact_append_snapshot,
+    delete_append_rows,
+    merge_append_dvs,
+    update_append_rows,
+    upsert_append_rows,
+)
+
+
+def _rows(spark, lo, hi, extra=None):
+    df = spark.range(lo, hi).select(
+        F.col("id").cast("long"),
+        (F.col("id") % 10).alias("g"),
+        (F.col("id") * 2).alias("v"),
+    )
+    if extra is not None:
+        df = df.withColumn(*extra)
+    return Frame(df, ())
+
+
+def _mk_log_table(spark, tmp_path, name="t"):
+    """Two segments (ids 0-49, 50-99) at versions 1 and 2."""
+    d = str(tmp_path / name)
+    append_snapshot(_rows(spark, 0, 50), d, batch_id=0)
+    append_snapshot(_rows(spark, 50, 100), d, batch_id=1)
+    return d
+
+
+def _race_once(monkeypatch, rival):
+    """Run ``rival()`` just before the first log commit of the call
+    under test; the rival's own commits pass straight through."""
+    real = C._write_log
+    fired = {}
+
+    def racing(fs, log, prev=None):
+        if not fired:
+            fired["x"] = True
+            rival()
+        return real(fs, log, prev=prev)
+
+    monkeypatch.setattr(C, "_write_log", racing)
+    return fired
+
+
+def _count(spark, d):
+    return read_append_snapshot(spark, d).df.count()
+
+
+def test_update_rebases_over_concurrent_append(spark, tmp_path, monkeypatch):
+    d = _mk_log_table(spark, tmp_path)
+    _race_once(
+        monkeypatch, lambda: append_snapshot(_rows(spark, 100, 105), d)
+    )
+    v, n = update_append_rows(spark, d, {"id": ("<", 10)}, {"v": "v + 1"})
+    assert (v, n) == (4, 10)  # the append took v3
+    df = read_append_snapshot(spark, d).df
+    assert df.count() == 105
+    assert df.filter("id < 10 and v = id * 2 + 1").count() == 10
+
+
+def test_upsert_rebases_over_concurrent_append(spark, tmp_path, monkeypatch):
+    d = _mk_log_table(spark, tmp_path)
+    _race_once(
+        monkeypatch, lambda: append_snapshot(_rows(spark, 100, 105), d)
+    )
+    v, replaced, appended = upsert_append_rows(
+        _rows(spark, 95, 98, ("v", F.lit(-1).cast("long"))), d, "id"
+    )
+    assert (v, replaced, appended) == (4, 3, 3)
+    df = read_append_snapshot(spark, d).df
+    assert df.count() == 105
+    assert sorted(r.id for r in df.filter("v = -1").collect()) == [95, 96, 97]
+
+
+def test_merge_dvs_rebases_over_concurrent_append(spark, tmp_path, monkeypatch):
+    d = _mk_log_table(spark, tmp_path)
+    delete_append_rows(spark, d, {"id": ("<", 3)})
+    delete_append_rows(spark, d, {"id": ("<", 6)})  # v4: two DV dirs
+    _race_once(
+        monkeypatch, lambda: append_snapshot(_rows(spark, 100, 105), d)
+    )
+    assert merge_append_dvs(spark, d) == 6  # the append took v5
+    assert _count(spark, d) == 99
+    dirs = C._read_log(_TableFS(d))["deletes"]
+    assert [len(v) for v in dirs.values()] == [1]
+
+
+def test_upsert_raises_on_concurrent_delete(spark, tmp_path, monkeypatch):
+    d = _mk_log_table(spark, tmp_path)
+    _race_once(
+        monkeypatch, lambda: delete_append_rows(spark, d, {"id": 90})
+    )
+    with pytest.raises(ConcurrentWriteError, match="got concurrent deletes"):
+        upsert_append_rows(
+            _rows(spark, 95, 98, ("v", F.lit(-1).cast("long"))), d, "id"
+        )
+    df = read_append_snapshot(spark, d).df
+    assert df.count() == 99 and df.filter("v = -1").count() == 0
+
+
+def test_merge_dvs_raises_on_concurrent_delete(spark, tmp_path, monkeypatch):
+    d = _mk_log_table(spark, tmp_path)
+    delete_append_rows(spark, d, {"id": ("<", 3)})
+    delete_append_rows(spark, d, {"id": ("<", 6)})
+    _race_once(
+        monkeypatch, lambda: delete_append_rows(spark, d, {"id": 7})
+    )
+    with pytest.raises(ConcurrentWriteError, match="got concurrent deletes"):
+        merge_append_dvs(spark, d)
+    assert _count(spark, d) == 93
+
+
+def test_update_raises_on_concurrent_fold(spark, tmp_path, monkeypatch):
+    d = _mk_log_table(spark, tmp_path)
+    _race_once(
+        monkeypatch,
+        lambda: compact_append_snapshot(spark, d, target_file_bytes=1 << 30),
+    )
+    with pytest.raises(ConcurrentWriteError, match="compacted away"):
+        update_append_rows(spark, d, {"id": ("<", 10)}, {"v": "v + 1"})
+    df = read_append_snapshot(spark, d).df
+    assert df.count() == 100 and df.filter("v <> id * 2").count() == 0
+
+
+def _rival_adds_z_as_string(spark, d):
+    return lambda: append_snapshot(
+        _rows(spark, 100, 101, ("z", F.lit("s"))), d, schema_mode="merge"
+    )
+
+
+def test_update_merge_schema_raises_on_concurrent_type_clash(
+    spark, tmp_path, monkeypatch
+):
+    d = _mk_log_table(spark, tmp_path)
+    _race_once(monkeypatch, _rival_adds_z_as_string(spark, d))
+    with pytest.raises(ConcurrentWriteError, match="different types"):
+        update_append_rows(
+            spark, d, {"id": ("<", 10)}, {"z": "v * 2"}, schema_mode="merge"
+        )
+    schema = dict(map(tuple, C._read_log(_TableFS(d))["schema"]))
+    assert schema["z"] == "string" and _count(spark, d) == 101
+
+
+def test_upsert_merge_schema_raises_on_concurrent_type_clash(
+    spark, tmp_path, monkeypatch
+):
+    d = _mk_log_table(spark, tmp_path)
+    _race_once(monkeypatch, _rival_adds_z_as_string(spark, d))
+    with pytest.raises(ConcurrentWriteError, match="different types"):
+        upsert_append_rows(
+            _rows(spark, 95, 98, ("z", F.col("v") * 2)), d, "id",
+            schema_mode="merge",
+        )
+    schema = dict(map(tuple, C._read_log(_TableFS(d))["schema"]))
+    assert schema["z"] == "string" and _count(spark, d) == 101
+
+
+def _lose_every_race(monkeypatch, d):
+    """Before each of the mutation's commits a rival publishes a real
+    (metadata-only) version at the same number, so every attempt
+    loses. Returns the list of attempted versions."""
+    real = C._write_log
+    tries: list = []
+
+    def losing(fs, log, prev=None):
+        if fs.dir.rstrip("/").endswith(os.path.basename(d)):
+            head = C._read_log(fs)
+            rival = C._log_with_extras(
+                head, head["version"] + 1, list(head["segments"])
+            )
+            real(fs, rival, prev=head)
+            tries.append(log["version"])
+        return real(fs, log, prev=prev)
+
+    monkeypatch.setattr(C, "_write_log", losing)
+    return tries
+
+
+@pytest.mark.parametrize(
+    "op", ["append", "delete", "update", "upsert", "merge_dvs"]
+)
+def test_mutation_gives_up_after_six_lost_races(
+    spark, tmp_path, monkeypatch, op
+):
+    d = _mk_log_table(spark, tmp_path)
+    if op == "merge_dvs":
+        delete_append_rows(spark, d, {"id": ("<", 3)})
+        delete_append_rows(spark, d, {"id": ("<", 6)})
+    before = sorted(map(tuple, read_append_snapshot(spark, d).df.collect()))
+    head = C._read_log(_TableFS(d))["version"]
+    calls = {
+        "append": lambda: append_snapshot(_rows(spark, 100, 105), d),
+        "delete": lambda: delete_append_rows(spark, d, {"id": ("<", 10)}),
+        "update": lambda: update_append_rows(
+            spark, d, {"id": ("<", 10)}, {"v": "v + 1"}
+        ),
+        "upsert": lambda: upsert_append_rows(
+            _rows(spark, 95, 98, ("v", F.lit(-1).cast("long"))), d, "id"
+        ),
+        "merge_dvs": lambda: merge_append_dvs(spark, d),
+    }
+    tries = _lose_every_race(monkeypatch, d)
+    with pytest.raises(ConcurrentWriteError, match="lost 6 straight"):
+        calls[op]()
+    assert tries == [head + 1 + i for i in range(6)]
+    monkeypatch.undo()
+    log = C._read_log(_TableFS(d))
+    assert log["version"] == head + 6  # six rival commits, none of ours
+    after = sorted(map(tuple, read_append_snapshot(spark, d).df.collect()))
+    assert after == before
+
+
+def test_delete_rebase_heals_pointer_of_dead_winner(
+    spark, tmp_path, monkeypatch
+):
+    """The winner of the delete's race wrote ``_LOG.3`` and died before
+    its pointer swap: the delete rebases to v4 and the pointer lands on
+    v4, not on the dead winner's v3."""
+    d = _mk_log_table(spark, tmp_path)
+    _race_once(monkeypatch, lambda: _fake_competing_log(d, 3))
+    v, n = delete_append_rows(spark, d, {"id": ("<", 10)})
+    assert (v, n) == (4, 10)
+    assert _TableFS(d).read_text(C._LOG_PTR).strip() == "4"
+    assert _count(spark, d) == 90
