@@ -130,8 +130,11 @@ class ConcurrentWriteError(RuntimeError):
 # `If-None-Match: *`) can commit WITHOUT the Hadoop rename dance,
 # whose S3A copy+delete is not atomic. Register one per scheme and
 # every log/commit-record create routes through it; unregistered
-# schemes keep the rename path with its documented caveat.
+# schemes keep the rename path with its documented caveat. Registration
+# swaps in a new dict under the lock, so a commit on another thread
+# reads either the old mapping or the new one, never a half-edit.
 _EXCLUSIVE_PUT_BACKENDS: dict = {}
+_EXCLUSIVE_PUT_LOCK = threading.Lock()
 
 
 def register_exclusive_put(scheme: str, fn) -> None:
@@ -141,10 +144,14 @@ def register_exclusive_put(scheme: str, fn) -> None:
     ATOMIC against concurrent puts of the same key; a check-then-put
     emulation reintroduces exactly the race this hook closes. Pass
     ``None`` to unregister."""
-    if fn is None:
-        _EXCLUSIVE_PUT_BACKENDS.pop(scheme.lower(), None)
-    else:
-        _EXCLUSIVE_PUT_BACKENDS[scheme.lower()] = fn
+    global _EXCLUSIVE_PUT_BACKENDS
+    with _EXCLUSIVE_PUT_LOCK:
+        backends = dict(_EXCLUSIVE_PUT_BACKENDS)
+        if fn is None:
+            backends.pop(scheme.lower(), None)
+        else:
+            backends[scheme.lower()] = fn
+        _EXCLUSIVE_PUT_BACKENDS = backends
 
 
 def http_if_none_match_put(url: str, text: str, timeout: float = 30.0) -> bool:
@@ -5094,11 +5101,18 @@ _IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
 def _word_in_predicates(word: str, exps) -> bool:
     """Conservative reference check: does any expectation predicate
-    string mention ``word`` as a whole identifier?"""
+    string mention ``word`` as a whole identifier? The log stores each
+    spec as ``[predicate, action]`` (``_normalize_expectations``); a
+    bare string or ``{"predicate": ...}`` dict is read too."""
     pat = re.compile(rf"(?<![A-Za-z0-9_`]){re.escape(word)}(?![A-Za-z0-9_`])")
     for spec in (exps or {}).values():
-        pred = spec if isinstance(spec, str) else (spec or {}).get("predicate", "")
-        if pat.search(str(pred) or ""):
+        if isinstance(spec, (list, tuple)):
+            pred = spec[0] if spec else ""
+        elif isinstance(spec, dict):
+            pred = spec.get("predicate", "")
+        else:
+            pred = spec
+        if pat.search(str(pred or "")):
             return True
     return False
 

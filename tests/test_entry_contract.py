@@ -5,6 +5,8 @@ sf0.01; this keeps the contract importable and runnable from pytest.)
 """
 
 import sys
+import threading
+import time
 
 import pytest
 
@@ -59,3 +61,39 @@ def test_bench_cache_hit_skips_the_read(spark, monkeypatch):
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     finally:
         first.df.unpersist()
+
+
+def test_bench_cache_racing_loads_share_one_frame(spark, monkeypatch):
+    """Threads racing ``_t`` on one uncached key read the parquet once
+    and all get the same cached Frame (the check-then-insert is held
+    under the cache lock, not repeated per thread)."""
+    monkeypatch.setenv("CUPLYR_BENCH_CACHED", "1")
+    monkeypatch.setattr(em, "_TABLE_CACHE", {})
+    real_read, reads = em.read_parquet, []
+
+    def slow_read(*args, **kwargs):
+        reads.append(1)
+        time.sleep(0.2)  # widen the window between miss and insert
+        return real_read(*args, **kwargs)
+
+    monkeypatch.setattr(em, "read_parquet", slow_read)
+    n = 6
+    start, got = threading.Barrier(n), [None] * n
+
+    def worker(i):
+        start.wait()
+        got[i] = em._t(spark, SF, "region")
+
+    threads = [threading.Thread(target=worker, args=(i,)) for i in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    try:
+        assert len(reads) == 1
+        assert len(em._TABLE_CACHE) == 1
+        cached = em._TABLE_CACHE[(SF, "region")]
+        assert all(f is cached for f in got)
+    finally:
+        for f in {id(f): f for f in got if f is not None}.values():
+            f.df.unpersist()

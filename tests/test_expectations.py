@@ -18,7 +18,9 @@ from cuplyr_spark.sources.connectors import (
     append_snapshot,
     compact_append_snapshot,
     delete_append_rows,
+    drop_append_column,
     read_append_snapshot,
+    rename_append_column,
     set_append_expectations,
     update_append_rows,
     upsert_append_rows,
@@ -196,3 +198,29 @@ def test_schema_evolution_pred_on_omitted_column(spark, tmp_path):
     slim = Frame(spark.createDataFrame([(2, "b")], "id int, cat string"), ())
     append_snapshot(slim, d, schema_mode="merge")  # no price column
     assert len(_rows(spark, d)) == 2
+
+
+def test_rename_and_drop_respect_expectations(spark, tmp_path):
+    """The log stores each spec as ``[predicate, action]``: renaming or
+    dropping an unrelated column goes through, touching one a predicate
+    names is refused."""
+    d = str(tmp_path / "t")
+    append_snapshot(
+        _mk(spark, [(1, 1.0, "a")]), d,
+        expectations={"positive": ("price > 0", "fail")},
+    )
+    rename_append_column(d, "cat", "category", spark)
+    assert read_append_snapshot(spark, d).df.columns == [
+        "id", "price", "category"]
+    for op in (
+        lambda: rename_append_column(d, "price", "cost", spark),
+        lambda: drop_append_column(d, "price", spark),
+    ):
+        with pytest.raises(ValueError, match="quality expectations"):
+            op()
+    drop_append_column(d, "category", spark)
+    assert read_append_snapshot(spark, d).df.columns == ["id", "price"]
+    with pytest.raises(ValueError, match="positive: 1 row"):
+        append_snapshot(
+            Frame(spark.createDataFrame([(2, -1.0)], "id int, price double"),
+                  ()), d)
