@@ -57,6 +57,7 @@ import re
 import threading
 import warnings
 from collections.abc import Mapping as _Mapping
+from typing import NamedTuple
 
 from pyspark.sql import SparkSession
 
@@ -1224,9 +1225,10 @@ def _log_delta(prev: dict, new: dict) -> dict | None:
         if k not in skip and _changed(prev.get(k, _MISS), v)
     }
     if "restored_from" in new:
-        # always explicit in the raw record: _window_restores probes
-        # records without reconstruction, and a restore-after-restore
-        # to the same target must not compress away
+        # always explicit in the raw record: _walk_window reads it off
+        # the retained records of a partly vacuumed window, and a
+        # restore-after-restore to the same target must not compress
+        # away
         sets["restored_from"] = new["restored_from"]
     if "ts" in new:
         # always explicit too: append_version_as_of probes raw records
@@ -3762,6 +3764,18 @@ def _dv_dirs_split(log: dict, segs) -> tuple[list[str], list[str]]:
     )
 
 
+def _read_dvs(spark, fs: _TableFS, dirs):
+    """Union-read deletion-vector directories of ONE layout at the
+    fixed schema :func:`_write_dv` gives that layout — a read that
+    inferred it from the footers would launch a Spark job per call."""
+    ddl = (
+        "seg string, file string, part string, pos bigint"
+        if _dv_is_v2(dirs[0])
+        else "seg string, file string, pos bigint"
+    )
+    return spark.read.schema(ddl).parquet(*[fs.join(d) for d in dirs])
+
+
 def _dv_frames(spark, fs: _TableFS, log: dict, segs):
     """Union-read the deletion-vector parquets covering ``segs`` (each
     a tiny table of row addresses), restricted to those segments and
@@ -3777,18 +3791,18 @@ def _dv_frames(spark, fs: _TableFS, log: dict, segs):
     def load(dirs):
         if not dirs:
             return None
-        df = spark.read.parquet(*[fs.join(d) for d in dirs])
-        return df.filter(F.col("seg").isin(covered))
+        return _read_dvs(spark, fs, dirs).filter(F.col("seg").isin(covered))
 
     return load(legacy_dirs), load(v2_dirs)
 
 
-def _anti_dv(df, dvs):
-    """LEFT ANTI join a position-addressed scan against its deletion
-    vectors on the row address — (file-basename, pos) for
-    unpartitioned scans, plus the partition composite for v2
-    partitioned DVs, or the legacy path-within-segment for old-layout
-    files. The DV side is FORCE-broadcast (size-guarded): AQE's 10 MB
+def _dv_join(df, dv, legacy: bool, how: str, what: str):
+    """Join a position-addressed scan against ONE deletion-vector
+    frame on the row address: (file-basename, pos) for unpartitioned
+    scans, plus the partition composite for v2 partitioned DVs, or the
+    legacy path-within-segment for old-layout files. ``left_anti``
+    applies the DV, ``left_semi`` reads back the rows it addresses.
+    The DV side is FORCE-broadcast (size-guarded): AQE's 10 MB
     autobroadcast threshold is far below a realistic DV (a 1% delete
     of 25M rows is ~50 MB of addresses), and without the hint the
     anti-join degrades to a sort-merge SHUFFLE OF THE WHOLE FACT
@@ -3808,34 +3822,29 @@ def _anti_dv(df, dvs):
 
     from cuplyr_spark.frame import broadcast_guarded
 
+    # legacy DVs address by path-within-segment: unpartitioned tables
+    # wrote the bare basename there (== _DV_FILE), while partitioned
+    # scans carry the regex-derived _DV_RELP
+    key = _DV_RELP if legacy and _DV_RELP in df.columns else _DV_FILE
+    on = [
+        F.col(f"l.{key}") == F.col("r.file"),
+        F.col(f"l.{_DV_POS}") == F.col("r.pos"),
+    ]
+    if not legacy and _DV_PART in df.columns:
+        on.append(F.col(f"l.{_DV_PART}") == F.col("r.part"))
+    return df.alias("l").join(
+        broadcast_guarded(dv, what=what).alias("r"), on=on, how=how
+    )
+
+
+def _anti_dv(df, dvs):
+    """Apply ``(legacy_df | None, v2_df | None)`` deletion vectors to
+    a position-addressed scan (:func:`_dv_join`, ``left_anti``)."""
     legacy, v2 = dvs
     if v2 is not None:
-        on = [
-            F.col(f"l.{_DV_FILE}") == F.col("r.file"),
-            F.col(f"l.{_DV_POS}") == F.col("r.pos"),
-        ]
-        if _DV_PART in df.columns:
-            on.append(F.col(f"l.{_DV_PART}") == F.col("r.part"))
-        df = df.alias("l").join(
-            broadcast_guarded(v2, what="deletion-vector apply").alias("r"),
-            on=on,
-            how="left_anti",
-        )
+        df = _dv_join(df, v2, False, "left_anti", "deletion-vector apply")
     if legacy is not None:
-        # legacy DVs address by path-within-segment: unpartitioned
-        # tables wrote the bare basename there (== _DV_FILE), while
-        # partitioned scans carry the regex-derived _DV_RELP
-        key = _DV_RELP if _DV_RELP in df.columns else _DV_FILE
-        df = df.alias("l").join(
-            broadcast_guarded(legacy, what="deletion-vector apply").alias(
-                "r"
-            ),
-            on=[
-                F.col(f"l.{key}") == F.col("r.file"),
-                F.col(f"l.{_DV_POS}") == F.col("r.pos"),
-            ],
-            how="left_anti",
-        )
+        df = _dv_join(df, legacy, True, "left_anti", "deletion-vector apply")
     return df
 
 
@@ -4028,19 +4037,20 @@ def _partitioned_scan_groups(spark, fs: _TableFS, log: dict, segs, fmap):
             )
 
 
-def _scan_with_dv(spark, fs: _TableFS, log: dict, segs, fmap=None):
-    """Scan ``segs`` with the row-address columns attached and every
-    EXISTING deletion vector already applied — the input the row-level
-    write paths (:func:`delete_append_rows` /
-    :func:`update_append_rows`) start from, so a second delete never
-    re-marks rows an earlier one already removed (which keeps the
-    manifest's ``delete_counts`` exactly additive). ``fmap`` (from
-    :func:`_file_prune`) narrows clustered segments to the files whose
-    recorded key ranges can match — the probe reads file-grain bytes,
-    not segment-grain."""
+def _addressed_scan(spark, fs: _TableFS, log: dict, segs, fmap=None,
+                    legacy: bool = False):
+    """Scan ``segs`` at ``log``'s schema (rename eras aliased back to
+    the head names) with the row-address columns attached and NO
+    deletion vector applied — the one addressed scan behind the
+    row-level write probes (:func:`_scan_with_dv`), the typed change
+    feed's inserts (``_DV_SEG`` keys each row's commit version) and
+    its DV read-back (semi-joined against the new addresses).
+    ``legacy`` attaches the old-layout path column partitioned scans
+    join legacy ``dv=`` files on. ``fmap`` (from :func:`_file_prune`)
+    narrows clustered segments to the files whose recorded key ranges
+    can match."""
     pby = log.get("partition_by") or []
     schema = log.get("schema")
-    legacy = _has_legacy_dvs(log, segs)
     renames = log.get("renames") or []
     if not pby:
         parts = []
@@ -4059,9 +4069,6 @@ def _scan_with_dv(spark, fs: _TableFS, log: dict, segs, fmap=None):
             for head, src in aliases.items():
                 part = part.withColumnRenamed(src, head)
             parts.append(part)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
     else:
         conf = spark.conf
         key = "spark.sql.sources.partitionColumnTypeInference.enabled"
@@ -4081,9 +4088,22 @@ def _scan_with_dv(spark, fs: _TableFS, log: dict, segs, fmap=None):
             ]
         finally:
             conf.set(key, prev)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
+    df = parts[0]
+    for p in parts[1:]:
+        df = df.unionByName(p)
+    return df
+
+
+def _scan_with_dv(spark, fs: _TableFS, log: dict, segs, fmap=None):
+    """:func:`_addressed_scan` with every EXISTING deletion vector
+    already applied — the input the row-level write paths
+    (:func:`delete_append_rows` / :func:`update_append_rows`) start
+    from, so a second delete never re-marks rows an earlier one
+    already removed (which keeps the manifest's ``delete_counts``
+    exactly additive). ``fmap`` narrows the probe to file grain."""
+    df = _addressed_scan(
+        spark, fs, log, segs, fmap, legacy=_has_legacy_dvs(log, segs)
+    )
     return _anti_dv(df, _dv_frames(spark, fs, log, segs))
 
 
@@ -5687,6 +5707,268 @@ def set_append_expectations(
     return _write_log(fs, log, prev=cur)
 
 
+def _log_for(log: dict, segs) -> dict:
+    """``log`` cut down to ``segs``: its table-level fields (schema,
+    layout, renames, specs) plus each segment-keyed family's entries
+    for those segments only — what a later scan of ``segs`` reads, at
+    a size ∝ ``segs`` instead of the table."""
+    out = {
+        k: v
+        for k, v in log.items()
+        if k not in _DELTA_MAP_KEYS and k != "segments"
+    }
+    out["segments"] = list(segs)
+    for fam in _DELTA_MAP_KEYS:
+        m = log.get(fam)
+        sub = {s: m[s] for s in segs if s in m} if m else None
+        if sub:
+            out[fam] = sub
+    return out
+
+
+class _Step(NamedTuple):
+    """One version of a change-feed window, read from the log alone."""
+
+    version: int
+    # raw ``seg=`` segments the version added, and the version's state
+    # cut to them (their partition and zone maps as added)
+    inserts: list
+    log: dict
+    # non-maintenance DV dirs the version added -> their owner
+    # segments, from the log's ``deletes`` map
+    dvs: dict
+    # segments tombstoned whole (count rose with no new DV file), and
+    # the previous state cut to them: their deleted rows are the rows
+    # still live there
+    tombstoned: list
+    prev: dict | None
+    has_deletes: bool  # some segment's delete_counts rose
+    restored_from: int | None
+
+
+class _Window(NamedTuple):
+    """The change-feed window ``(since, end]`` as :func:`_walk_window`
+    read it."""
+
+    since: int
+    cur: dict  # the state at ``end``
+    steps: list
+    # (version, restored_from) pairs; read off the retained records
+    # when a vacuumed one stopped the walk
+    restores: list
+    # the vacuumed-record error that stopped the walk (steps are then
+    # empty and every projection raises it), else None
+    missing: FileNotFoundError | None
+    renamed: bool  # the rename list differs between since and end
+    # window segments dropped before ``end`` -> (DV dirs, delete
+    # count) at the last version they were live, or None when a
+    # restore dropped them (no row of theirs is in the table then)
+    gone: dict
+    # version of a fold that absorbed window segments and then took
+    # deletes by ``end`` (the first such fold), else None
+    fold_deleted: int | None
+
+    @property
+    def has_deletes(self) -> bool:
+        return any(st.has_deletes for st in self.steps)
+
+
+def _walk_window(fs: _TableFS, table_dir: str, since: int,
+                 version: int | None = None) -> _Window:
+    """THE change-feed walk: every reader of the log window ``(since,
+    version]`` — ``read_append_changes``, ``read_append_cdf``, both
+    tails and the view refresh — is a projection of this one
+    metadata-only pass. It reconstructs the state at ``since`` once,
+    rolls the retained ``_LOG.<k>`` records forward
+    (:func:`_iter_log_states`) and diffs consecutive states into one
+    :class:`_Step` per version. Compaction folds, DV maintenance
+    rewrites (``dvm=``/``dvm2=``) and segment-preserving republishes
+    contribute no inserts or DVs (``dataChange=false``).
+
+    A vacuumed record stops the roll (``missing``); the walk then still
+    reads ``restored_from`` off every retained record, so a consumer
+    whose partly vacuumed window crosses a retained restore takes its
+    restore path instead of failing (raw records carry the field
+    explicitly, see :func:`_log_delta`)."""
+    if since < 0:
+        raise ValueError(f"since_version {since} is negative")
+    cur = _require_log(fs, table_dir, version)
+    end = cur["version"]
+    if since > end:
+        raise ValueError(
+            f"since_version {since} is past log version {end}"
+        )
+    steps: list = []
+    gone: dict = {}
+    taint: dict = {}  # fold segment -> version of the fold
+    window: set = set()
+    fold_deleted = None
+    renamed = False
+    try:
+        states = _iter_log_states(fs, max(since, 1), end)
+        prev = next(states)[1] if since > 0 else {}
+        renamed = (prev.get("renames") or []) != (cur.get("renames") or [])
+        psegs = set(prev.get("segments") or ())
+        for k, log in states:
+            segs = log["segments"]
+            live = set(segs)
+            added = [s for s in segs if s not in psegs]
+            inserts = [s for s in added if s.startswith("seg=")]
+            pd, sd = prev.get("deletes") or {}, log.get("deletes") or {}
+            pc = prev.get("delete_counts") or {}
+            sc = log.get("delete_counts") or {}
+            rose = [] if sc is pc else [
+                s for s, n in sc.items() if int(n) > int(pc.get(s, 0))
+            ]
+            dvs: dict = {}
+            if sd is not pd:
+                changed = [
+                    s for s, ds in sd.items() if _changed(pd.get(s, _MISS), ds)
+                ]
+                fresh = {d for s in changed for d in sd[s]}
+                if fresh:
+                    fresh -= {d for ds in pd.values() for d in ds}
+                for d in sorted(fresh):
+                    if not _dv_is_maintenance(d):
+                        dvs[d] = sorted(s for s in changed if d in sd[s])
+            tomb = sorted(
+                s for s in rose
+                if s in psegs and sd.get(s, []) == pd.get(s, [])
+            )
+            rf = log.get("restored_from")
+            # apply_deletes bookkeeping: a window segment's DVs as of
+            # the last version it was live, and the folds that took in
+            # window rows (a later delete there has no way back to them)
+            absorbed = False
+            for s in psegs - live:
+                if s in window:
+                    gone[s] = None if rf is not None else (
+                        list(pd.get(s) or ()), int(pc.get(s, 0))
+                    )
+                absorbed = absorbed or s in window or s in taint
+            for s in inserts:
+                gone.pop(s, None)  # re-added by a restore
+            window.update(inserts)
+            if absorbed and rf is None:
+                taint.update((s, k) for s in added if s.startswith("fold="))
+            if fold_deleted is None:
+                fold_deleted = min(
+                    (taint[s] for s in rose if s in taint), default=None
+                )
+            steps.append(_Step(
+                k, inserts, _log_for(log, inserts), dvs, tomb,
+                _log_for(prev, tomb) if tomb else None, bool(rose), rf,
+            ))
+            prev, psegs = log, live
+    except FileNotFoundError as e:
+        restores = []
+        for k in range(since + 1, end + 1):
+            try:
+                rec = _read_log_rec(fs, k)
+            except FileNotFoundError:
+                continue
+            # top-level in full form, inside "set" in delta form
+            rf = rec.get("restored_from")
+            if rf is None:
+                rf = (rec.get("set") or {}).get("restored_from")
+            if rf is not None:
+                restores.append((k, rf))
+        return _Window(since, cur, [], restores, e, renamed, {}, None)
+    restores = [
+        (st.version, st.restored_from)
+        for st in steps
+        if st.restored_from is not None
+    ]
+    return _Window(
+        since, cur, steps, restores, None, renamed, gone, fold_deleted
+    )
+
+
+def _window_log(win: _Window) -> dict:
+    """The end state's table-level fields with each window segment's
+    partition and zone maps from the version that ADDED it: a later
+    fold drops folded segments from the current maps, and losing them
+    would degrade a window spanning the fold from manifest-level
+    pruning to a listing of every segment in the window. No deletion
+    vectors: the rows as appended."""
+    log = _log_for(win.cur, ())
+    for fam in ("partitions", "stats", "file_stats"):
+        merged: dict = {}
+        for st in win.steps:
+            merged.update(st.log.get(fam) or {})
+        if merged:
+            log[fam] = merged
+    return log
+
+
+def _changes_frame(
+    spark, fs: _TableFS, win: _Window, partition_filter=None,
+    stats_filter=None, apply_deletes: bool = False, where=None,
+) -> Frame:
+    """The insert projection of a window walk — see
+    :func:`read_append_changes`."""
+    if win.missing is not None:
+        raise win.missing
+    cur = win.cur
+    segs = [s for st in win.steps for s in st.inserts]
+    if not segs:
+        schema = cur.get("schema")
+        if schema is not None:
+            return Frame(spark.createDataFrame([], _schema_ddl(schema)), ())
+        return Frame(
+            read_append_snapshot(spark, fs.dir, cur["version"]).df.limit(0),
+            (),
+        )
+    derived_any = False
+    if where is not None:
+        # same derivation as read_append_snapshot(where=): implied
+        # conjuncts prune through zone maps / the partition map, the
+        # full predicate (applied below) guards exactness
+        if stats_filter is None:
+            stats_filter = _derive_stats_filter(where, cur.get("schema"))
+            derived_any = derived_any or stats_filter is not None
+        if partition_filter is None:
+            partition_filter = _derive_pfilter(
+                where, cur.get("partition_by"), cur.get("schema")
+            )
+            derived_any = derived_any or partition_filter is not None
+    log = _window_log(win)
+    if apply_deletes:
+        if win.fold_deleted is not None:
+            raise ValueError(
+                "read_append_changes(apply_deletes=True): rows of this "
+                "window were folded by the compaction at version "
+                f"{win.fold_deleted}, and that fold took deletes by "
+                f"version {cur['version']} — the log keeps no fold "
+                "lineage to map them back to the window's rows; read "
+                "read_append_snapshot instead"
+            )
+        # each window segment's DVs as of the last version it was
+        # live: the end state for live ones, the walk's record for
+        # segments a fold or dead-segment drop took out; segments a
+        # restore dropped hold no live row
+        gone = {s: g for s, g in win.gone.items() if g is not None}
+        segs = [s for s in segs if s not in win.gone or s in gone]
+        live = _log_for(cur, segs)
+        dmap = {s: d for s, (d, _) in gone.items() if d}
+        cmap = {s: c for s, (_, c) in gone.items() if c}
+        dmap.update(live.get("deletes") or {})
+        cmap.update(live.get("delete_counts") or {})
+        log["deletes"], log["delete_counts"] = dmap, cmap
+    try:
+        out = Frame(
+            _read_segments(
+                spark, fs, log, segs, partition_filter, stats_filter
+            ),
+            (),
+        )
+    except ValueError:
+        if not derived_any:
+            raise  # explicit caller filters: surface the misuse
+        out = Frame(_read_segments(spark, fs, log, segs), ())  # full scan
+    return out.filter(where) if where is not None else out
+
+
 def read_append_changes(
     spark: SparkSession,
     table_dir: str,
@@ -5708,12 +5990,29 @@ def read_append_changes(
     Exact across compaction, the Delta CDF way: rather than diffing
     two snapshots (which would lose a post-``since`` segment folded
     before the read, and re-surface pre-``since`` rows inside the
-    fold), this walks the retained ``_LOG.<k>`` manifests in
-    ``(since_version, version]`` and unions each version's NEWLY ADDED
-    raw ``seg=`` segments. Compaction rewrites are ``fold=`` segments —
-    the ``dataChange=false`` analog — and are skipped: their rows were
-    all visible in earlier versions. ``reset_append_watermark``'s
-    segment-preserving republish adds nothing and reads as empty.
+    fold), this is the insert projection of the window walk
+    (:func:`_walk_window` over the retained ``_LOG.<k>`` manifests in
+    ``(since_version, version]``): the union of each version's NEWLY
+    ADDED raw ``seg=`` segments, pruned by the partition and zone maps
+    recorded when each was added. Compaction rewrites are ``fold=``
+    segments — the ``dataChange=false`` analog — and are skipped: their
+    rows were all visible in earlier versions.
+    ``reset_append_watermark``'s segment-preserving republish adds
+    nothing and reads as empty. ``since_version`` must be ``>= 0``.
+
+    ``apply_deletes``: by default rows come AS APPENDED — later
+    row-level deletes don't rewrite change history (the Delta CDF
+    model, where a delete is its own change event; see
+    :func:`read_append_cdf`). ``apply_deletes=True`` returns only the
+    window's rows still live at ``version``: each window segment is
+    read through its deletion vectors as of the LAST version it was
+    live — the end version, or the version before a compaction folded
+    it (the fold kept only its live rows, so those DVs cover every row
+    deleted before the fold); a segment a restore dropped contributes
+    nothing. A delete that lands on such a fold afterwards cannot be
+    mapped back (the log keeps no fold lineage), so that window raises
+    ``ValueError`` naming the fold version — read
+    ``read_append_snapshot`` instead.
 
     Retention contract (same as Delta CDF): the walk needs the log
     manifests in the window and the raw segments they added — run
@@ -5730,100 +6029,10 @@ def read_append_changes(
     ``read + filter`` semantics at pruned-IO cost over just the
     window's new segments."""
     fs = _TableFS(table_dir, spark)
-    cur = _require_log(fs, table_dir, version)
-    end = cur["version"]
-    if since_version > end:
-        raise ValueError(
-            f"since_version {since_version} is past log version {end}"
-        )
-    new_segs: list[str] = []
-    # partition maps / zone maps come from the log version that ADDED
-    # each segment: a LATER fold drops folded segments from the current
-    # log's maps, and losing them here would silently degrade a
-    # CDF window spanning the fold from manifest-level pruning to a
-    # full listing of every segment in the window
-    added_pmap: dict = {}
-    added_stats: dict = {}
-    added_fstats: dict = {}
-    prev = set(_read_log(fs, since_version)["segments"]) if since_version > 0 else set()
-    # one reconstruction + rolled deltas — raises if vacuumed past
-    # the reader's lag
-    for k, log_k in _iter_log_states(fs, since_version + 1, end):
-        added = [
-            s
-            for s in log_k["segments"]
-            if s not in prev and s.startswith("seg=")
-        ]
-        for s in added:
-            rel = (log_k.get("partitions") or {}).get(s)
-            if rel is not None:
-                added_pmap[s] = rel
-            st = (log_k.get("stats") or {}).get(s)
-            if st is not None:
-                added_stats[s] = st
-            fst = (log_k.get("file_stats") or {}).get(s)
-            if fst is not None:
-                added_fstats[s] = fst
-        new_segs.extend(added)
-        prev = set(log_k["segments"])
-    if not new_segs:
-        schema = cur.get("schema")
-        if schema is not None:
-            from pyspark.sql import types as _T
-
-            fields = [
-                _T.StructField(name, _T._parse_datatype_string(dt))
-                for name, dt in schema
-            ]
-            return Frame(
-                spark.createDataFrame([], _T.StructType(fields)), ()
-            )
-        return Frame(read_append_snapshot(spark, table_dir, end).df.limit(0), ())
-    derived_any = False
-    if where is not None:
-        # same derivation as read_append_snapshot(where=): implied
-        # conjuncts prune through zone maps / the partition map, the
-        # full predicate (applied below) guards exactness
-        if stats_filter is None:
-            stats_filter = _derive_stats_filter(where, cur.get("schema"))
-            derived_any = derived_any or stats_filter is not None
-        if partition_filter is None:
-            partition_filter = _derive_pfilter(
-                where, cur.get("partition_by"), cur.get("schema")
-            )
-            derived_any = derived_any or partition_filter is not None
-    synth = dict(cur)
-    synth["partitions"] = {**(cur.get("partitions") or {}), **added_pmap}
-    synth["stats"] = {**(cur.get("stats") or {}), **added_stats}
-    if added_fstats or cur.get("file_stats"):
-        synth["file_stats"] = {
-            **(cur.get("file_stats") or {}), **added_fstats,
-        }
-    if not apply_deletes:
-        # CDF default: rows AS APPENDED — later row-level deletes don't
-        # rewrite change history (the Delta CDF model, where a delete
-        # is its own change event). apply_deletes=True instead filters
-        # the window through the END version's deletion vectors, for
-        # consumers that want "new rows still live as of `version`".
-        # BOTH maps must go: leaving delete_counts would let the
-        # fully-deleted-segment skip drop a window segment whose rows
-        # this mode promises to return.
-        synth["deletes"] = {}
-        synth["delete_counts"] = {}
-    try:
-        out = Frame(
-            _read_segments(
-                spark, fs, synth, new_segs, partition_filter, stats_filter
-            ),
-            (),
-        )
-    except ValueError:
-        if not derived_any:
-            raise  # explicit caller filters: surface the misuse
-        out = Frame(  # derivation mismatched the stats: full scan
-            _read_segments(spark, fs, synth, new_segs), ()
-        )
-    return out.filter(where) if where is not None else out
+    return _changes_frame(
+        spark, fs, _walk_window(fs, table_dir, since_version, version),
+        partition_filter, stats_filter, apply_deletes, where,
+    )
 
 
 def join_prune_filter(
@@ -6157,7 +6366,7 @@ def _write_dv(spark, fs: _TableFS, cur: dict, matches, pby,
         out.write.mode("errorifexists").parquet(fs.join(dv_rel))
         counts = {
             r["seg"]: r["n"]
-            for r in spark.read.parquet(fs.join(dv_rel))
+            for r in _read_dvs(spark, fs, [dv_rel])
             .groupBy("seg")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
@@ -6510,6 +6719,99 @@ def update_append_rows(
     return v, int(sum(counts.values()))
 
 
+def _cdf_frame(spark, fs: _TableFS, win: _Window) -> Frame:
+    """The typed projection of a window walk — see
+    :func:`read_append_cdf`."""
+    from pyspark.sql import functions as F
+
+    cur = win.cur
+    if win.renamed:
+        raise ValueError(
+            f"read_append_cdf: the window ({win.since}, "
+            f"{cur['version']}] crosses a column rename — a typed "
+            "change feed cannot union two column-name eras; consumers "
+            "must re-bootstrap from the snapshot at the rename "
+            "boundary (read_append_changes handles renamed windows "
+            "via the era-aware scan if raw inserts are enough)"
+        )
+    if win.missing is not None:
+        raise win.missing
+    meta = (_DV_SEG, _DV_FILE, _DV_POS, _DV_PART, _DV_RELP)
+
+    def typed(df, change, version):
+        return df.withColumn("_change_type", F.lit(change)).withColumn(
+            "_commit_version", version.cast("long")
+        ).drop(*meta)
+
+    # every insert of the window in one addressed scan, rows AS
+    # APPENDED (no DVs); _commit_version from a segment->version map
+    # over the scan's segment column (a literal when one version added
+    # them all). A segment a restore re-adds is inserted again, by a
+    # second scan.
+    scans: list[dict] = []
+    for st in win.steps:
+        for s in st.inserts:
+            born = next((b for b in scans if s not in b), None)
+            if born is None:
+                scans.append(born := {})
+            born[s] = st.version
+    parts = []
+    for born in scans:
+        tags = set(born.values())
+        v = F.lit(tags.pop()) if len(tags) == 1 else F.element_at(
+            F.create_map(*[F.lit(x) for kv in born.items() for x in kv]),
+            F.col(_DV_SEG),
+        )
+        parts.append(typed(
+            _addressed_scan(spark, fs, _window_log(win), list(born)),
+            "insert", v,
+        ))
+    for st in win.steps:
+        k = F.lit(st.version)
+        for legacy in (True, False):
+            dirs = [d for d in st.dvs if _dv_is_v2(d) != legacy]
+            if not dirs:
+                continue
+            # the addressed rows, read back from their immutable owner
+            # segments WITHOUT DV application (the rows being deleted
+            # are by definition DV-marked at >= k)
+            addr = _read_dvs(spark, fs, dirs)
+            owners = sorted({s for d in dirs for s in st.dvs[d]})
+            raw = _addressed_scan(spark, fs, st.log, owners, legacy=legacy)
+            parts.append(typed(
+                _dv_join(raw, addr, legacy, "left_semi",
+                         "CDF delete addresses"),
+                "delete", k,
+            ))
+        if st.tombstoned:
+            # counts rose with no new DV file: the version tombstoned
+            # these segments whole, so their deleted rows are exactly
+            # the rows still live at k-1
+            parts.append(typed(
+                _read_segments(spark, fs, st.prev, st.tombstoned),
+                "delete", k,
+            ))
+    if not parts:
+        ddl = _schema_ddl(cur.get("schema") or [])
+        ddl += ", `_change_type` string, `_commit_version` long"
+        return Frame(spark.createDataFrame([], ddl), ())
+    out = parts[0]
+    for p in parts[1:]:
+        # allowMissingColumns: a window spanning an additive schema
+        # evolution null-fills the new column on pre-evolution rows
+        out = out.unionByName(p, allowMissingColumns=True)
+    schema = cur.get("schema")
+    if schema is not None:
+        # pin column ORDER to the end version's schema (the union
+        # appends evolution columns wherever the first part left off)
+        out = out.select(
+            *[n for n, _ in schema if n in out.columns],
+            "_change_type",
+            "_commit_version",
+        )
+    return Frame(out, ())
+
+
 def read_append_cdf(
     spark: SparkSession,
     table_dir: str,
@@ -6531,314 +6833,25 @@ def read_append_cdf(
     appears as its MoR decomposition — ``delete`` of the old copies +
     ``insert`` of the new — in one version; compaction folds and DV
     maintenance rewrites (``dvm=``/``dvm2=``) emit nothing
-    (``dataChange=false``). Scan count: CONTIGUOUS insert-only
-    versions of an unpartitioned table batch into ONE multi-path scan
-    (``_commit_version`` tagged through a segment→version map over
-    the scan's ``_metadata`` — per-row work only on the window's
-    changed rows), so a wide insert-heavy window costs one scan plus
-    one per delete-carrying version; partitioned tables scan
-    per-version (their read is per-segment either way). CDF windows
-    are incremental-consumer sized by construction; for a full-table
-    bootstrap use ``read_append_snapshot`` instead."""
-    from pyspark.sql import functions as F
+    (``dataChange=false``). Everything comes from the window walk
+    (:func:`_walk_window`), which reads the log alone: a DV file's
+    owner segments are the ones the log's ``deletes`` map lists it
+    under, so building the frame launches no Spark job.
 
+    Scan count: EVERY insert of the window, partitioned or not, is one
+    addressed scan (one relation per rename era and ``seg``/``fold``
+    dir kind — one in practice; ``_commit_version`` is tagged through
+    a segment→version map over the scan's segment column, per-row work
+    only on the window's inserted rows). Each delete-carrying version
+    adds one scan of its DV owners per DV layout, and each tombstoning
+    version one scan of the tombstoned segments. CDF windows are
+    incremental-consumer sized by construction; for a full-table
+    bootstrap use ``read_append_snapshot`` instead.
+    ``since_version`` must be ``>= 0``."""
     fs = _TableFS(table_dir, spark)
-    cur = _require_log(fs, table_dir, version)
-    end = cur["version"]
-    if since_version > end:
-        raise ValueError(
-            f"since_version {since_version} is past log version {end}"
-        )
-    prev = _read_log(fs, since_version) if since_version > 0 else None
-    # list compare, not length: a restore inside the window can swap
-    # one rename era for another at equal length
-    if ((prev or {}).get("renames") or []) != (cur.get("renames") or []):
-        raise ValueError(
-            f"read_append_cdf: the window ({since_version}, "
-            f"{cur['version']}] crosses a column rename — a typed "
-            "change feed cannot union two column-name eras; consumers "
-            "must re-bootstrap from the snapshot at the rename "
-            "boundary (read_append_changes handles renamed windows "
-            "via the era-aware scan if raw inserts are enough)"
-        )
-    prev_segs = set(prev["segments"]) if prev else set()
-    prev_dvs = {
-        d
-        for files in ((prev or {}).get("deletes") or {}).values()
-        for d in files
-    }
-    # tombstone tracking: a full-coverage MERGE advances a segment's
-    # delete_counts to its row count with NO new DV file (see
-    # upsert_append_rows), so the DV-file walk alone would silently
-    # drop those deletes from the feed — track the per-segment file
-    # lists and counts and emit the still-live-at-(k-1) rows instead
-    prev_log = prev
-    prev_dmap = dict((prev or {}).get("deletes") or {})
-    prev_counts = dict((prev or {}).get("delete_counts") or {})
-    parts = []
-    # run of contiguous insert-only versions of an unpartitioned table
-    # awaiting one batched scan: [(version, [seg, ...]), ...]
-    pending: list = []
-    pending_schema = None
-
-    def flush_inserts():
-        nonlocal pending, pending_schema
-        if not pending:
-            return
-        if len(pending) == 1:
-            k, added, log_k = pending[0]
-            ins = _read_segments(
-                spark,
-                fs,
-                # rows AS APPENDED: no DVs at insert time (both maps —
-                # delete_counts alone would engage the fully-deleted
-                # segment skip)
-                {**log_k, "deletes": {}, "delete_counts": {}},
-                added,
-            )
-            parts.append(
-                ins.withColumn("_change_type", F.lit("insert")).withColumn(
-                    "_commit_version", F.lit(k).cast("long")
-                )
-            )
-        else:
-            # one multi-path relation over every added segment in the
-            # run; _commit_version from the adding segment's name —
-            # one O(1) map lookup per INSERTED row (∝ the window's
-            # changes, not the table)
-            segmap = {s: k for k, added, _ in pending for s in added}
-            pby = pending[0][2].get("partition_by") or []
-            if pby:
-                # partitioned layout: root the discovery at the TABLE
-                # dir so the segment level itself surfaces as a
-                # (string) partition column — the version key — and
-                # the hive dirs below it resolve as usual; inference
-                # off + conform casts them back to the manifest types
-                conf = spark.conf
-                key = (
-                    "spark.sql.sources."
-                    "partitionColumnTypeInference.enabled"
-                )
-                prev_conf = conf.get(key)
-                conf.set(key, "false")
-                try:
-                    raw = spark.read.option("basePath", fs.dir).parquet(
-                        *[fs.join(s) for s in segmap]
-                    )
-                finally:
-                    conf.set(key, prev_conf)
-                vmap = F.create_map(
-                    *[
-                        F.lit(x)
-                        for s, k in segmap.items()
-                        for x in (s.split("=", 1)[1], k)
-                    ]
-                )
-                raw = raw.withColumn(
-                    "_commit_version",
-                    F.element_at(vmap, F.col("seg")).cast("long"),
-                )
-                conformed = _conform_schema(
-                    raw,
-                    list(pending_schema) + [["_commit_version", "bigint"]],
-                )
-                parts.append(
-                    conformed.withColumn("_change_type", F.lit("insert"))
-                )
-            else:
-                raw = _read_parquet_at(
-                    spark, pending_schema, *[fs.join(s) for s in segmap]
-                )
-                seg_of = F.regexp_extract(
-                    F.col("_metadata.file_path"),
-                    # fixed-depth anchor (file directly under the
-                    # segment in the unpartitioned layout) — see
-                    # _with_dv_meta
-                    r"^.*/((?:seg|fold)=[^/]+)/[^/]+$",
-                    1,
-                )
-                vmap = F.create_map(
-                    *[F.lit(x) for kv in segmap.items() for x in kv]
-                )
-                parts.append(
-                    raw.withColumn(
-                        "_change_type", F.lit("insert")
-                    ).withColumn(
-                        "_commit_version",
-                        F.element_at(vmap, seg_of).cast("long"),
-                    )
-                )
-        pending, pending_schema = [], None
-
-    for k, log_k in _iter_log_states(fs, since_version + 1, end):
-        pby = log_k.get("partition_by") or []
-        added = [
-            s
-            for s in log_k["segments"]
-            if s not in prev_segs and s.startswith("seg=")
-        ]
-        dvs_k = {
-            d
-            for files in (log_k.get("deletes") or {}).values()
-            for d in files
-        }
-        # maintenance rewrites are dataChange=false: their rows were
-        # already emitted by the commits that created the merged DVs
-        new_dvs = [
-            d for d in sorted(dvs_k - prev_dvs) if not _dv_is_maintenance(d)
-        ]
-        if added:
-            # partitioned tables batch through the basePath-rooted
-            # discovery; the fallbacks are a partition column literally
-            # named like the segment level (duplicate discovery key)
-            # and legacy manifests without a recorded schema (conform
-            # needs one)
-            batchable = not new_dvs and not (
-                pby
-                and (
-                    log_k.get("schema") is None
-                    or "seg" in pby
-                    or "fold" in pby
-                )
-            )
-            if not batchable or (
-                pending and log_k.get("schema") != pending_schema
-            ):
-                flush_inserts()
-            pending.append((k, added, log_k))
-            pending_schema = log_k.get("schema")
-            if not batchable:
-                flush_inserts()  # emit as a lone version
-        if new_dvs:
-            flush_inserts()
-            schema = log_k.get("schema")
-            legacy_dirs = [d for d in new_dvs if not _dv_is_v2(d)]
-            v2_dirs = [d for d in new_dvs if _dv_is_v2(d)]
-            for dirs, is_legacy in ((legacy_dirs, True), (v2_dirs, False)):
-                if not dirs:
-                    continue
-                addr = spark.read.parquet(*[fs.join(d) for d in dirs])
-                owners = sorted(
-                    {
-                        r["seg"]
-                        for r in addr.select("seg").distinct().collect()
-                    }
-                )
-                # the addressed rows, read back from their immutable
-                # segments: scan owners WITHOUT DV application (the
-                # rows being deleted are by definition DV-marked at
-                # >= k) and semi-join the addresses
-                meta = _dv_meta_cols(pby, is_legacy)
-                if not pby:
-                    raw = _with_dv_meta(
-                        _read_parquet_at(
-                            spark, schema, *[fs.join(s) for s in owners]
-                        )
-                    )
-                else:
-                    conf = spark.conf
-                    key = (
-                        "spark.sql.sources."
-                        "partitionColumnTypeInference.enabled"
-                    )
-                    prev_conf = conf.get(key)
-                    conf.set(key, "false")
-                    try:
-                        ps = [
-                            _conform_schema(
-                                _with_dv_meta(
-                                    spark.read.option(
-                                        "basePath", fs.join(s)
-                                    ).parquet(fs.join(s)),
-                                    pby=pby,
-                                    legacy=is_legacy,
-                                ),
-                                list(schema) + meta,
-                            )
-                            for s in owners
-                        ]
-                    finally:
-                        conf.set(key, prev_conf)
-                    raw = ps[0]
-                    for p in ps[1:]:
-                        raw = raw.unionByName(p)
-                from cuplyr_spark.frame import broadcast_guarded
-
-                if is_legacy:
-                    fkey = _DV_RELP if pby else _DV_FILE
-                    on = [
-                        F.col(f"l.{fkey}") == F.col("r.file"),
-                        F.col(f"l.{_DV_POS}") == F.col("r.pos"),
-                    ]
-                else:
-                    on = [
-                        F.col(f"l.{_DV_FILE}") == F.col("r.file"),
-                        F.col(f"l.{_DV_POS}") == F.col("r.pos"),
-                    ]
-                    if pby:
-                        on.append(
-                            F.col(f"l.{_DV_PART}") == F.col("r.part")
-                        )
-                dels = raw.alias("l").join(
-                    broadcast_guarded(
-                        addr, what="CDF delete addresses"
-                    ).alias("r"),
-                    on=on,
-                    how="left_semi",
-                ).drop(_DV_SEG, _DV_FILE, _DV_POS, _DV_PART, _DV_RELP)
-                parts.append(
-                    dels.withColumn(
-                        "_change_type", F.lit("delete")
-                    ).withColumn("_commit_version", F.lit(k).cast("long"))
-                )
-        cnts_k = log_k.get("delete_counts") or {}
-        dmap_k = log_k.get("deletes") or {}
-        tomb = sorted(
-            s
-            for s in cnts_k
-            if s in prev_segs
-            and int(cnts_k[s]) > int(prev_counts.get(s, 0))
-            and dmap_k.get(s, []) == prev_dmap.get(s, [])
-        )
-        if tomb:
-            # counts advanced with no new DV file: the version
-            # tombstoned these segments whole — their deleted rows are
-            # exactly the rows still live at k-1, read through the
-            # previous log state (cost ∝ the tombstoned segments, the
-            # same contract as the DV read-back above)
-            flush_inserts()
-            dels = _read_segments(spark, fs, prev_log, tomb)
-            parts.append(
-                dels.withColumn(
-                    "_change_type", F.lit("delete")
-                ).withColumn("_commit_version", F.lit(k).cast("long"))
-            )
-        prev_segs = set(log_k["segments"])
-        prev_dvs = dvs_k
-        prev_dmap = dmap_k
-        prev_counts = cnts_k
-        prev_log = log_k
-    flush_inserts()
-    if not parts:
-        schema = cur.get("schema") or []
-        ddl = _schema_ddl(schema)
-        ddl += ", `_change_type` string, `_commit_version` long"
-        return Frame(spark.createDataFrame([], ddl), ())
-    out = parts[0]
-    for p in parts[1:]:
-        # allowMissingColumns: a window spanning an additive schema
-        # evolution null-fills the new column on pre-evolution rows
-        out = out.unionByName(p, allowMissingColumns=True)
-    schema = cur.get("schema")
-    if schema is not None:
-        # pin column ORDER to the end version's schema (the union
-        # appends evolution columns wherever the first part left off)
-        out = out.select(
-            *[n for n, _ in schema if n in out.columns],
-            "_change_type",
-            "_commit_version",
-        )
-    return Frame(out, ())
+    return _cdf_frame(
+        spark, fs, _walk_window(fs, table_dir, since_version, version)
+    )
 
 
 def upsert_append_rows(
@@ -7210,28 +7223,44 @@ def upsert_append_rows(
     return v, int(sum(counts.values())), int(n_appended)
 
 
-def _window_restores(fs: _TableFS, since: int, end: int) -> list[tuple]:
-    """(version, restored_from) pairs inside ``(since, end]`` — the
-    manifest walk that tells an incremental consumer its window
-    crosses a RESTORE (whose version-to-version diff re-surfaces
-    segments the consumer may already have processed). Missing
-    (vacuumed) manifests contribute nothing — the subsequent delta
-    read fails loudly on them anyway."""
-    out = []
-    for k in range(since + 1, end + 1):
-        try:
-            rec = _read_log_rec(fs, k)
-        except FileNotFoundError:
-            continue
-        # restored_from lives in the raw record either way — top-level
-        # in full form, inside "set" in delta form — so the probe needs
-        # no state reconstruction at all
-        rf = rec.get("restored_from")
-        if rf is None:
-            rf = (rec.get("set") or {}).get("restored_from")
-        if rf is not None:
-            out.append((k, rf))
-    return out
+def _tail(spark, table_dir: str, cursor_dir: str, process, consumer_id: str,
+          name: str, snapshot, feed, on_restore: str, what: str,
+          hint: str) -> tuple[int, int]:
+    """The cursor driver both tails share. Reads the consumer's cursor
+    ``name`` from ``cursor_dir``, hands ``process`` the frame for the
+    window up to the published version — ``snapshot(up_to)`` when there
+    is no cursor yet (or the window crosses a restore and
+    ``on_restore="bootstrap"``), else ``feed(window walk)`` — and
+    advances the cursor only after ``process`` returns."""
+    if "/" in consumer_id or not consumer_id.strip():
+        raise ValueError(
+            f"consumer_id {consumer_id!r} must be a non-empty name "
+            "without '/' (it becomes the cursor filename)"
+        )
+    cfs = _TableFS(cursor_dir, spark)
+    cfs.mkdirs()
+    cursor_text = cfs.read_text(name)
+    fs = _TableFS(table_dir, spark)
+    up_to = _require_log(fs, table_dir)["version"]
+    if cursor_text is None:
+        start, frame = 0, snapshot(up_to)
+    else:
+        start = int(cursor_text)
+        if up_to <= start:
+            return (start, start)
+        win = _walk_window(fs, table_dir, start, up_to)
+        if win.restores and on_restore == "error":
+            raise ValueError(
+                f"{what}: the window ({start}, {up_to}] crosses "
+                f"restore(s) {win.restores} — {hint}"
+            )
+        if win.restores and on_restore == "bootstrap":
+            frame = snapshot(up_to)
+        else:
+            frame = feed(fs, win)
+    process(frame, up_to)
+    cfs.write_text_atomic(name, str(up_to), f".cur.{consumer_id}.{up_to}")
+    return (start, up_to)
 
 
 def tail_append_changes(
@@ -7303,61 +7332,23 @@ def tail_append_changes(
             f"on_restore must be 'error', 'bootstrap' or 'ignore', "
             f"got {on_restore!r}"
         )
-    if "/" in consumer_id or not consumer_id.strip():
-        raise ValueError(
-            f"consumer_id {consumer_id!r} must be a non-empty name "
-            "without '/' (it becomes the cursor filename)"
-        )
-    fs = _TableFS(cursor_dir, spark)
-    fs.mkdirs()
-    name = f"_CURSOR.{consumer_id}"
-    cursor_text = fs.read_text(name)
-    cur = _require_log(_TableFS(table_dir, spark), table_dir)
-    up_to = cur["version"]
-    if cursor_text is None:
-        # bootstrap reads the published snapshot, which always applies
-        # deletion vectors (a new consumer should never see rows the
-        # table no longer holds)
-        changes = read_append_snapshot(
+    return _tail(
+        spark, table_dir, cursor_dir, process, consumer_id,
+        f"_CURSOR.{consumer_id}",
+        lambda up_to: read_append_snapshot(
             spark, table_dir, version=up_to,
             partition_filter=partition_filter, stats_filter=stats_filter,
             where=where,
-        )
-        process(changes, up_to)
-        fs.write_text_atomic(name, str(up_to), f".cur.{consumer_id}.{up_to}")
-        return (0, up_to)
-    start = int(cursor_text)
-    if up_to <= start:
-        return (start, start)
-    if on_restore != "ignore":
-        hits = _window_restores(_TableFS(table_dir, spark), start, up_to)
-        if hits and on_restore == "error":
-            raise ValueError(
-                f"tail_append_changes: the window ({start}, {up_to}] "
-                f"crosses restore(s) {hits} — the delta may re-surface "
-                "already-processed segments. Re-run with "
-                "on_restore='bootstrap' to reprocess the snapshot, or "
-                "'ignore' if the downstream dedupes."
-            )
-        if hits:  # on_restore == "bootstrap": reset through the snapshot
-            changes = read_append_snapshot(
-                spark, table_dir, version=up_to,
-                partition_filter=partition_filter,
-                stats_filter=stats_filter, where=where,
-            )
-            process(changes, up_to)
-            fs.write_text_atomic(
-                name, str(up_to), f".cur.{consumer_id}.{up_to}"
-            )
-            return (start, up_to)
-    changes = read_append_changes(
-        spark, table_dir, since_version=start, version=up_to,
-        partition_filter=partition_filter, stats_filter=stats_filter,
-        apply_deletes=apply_deletes, where=where,
+        ),
+        lambda fs, win: _changes_frame(
+            spark, fs, win, partition_filter, stats_filter, apply_deletes,
+            where,
+        ),
+        on_restore, "tail_append_changes",
+        "the delta may re-surface already-processed segments. Re-run "
+        "with on_restore='bootstrap' to reprocess the snapshot, or "
+        "'ignore' if the downstream dedupes.",
     )
-    process(changes, up_to)
-    fs.write_text_atomic(name, str(up_to), f".cur.{consumer_id}.{up_to}")
-    return (start, up_to)
 
 
 def tail_append_cdf(
@@ -7387,48 +7378,28 @@ def tail_append_cdf(
     keep vacuum's ``keep_last`` above every consumer's lag."""
     from pyspark.sql import functions as F
 
-    if "/" in consumer_id or not consumer_id.strip():
-        raise ValueError(
-            f"consumer_id {consumer_id!r} must be a non-empty name "
-            "without '/' (it becomes the cursor filename)"
-        )
-    cfs = _TableFS(cursor_dir, spark)
-    cfs.mkdirs()
-    name = f"_CURSOR.cdf.{consumer_id}"
-    cursor_text = cfs.read_text(name)
-    fs = _TableFS(table_dir, spark)
-    cur = _require_log(fs, table_dir)
-    up_to = cur["version"]
-    if cursor_text is None:
+    def snapshot(up_to):
         snap = read_append_snapshot(spark, table_dir, version=up_to)
-        typed = Frame(
+        return Frame(
             snap.df.withColumn("_change_type", F.lit("insert")).withColumn(
                 "_commit_version", F.lit(up_to).cast("long")
             ),
             (),
         )
-        process(typed, up_to)
-        cfs.write_text_atomic(name, str(up_to), f".cur.{consumer_id}.{up_to}")
-        return (0, up_to)
-    start = int(cursor_text)
-    if up_to <= start:
-        return (start, start)
+
     # a RESTORE in the window breaks the version diff (re-added
-    # segments would re-emit as inserts this consumer already saw) —
-    # same rule as tail_append_changes(on_restore="error"); a mirror
-    # must reset (fresh cursor_dir or consumer_id = snapshot reload)
-    hits = _window_restores(fs, start, up_to)
-    if hits:
-        raise ValueError(
-            f"tail_append_cdf: the window ({start}, {up_to}] crosses "
-            f"restore(s) {hits} — the typed diff would re-emit rows "
-            "this consumer already applied. Reset the mirror: reload "
-            "from the snapshot under a fresh consumer_id."
-        )
-    changes = read_append_cdf(spark, table_dir, since_version=start, version=up_to)
-    process(changes, up_to)
-    cfs.write_text_atomic(name, str(up_to), f".cur.{consumer_id}.{up_to}")
-    return (start, up_to)
+    # segments would re-emit as inserts this consumer already saw): a
+    # mirror must reset (fresh cursor_dir or consumer_id = snapshot
+    # reload)
+    return _tail(
+        spark, table_dir, cursor_dir, process, consumer_id,
+        f"_CURSOR.cdf.{consumer_id}", snapshot,
+        lambda fs, win: _cdf_frame(spark, fs, win),
+        "error", "tail_append_cdf",
+        "the typed diff would re-emit rows this consumer already "
+        "applied. Reset the mirror: reload from the snapshot under a "
+        "fresh consumer_id.",
+    )
 
 
 def merge_append_dvs(
@@ -7500,7 +7471,7 @@ def merge_append_dvs(
         prefix = "dvm2" if is_v2 else "dvm"
         rel = f"{_DELETE_DIR}/{prefix}={n}-{uuid.uuid4().hex[:8]}"
         (
-            spark.read.parquet(*[fs.join(d) for d in dirs])
+            _read_dvs(spark, fs, dirs)
             .filter(F.col("seg").isin(segs))
             .coalesce(1)
             .write.mode("errorifexists")

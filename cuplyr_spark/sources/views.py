@@ -7,8 +7,8 @@ typed change feed at cost ∝ the CHANGED data, not table size. At
 over the corpus re-reads everything; this reads the delta.
 
 Two maintenance strategies, picked automatically per refresh window
-by inspecting the base log manifests (metadata-only — no data read to
-decide):
+by one walk of the base log window (:func:`connectors._walk_window`,
+metadata-only — no data read to decide), which then feeds the path:
 
 - **arithmetic merge** (window is insert-only, detected by unchanged
   ``delete_counts``): partial-aggregate ONLY the appended rows
@@ -72,12 +72,13 @@ from cuplyr_spark.frame import Frame
 from cuplyr_spark.sources.connectors import (
     ConcurrentWriteError,
     _TableFS,
+    _cdf_frame,
+    _changes_frame,
     _read_log,
+    _walk_window,
     append_snapshot,
     delete_append_rows,
     join_prune_filter,
-    read_append_cdf,
-    read_append_changes,
     read_append_snapshot,
     upsert_append_rows,
 )
@@ -466,23 +467,6 @@ def _state_fs(spark, fs: _TableFS, spec: dict) -> _TableFS:
                     spark)
 
 
-def _window_has_deletes(bfs: _TableFS, since: int, end: int) -> bool:
-    """Metadata-only window classification: any version whose
-    ``delete_counts`` INCREASED for some segment carried row-level
-    deletes (DELETE / UPDATE / MERGE all do; folds, purges and DV
-    maintenance only ever drop or rebase counts)."""
-    prev = _read_log(bfs, since) if since > 0 else None
-    prev_c = (prev or {}).get("delete_counts") or {}
-    for k in range(since + 1, end + 1):
-        log = _read_log(bfs, k)
-        cur_c = log.get("delete_counts") or {}
-        for seg, n in cur_c.items():
-            if int(n) > int(prev_c.get(seg, 0)):
-                return True
-        prev_c = cur_c
-    return False
-
-
 def refresh_append_view(
     spark: SparkSession,
     view_dir: str,
@@ -523,21 +507,15 @@ def refresh_append_view(
 
     first = last is None or _read_log(sfs) is None
     if last is not None and not first and not full:
-        # a RESTORE in the window breaks the version-to-version diff
-        # both incremental paths rely on (re-added segments would
-        # double-merge; dropped ones would never subtract) — take the
-        # full rebuild for this one refresh. A VACUUMED window (the
-        # manifest walk raises) takes the same path: the rebuild reads
-        # only the published snapshot, no history needed.
-        for k in range(last["base_version"] + 1, end + 1):
-            try:
-                log_k = _read_log(bfs, k)
-            except FileNotFoundError:
-                full = True
-                break
-            if log_k is not None and log_k.get("restored_from") is not None:
-                full = True
-                break
+        # one metadata-only walk of the window decides the path and
+        # feeds it. A RESTORE in the window breaks the version-to-
+        # version diff both incremental paths rely on (re-added
+        # segments would double-merge; dropped ones would never
+        # subtract), and a VACUUMED window has no diff to read — both
+        # take the full rebuild for this one refresh, which reads only
+        # the published snapshot.
+        win = _walk_window(bfs, base_dir, last["base_version"], end)
+        full = bool(win.restores or win.missing)
     cached = []  # refresh plans feed several jobs (count probes, the
     # MERGE's key set + DV scan + segment write) — persist them once
     # instead of recomputing the delta join per consumer
@@ -569,19 +547,18 @@ def refresh_append_view(
                         Frame(batch, ()), state_dir, key=group_by
                     )
         else:
-            since = last["base_version"]
             pinned_state = read_append_snapshot(
                 spark, state_dir, version=last["state_version"]
             ).df
             has_exact = any(
                 s["op"] == "n_distinct_exact" for s in specs
             )
-            if not _window_has_deletes(bfs, since, end) and not has_exact:
-                delta = read_append_changes(spark, base_dir, since, end).df
+            if not win.has_deletes and not has_exact:
+                delta = _changes_frame(spark, bfs, win).df
                 dpart = _partial_agg(delta, group_by, specs)
                 batch = _pin(_merge_state(pinned_state, dpart, group_by, specs))
             else:
-                cdf = read_append_cdf(spark, base_dir, since, end).df
+                cdf = _cdf_frame(spark, bfs, win).df
                 affected = _pin(cdf.select(*group_by).distinct())
                 stats_filter = None
                 if (len(group_by) == 1

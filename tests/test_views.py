@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from cuplyr_spark.frame import Frame
 from cuplyr_spark.sources.connectors import (
     ConcurrentWriteError,
+    _walk_window,
     append_snapshot,
     delete_append_rows,
     read_append_snapshot,
@@ -24,7 +25,6 @@ from cuplyr_spark.sources.connectors import (
     upsert_append_rows,
 )
 from cuplyr_spark.sources.views import (
-    _window_has_deletes,
     _TableFS,
     append_view_status,
     create_append_view,
@@ -81,14 +81,14 @@ def test_lifecycle_exact_through_both_paths(spark, dirs):
     append_snapshot(_mk(spark, [("a", 10, 5.0), ("c", 7, None),
                                 (None, 1, None)]), base)
     bfs = _TableFS(base, spark)
-    assert not _window_has_deletes(bfs, 1, 2)
+    assert not _walk_window(bfs, base, 1, 2).has_deletes
     assert refresh_append_view(spark, view) == 2
     _assert_view_exact(spark, base, view)
 
     # deletes + update → affected-group recompute; 'c' vanishes
     delete_append_rows(spark, base, "x >= 7")
     update_append_rows(spark, base, "g = 'b'", {"x": "x + 100"})
-    assert _window_has_deletes(bfs, 2, 4)
+    assert _walk_window(bfs, base, 2, 4).has_deletes
     assert refresh_append_view(spark, view) == 4
     _assert_view_exact(spark, base, view)
     groups = {r["g"] for r in read_append_view(spark, view).df.collect()}
@@ -171,7 +171,7 @@ def test_upsert_window_takes_recompute_path(spark, dirs):
                               "g string, x int, y double"), ())
     # keyed MERGE marks DVs → delete_counts increase → recompute path
     upsert_append_rows(batch, base, key=["g", "x"])
-    assert _window_has_deletes(_TableFS(base, spark), 1, 2)
+    assert _walk_window(_TableFS(base, spark), base, 1, 2).has_deletes
     refresh_append_view(spark, view)
     _assert_view_exact(spark, base, view)
 
