@@ -942,7 +942,9 @@ class Frame:
 
     def rows_upsert(self, y: Frame, by=None) -> Frame:
         """dplyr ``rows_upsert``: update matched keys, insert new ones
-        (the in-memory twin of ``connectors.upsert_snapshot``)."""
+        (the in-memory twin of the table MERGEs
+        ``connectors.upsert_snapshot`` and
+        ``connectors.upsert_append_rows``)."""
         return self.rows_update(y, by).rows_insert(y, by, conflict="ignore")
 
     def rows_delete(self, y: Frame, by=None) -> Frame:

@@ -7,46 +7,46 @@ Two tiers:
   exact conf needed rather than failing deep inside the JVM. Once the
   jar + catalog conf is present these return ordinary Frames and
   everything downstream works unchanged.
-- **Snapshot tables** (jar-free, works everywhere Spark reads parquet):
-  versioned parquet directories published by an atomic manifest swap —
-  readers only ever see a fully-written version, old versions stay
-  readable (time travel). This is the core mechanism the lakehouse
-  formats formalize (Delta's _delta_log, Iceberg's metadata pointer),
-  reduced to one pointer file; it provides their two essential
-  guarantees (atomic publish, versioned reads) — plus small-file
-  compaction (``compact_snapshot``) and merge-time schema evolution
-  (``upsert_snapshot(schema_evolution=True)``) — without multi-writer
-  transactions. Two table shapes share the machinery:
+- **Versioned tables** (jar-free, works everywhere Spark reads
+  parquet): immutable segment directories plus ONE append log —
+  immutable ``_LOG.<n>`` commit records (delta-encoded, with periodic
+  ``_CHECKPOINT.<n>`` folds) behind ONE ``_LATEST_LOG`` pointer, the
+  Delta-log essence. Readers only ever see a fully-written version,
+  old versions stay readable (time travel), and every mutation
+  commits through one publish-and-rebase loop (``_commit``). Two
+  table shapes share the one protocol:
 
-  * **copy-on-write** (``write_snapshot``/``upsert_snapshot``): each
-    version is the WHOLE table — right for mutable dimension-style
-    data where merges rewrite anyway;
-  * **append/log tables** (``append_snapshot``/``read_append_snapshot``):
-    each append writes only its own segment directory and the
-    manifest is a JSON list of live segments — the Delta-log essence,
-    right for event/fact ingest where a 100 TB table must grow by
+  * **append/log tables** (``append_snapshot``/``read_append_snapshot``
+    and the row-level writes): each append writes only its own segment
+    — right for event/fact ingest where a 100 TB table must grow by
     the batch's bytes, not be rewritten per batch. An exactly-once
-    batch-id watermark makes streaming replays idempotent.
+    batch-id watermark makes streaming replays idempotent;
+  * **copy-on-write tables** (``write_snapshot``/``upsert_snapshot``):
+    thin wrappers whose every version replaces all segments (Delta
+    writes an overwrite as "remove every file, add the new ones") —
+    right for mutable dimension-style data where merges rewrite anyway.
 
-  Storage: manifest IO goes through the SAME Hadoop FileSystem layer
-  as the parquet write (``Path.getFileSystem`` via the JVM gateway),
-  so a ``table_dir`` on ``hdfs://``, ``s3a://``, ``file://`` or a bare
-  local path keeps data and ``_LATEST`` pointer on ONE filesystem.
-  The pointer swap is ``FileContext.rename(OVERWRITE)`` — atomic on
-  HDFS and local disk. Concurrent writers use OPTIMISTIC CONCURRENCY
-  (Delta's model): version numbers are allocated by an atomic
-  exclusive-create (``os.link`` locally, non-overwriting rename on
-  Hadoop — both fail, rather than clobber, when the name exists), the
-  pointer swap is monotonic (a slow writer of v2 cannot regress the
-  pointer after v3 published), and read-modify-write publishes
-  (upsert/compact) verify the base they merged against is still
-  current, raising :class:`ConcurrentWriteError` for the caller to
-  retry when it is not. Blind appends (``append_snapshot``) retry the
-  cheap log-publish step internally and never rewrite their data.
+  Storage: log IO goes through the SAME Hadoop FileSystem layer as the
+  parquet write (``Path.getFileSystem`` via the JVM gateway), so a
+  ``table_dir`` on ``hdfs://``, ``s3a://``, ``file://`` or a bare
+  local path keeps data and pointer on ONE filesystem. Concurrent
+  writers use OPTIMISTIC CONCURRENCY (Delta's model): ``_LOG.<n>`` is
+  created by an atomic exclusive-create (``os.link`` locally,
+  non-overwriting rename on Hadoop — both fail, rather than clobber,
+  when the name exists), so two writers of version n get exactly one
+  winner; the pointer swap is monotonic (a slow writer of v2 cannot
+  regress the pointer after v3 published) and readers probe forward
+  from it to the newest commit record. The loser heals the pointer,
+  then rebases when its work stays valid on the winner (appends, and
+  row-level writes over appends) or raises
+  :class:`ConcurrentWriteError` for the caller to retry. A crash at
+  any point leaves readers on a complete version and at worst an
+  orphan segment that vacuum reclaims.
   CAVEAT: the exclusive-create is atomic on HDFS and local/POSIX
   filesystems; S3A lacks atomic rename, so multi-writer tables on raw
-  S3 need an external coordination layer (the same reason Delta on S3
-  needs a LogStore) — treat S3A tables as single-writer.
+  S3 need a conditional-put backend (:func:`register_exclusive_put`)
+  or an external coordination layer (the same reason Delta on S3
+  needs a LogStore) — otherwise treat S3A tables as single-writer.
 """
 
 from __future__ import annotations
@@ -99,9 +99,7 @@ def read_lakehouse(spark: SparkSession, fmt: str, path: str) -> Frame:
     return Frame(spark.read.format(fmt).load(path))  # pragma: no cover
 
 
-# -- snapshot tables (jar-free versioned parquet) -----------------------
-
-_MANIFEST = "_LATEST"
+# -- versioned tables (jar-free parquet + one append log) ----------------
 
 _URI_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
 
@@ -110,18 +108,18 @@ class ConcurrentWriteError(RuntimeError):
     """Another writer committed between this writer's read of the
     table and its publish attempt. The table is UNDAMAGED — the loser
     detected the conflict and published nothing (at worst it left an
-    orphan data directory that vacuum reclaims). Recovery is Delta's:
+    orphan segment that vacuum reclaims). Recovery is Delta's:
     re-read the table and re-run the operation against the new base.
-    Append-log mutations whose work stays valid on top of a concurrent
-    append retry internally (``_commit``): ``append_snapshot``, and —
-    rebasing over appends, raising on a concurrent fold or row-level
-    write of a segment they touched — ``delete_append_rows``,
-    ``update_append_rows``, ``upsert_append_rows`` and
-    ``merge_append_dvs``. Operations whose result was computed from a
-    superseded table surface this: ``upsert_snapshot`` and
-    ``compact_snapshot`` on copy-on-write tables,
-    ``compact_append_snapshot`` and ``restore_append_snapshot`` on
-    append tables."""
+    Mutations whose work stays valid on top of a concurrent commit
+    retry internally (``_commit``): ``append_snapshot``, a blind
+    ``write_snapshot``, and — rebasing over appends, raising on a
+    concurrent fold or row-level write of a segment they touched —
+    ``delete_append_rows``, ``update_append_rows``,
+    ``upsert_append_rows`` and ``merge_append_dvs``. Operations whose
+    result was computed from a superseded table surface this:
+    ``write_snapshot(expected_base=)``, ``upsert_snapshot``,
+    compaction, restore/rollback, the column renames and drop,
+    ``set_append_expectations`` and ``reset_append_watermark``."""
 
 
 # Conditional-put backends for the exclusive-create commit primitive,
@@ -219,8 +217,8 @@ class _TableFS:
     SparkSession needed for read-only metadata calls); any URI-scheme
     path (``file://``, ``hdfs://``, ``s3a://``, ...) resolves a Hadoop
     ``FileSystem`` from the active session's Hadoop conf, so data and
-    pointer always land together. Cites the reference's single-pointer
-    commit design (snapshot docs above) — this class is only plumbing.
+    pointer always land together. The log protocol is in the module
+    docstring — this class is only plumbing.
     """
 
     def __init__(self, table_dir: str, spark: SparkSession | None = None):
@@ -260,8 +258,8 @@ class _TableFS:
     def file_sizes(self, name: str, recurse: bool = False) -> list[int]:
         """Byte sizes of the data files under subdir ``name``
         (metadata like ``_SUCCESS`` and hidden files excluded) — the
-        compaction planner's input. Snapshot versions and unpartitioned
-        segments are flat parquet directories; ``recurse=True`` walks
+        compaction planner's input. Unpartitioned segments are flat
+        parquet directories; ``recurse=True`` walks
         hive-partitioned segments (data files nested under ``k=v``
         dirs)."""
         if not self.remote:
@@ -463,297 +461,6 @@ class _TableFS:
             raise
 
 
-def snapshot_versions(table_dir: str) -> list[int]:
-    """All version directories present (published or not), ascending."""
-    fs = _TableFS(table_dir)
-    if not fs.isdir():
-        return []
-    out = []
-    for name in fs.listdir():
-        if name.startswith("v=") and name[2:].isdigit():
-            out.append(int(name[2:]))
-    return sorted(out)
-
-
-_PUB = re.compile(r"^_PUB\.(\d+)$")
-
-
-def _snapshot_committed_floor(fs: _TableFS) -> int:
-    """Highest version with an immutable ``_PUB.<n>`` commit record —
-    independent evidence of a completed publish that no pointer race
-    can regress (the record is exclusive-created BEFORE the pointer
-    swap, so any stale-writer pointer regression is visible against
-    it). 0 when none exist (pre-record tables)."""
-    best = 0
-    if not fs.isdir():
-        return 0
-    for name in fs.listdir():
-        m = _PUB.match(name)
-        if m:
-            best = max(best, int(m.group(1)))
-    return best
-
-
-def latest_snapshot_version(table_dir: str) -> int | None:
-    """The PUBLISHED version, or None. Reads the manifest pointer but
-    treats it as ``max(pointer, highest _PUB commit record)`` — a
-    stale writer that lost the pointer-swap race can transiently
-    regress the pointer file (the TOCTOU window between its read and
-    its rename); the immutable commit records make that regression
-    invisible to readers, and the next :func:`_advance_ptr` heals the
-    pointer file itself. A DELIBERATE rollback therefore goes through
-    :func:`rollback_snapshot`, which retires the superseded commit
-    records; hand-editing the pointer alone is read as a race, not a
-    rollback (:func:`vacuum_snapshots` still protects the hand-set
-    version from deletion). Cost: one directory listing per call —
-    the same list-the-log RPC every Delta-style read pays; the entry
-    count is bounded because vacuum sweeps records below the
-    retention floor."""
-    fs = _TableFS(table_dir)
-    text = fs.read_text(_MANIFEST)
-    ptr = None
-    if text is not None:
-        try:
-            ptr = int(text.strip())
-        except ValueError:
-            ptr = None
-    floor = _snapshot_committed_floor(fs)
-    if ptr is None:
-        return floor or None
-    return max(ptr, floor)
-
-
-def rollback_snapshot(
-    table_dir: str, version: int, spark: SparkSession | None = None
-) -> int:
-    """Deliberately re-publish an EARLIER version (operational
-    rollback after a bad publish). Readers treat the pointer as
-    ``max(pointer, _PUB floor)`` so merely regressing the pointer
-    file is read as a stale-writer race and healed; a real rollback
-    must also retire the superseded ``_PUB.<k>`` commit records —
-    this does both, in the safe order (records first, so no reader
-    window observes a floor above the new pointer target with the
-    records already doomed). The superseded ``v=`` dirs stay on disk
-    (re-roll-forward and time travel still work) until
-    :func:`vacuum_snapshots` reclaims them. Returns ``version``."""
-    fs = _TableFS(table_dir, spark)
-    if version not in snapshot_versions(table_dir):
-        raise FileNotFoundError(
-            f"snapshot version {version} not found in {table_dir!r}"
-        )
-    for name in fs.listdir():
-        m = _PUB.match(name)
-        if m and int(m.group(1)) > version:
-            if fs.remote:
-                fs._fs.delete(fs._jpath(fs.join(name)), False)
-            else:
-                os.unlink(fs.join(name))
-    fs.write_text_atomic(_MANIFEST, str(version), f".rollback.{version}")
-    return version
-
-
-def write_snapshot(
-    frame: Frame, table_dir: str, expected_base: int | None = None
-) -> int:
-    """Publish the frame as the table's next version.
-
-    The data lands in ``v=<n+1>/`` first; only after the parquet write
-    completes is the manifest pointer swapped (write-temp + atomic
-    rename), so a concurrent reader either sees the previous complete
-    version or the new complete version — never a partial directory.
-    A writer crash leaves an orphan ``v=`` dir that readers ignore.
-    Works on any Hadoop-resolvable filesystem (bare local, file://,
-    hdfs://, s3a://) — pointer and data share one FS. Returns the
-    published version number.
-
-    ``expected_base`` is the optimistic-concurrency hook for callers
-    whose frame was DERIVED from a version they read (merge, compact):
-    when another writer published past it in the meantime, the publish
-    is abandoned with :class:`ConcurrentWriteError` instead of
-    silently overwriting the concurrent commit (lost update)."""
-    return _publish(
-        table_dir,
-        frame.df.sparkSession,
-        lambda data_dir: frame.df.write.mode("errorifexists").parquet(data_dir),
-        expected_base=expected_base,
-    )
-
-
-_CLAIM = re.compile(r"^_CLAIM\.(\d+)$")
-
-
-def _claimed_versions(fs: _TableFS) -> list[int]:
-    out = []
-    for name in fs.listdir():
-        m = _CLAIM.match(name)
-        if m:
-            out.append(int(m.group(1)))
-    return out
-
-
-def _advance_ptr(
-    fs: _TableFS, ptr_name: str, n: int, tag: str, committed=None
-) -> None:
-    """Monotonic pointer swap: publish ``n`` unless a HIGHER version is
-    already published — the guard that keeps a slow writer of v2 from
-    regressing the pointer after v3 published.
-
-    ``committed`` (optional zero-arg callable) returns the highest
-    version proven committed by INDEPENDENT immutable evidence —
-    ``_PUB.<k>`` records for copy-on-write tables, ``_LOG.<k>``
-    manifests for append tables. It closes the pointer-only TOCTOU
-    race: a stale writer that read the pointer before a newer publish
-    and overwrite-renamed after it would see its own value on the
-    pointer-only verify and return, leaving the newer commit invisible.
-    Because the evidence file is always durable BEFORE the winner's
-    pointer swap, re-checking it after our own rename catches any
-    regression we caused, and the loop re-advances to the true floor.
-
-    After exhausting the verify-rewrite loop (possible only under
-    persistently torn/corrupt pointer reads): if the independent
-    commit evidence already proves ``n`` visible to readers
-    (``committed() >= n`` — readers take ``max(pointer, floor)``, so
-    a lagging pointer cannot hide the commit), the publish IS durable
-    and we return; raising here would make the rebase loop
-    (:func:`_commit`) re-append a segment that already committed
-    (duplicate rows). Only without such evidence does the failure
-    surface as :class:`ConcurrentWriteError` — a publish must never
-    report success while readers may not see it."""
-    target = n
-    for _ in range(8):
-        if committed is not None:
-            target = max(target, committed())
-        cur = fs.read_text(ptr_name)
-        if cur is not None:
-            try:
-                if int(cur.strip()) >= target:
-                    return
-            except ValueError:
-                pass  # torn/corrupt pointer: overwrite it
-        fs.write_text_atomic(ptr_name, str(target), f".{tag}.{target}")
-        cur = fs.read_text(ptr_name)
-        if (
-            cur is not None
-            and cur.strip().isdigit()
-            and int(cur.strip()) >= target
-        ):
-            # our rename may itself have regressed the pointer past a
-            # concurrent publish — trust it only if the independent
-            # commit evidence agrees nothing higher landed
-            if committed is None or committed() <= int(cur.strip()):
-                return
-    if committed is not None and committed() >= n:
-        return  # pointer lags, but the commit-record floor already
-        # makes v<n> visible to every reader — durable success
-    raise ConcurrentWriteError(
-        f"pointer {ptr_name!r} under {fs.dir!r} could not be advanced to "
-        f"v{n} after 8 verify-rewrite attempts — persistent torn/corrupt "
-        "pointer reads; the data is written but NOT published"
-    )
-
-
-def _publish(
-    table_dir: str, spark, write_fn, expected_base: int | None = None
-) -> int:
-    """The one publish protocol every snapshot writer shares, in three
-    optimistic-concurrency steps:
-
-    1. ALLOCATE a version number by atomic exclusive-create of
-       ``_CLAIM.<n>`` — two racing writers get disjoint numbers
-       instead of writing into one ``v=`` directory.
-    2. Run ``write_fn`` against the claimed dir. A crash here leaves
-       an orphan claim + dir that readers ignore and vacuum reclaims.
-    3. COMMIT. Blind publishes just swap the pointer (monotonic —
-       :func:`_advance_ptr`). Publishes DERIVED from a version the
-       caller read (``expected_base``) are serialized: exactly one
-       writer may supersede a given base, decided by exclusive-create
-       of the ``_NEXT.<base>`` marker AFTER its data is complete;
-       the loser abandons (:class:`ConcurrentWriteError`, pointer
-       untouched, its data an orphan) — never a lost update. A winner
-       that crashes between marker and pointer swap is ROLLED FORWARD
-       by the next loser (marker + complete dir ⇒ safe to publish),
-       so a dead writer cannot wedge the table.
-    """
-    fs = _TableFS(table_dir, spark)
-    fs.mkdirs()
-
-    def conflict(cur):
-        return ConcurrentWriteError(
-            f"table {table_dir!r} moved from v{expected_base} to "
-            f"v{cur} since this operation read it — re-read and "
-            "re-run the operation"
-        )
-
-    if expected_base is not None:  # cheap pre-check before the write
-        cur = latest_snapshot_version(table_dir) or 0
-        if cur != expected_base:
-            raise conflict(cur)
-    version = None
-    for _ in range(16):
-        n = max(
-            snapshot_versions(table_dir) + _claimed_versions(fs), default=0
-        ) + 1
-        if fs.write_text_exclusive(f"_CLAIM.{n}", "", f".claim.{n}"):
-            version = n
-            break
-    if version is None:  # 16 straight lost races: something is wedged
-        raise ConcurrentWriteError(
-            f"could not allocate a version under {table_dir!r} after 16 "
-            "attempts — a writer storm or a stuck claim file"
-        )
-    write_fn(fs.join(f"v={version}"))
-    floor = lambda: _snapshot_committed_floor(fs)  # noqa: E731
-    if expected_base is None:
-        # point of no return: durable commit record BEFORE the pointer
-        # swap, so a racing writer's pointer regression can never hide
-        # this publish (see _advance_ptr)
-        fs.write_text_exclusive(f"_PUB.{version}", "", f".pub.{version}")
-        _advance_ptr(fs, _MANIFEST, version, "tmp", committed=floor)
-        return version
-    base = expected_base
-    if not fs.write_text_exclusive(f"_NEXT.{base}", str(version), f".next.{base}"):
-        # lost the commit race — roll the winner forward if it died
-        # between its marker and its pointer swap, then surface
-        txt = fs.read_text(f"_NEXT.{base}")
-        if txt is not None and txt.strip().isdigit():
-            m = int(txt.strip())
-            # the marker is only ever created AFTER v=<m> finished
-            # writing, so marker + dir present ⇒ complete (no
-            # _SUCCESS dependence — markers may be disabled)
-            if (
-                fs.exists(f"v={m}")
-                and (latest_snapshot_version(table_dir) or 0) == base
-            ):
-                fs.write_text_exclusive(f"_PUB.{m}", "", f".pub.{m}")
-                _advance_ptr(fs, _MANIFEST, m, "tmp", committed=floor)
-        raise conflict(latest_snapshot_version(table_dir) or 0)
-    cur = latest_snapshot_version(table_dir) or 0
-    if cur != base:  # a blind writer published meanwhile — defer to it
-        raise conflict(cur)
-    fs.write_text_exclusive(f"_PUB.{version}", "", f".pub.{version}")
-    _advance_ptr(fs, _MANIFEST, version, "tmp", committed=floor)
-    return version
-
-
-def read_snapshot(
-    spark: SparkSession, table_dir: str, version: int | None = None
-) -> Frame:
-    """Read the published version (default) or a pinned earlier one
-    (time travel). Unpublished/orphaned version dirs are never read."""
-    fs = _TableFS(table_dir, spark)
-    if version is None:
-        version = latest_snapshot_version(table_dir)
-        if version is None:
-            raise FileNotFoundError(
-                f"no published snapshot at {table_dir!r} (missing {_MANIFEST})"
-            )
-    if version not in snapshot_versions(table_dir):
-        raise FileNotFoundError(f"snapshot version {version} not found in {table_dir!r}")
-    from cuplyr_spark.sources.readers import read_parquet
-
-    return read_parquet(spark, fs.join(f"v={version}"))
-
-
 def _conform_schema(df, unified, aliases: dict | None = None):
     """Project ``df`` onto the unified (name, type) list: present
     columns cast to the promoted type, absent ones NULL-filled — the
@@ -819,325 +526,6 @@ def _era_groups(renames, segs, schema):
     return [(dict(k), v) for k, v in groups.items()]
 
 
-def upsert_snapshot(
-    spark: SparkSession,
-    frame: Frame,
-    table_dir: str,
-    key: str | list[str],
-    delete_filter: str | None = None,
-    schema_evolution: bool = False,
-) -> int:
-    """Keyed merge (upsert) into a snapshot table: rows in ``frame``
-    REPLACE current rows with the same key; all other current rows
-    carry over; ``delete_filter`` (a SQL predicate over the CURRENT
-    version, e.g. ``"expired = true"``) drops matching carried-over
-    rows — the three clauses of a lakehouse MERGE, without jars.
-
-    Copy-on-write at table grain: the next version is written whole
-    (current ▷ anti-join on key ∪ new), then published with the same
-    atomic manifest swap as ``write_snapshot`` — readers never see a
-    half-merged table, and time travel to pre-merge versions keeps
-    working. Single-writer, any Hadoop-resolvable filesystem, like
-    the rest of the snapshot layer.
-
-    Scale shape: the anti-join shuffles on the merge key exactly once;
-    when ``frame`` is small relative to the table AQE plans it as a
-    broadcast anti-join, so the cost is one pass over the current
-    version plus the parquet write. A 100 TB deployment would use
-    partition-granular rewrite (Delta/Iceberg, ``read_lakehouse``);
-    this is the honest jar-free equivalent with whole-table grain.
-
-    Returns the published version. First upsert into an empty table
-    publishes ``frame`` as v1.
-
-    ``schema_evolution=True`` is the Delta ``mergeSchema`` analog:
-    instead of rejecting a schema mismatch, the next version is
-    written at the UNIFIED schema — table columns first in table
-    order, new upsert columns appended; a column missing on either
-    side is NULL-filled there, and a column typed differently widens
-    through the same promotion lattice as ``bind_rows``
-    (``cuplyr_spark.schema``: bool < ints < floats, anything+string →
-    string, date < timestamp — one lattice for every schema-merge
-    surface). Incompatible pairs (numeric vs timestamp) still raise.
-    Copy-on-write makes this safe: every published version is
-    self-consistent at its own schema, and time travel to
-    pre-evolution versions returns the OLD schema unchanged.
-    """
-    keys = [key] if isinstance(key, str) else list(key)
-    base = latest_snapshot_version(table_dir)
-    if base is None:
-        return write_snapshot(frame, table_dir)
-    current = read_snapshot(spark, table_dir, version=base)
-    missing = [k for k in keys if k not in current.df.columns]
-    if missing or [k for k in keys if k not in frame.df.columns]:
-        raise ValueError(f"merge key {keys} not present in both sides")
-    cur_df, new_df = current.df, frame.df
-    if schema_evolution:
-        from cuplyr_spark.schema import unify_schemas
-
-        unified = unify_schemas([cur_df.schema, new_df.schema])
-        cur_df = _conform_schema(cur_df, unified)
-        new_df = _conform_schema(new_df, unified)
-    elif sorted(cur_df.columns) != sorted(new_df.columns):
-        raise ValueError(
-            f"schema mismatch: table has {sorted(cur_df.columns)}, "
-            f"upsert has {sorted(new_df.columns)} "
-            "(pass schema_evolution=True to merge schemas)"
-        )
-    kept = cur_df.join(new_df.select(*keys), on=keys, how="left_anti")
-    if delete_filter is not None:
-        kept = kept.filter(f"NOT ({delete_filter})")
-    merged = kept.select(*cur_df.columns).unionByName(
-        new_df.select(*cur_df.columns)
-    )
-    # expected_base: the merge was computed against `base` — if another
-    # writer published meanwhile, publishing ours would silently drop
-    # their commit; ConcurrentWriteError tells the caller to re-merge.
-    return write_snapshot(Frame(merged, ()), table_dir, expected_base=base)
-
-
-def snapshot_history(
-    table_dir: str, spark: SparkSession | None = None
-) -> list[dict]:
-    """Version-level table metadata — the one-pointer analog of Delta
-    ``DESCRIBE HISTORY`` / Iceberg's snapshots table: one dict per
-    ``v=`` directory, ascending, with ``version``, ``n_files`` and
-    ``bytes`` (data files only), ``complete`` (parquet commit finished
-    — ``_SUCCESS`` present; crash orphans show ``False``) and
-    ``published`` (the manifest pointer). Pure filesystem metadata —
-    no data is read, so it is safe to call on a 100 TB table; feeds
-    compaction/vacuum scheduling decisions (e.g. compact when the
-    published version's ``n_files`` drifts high)."""
-    fs = _TableFS(table_dir, spark)
-    published = latest_snapshot_version(table_dir)
-    out = []
-    for v in snapshot_versions(table_dir):
-        try:
-            sizes = fs.file_sizes(f"v={v}")
-        except Exception:  # noqa: BLE001 — local OSError or a Py4J
-            sizes = []     # error when a dir vanishes mid-listing
-        out.append(
-            {
-                "version": v,
-                "n_files": len(sizes),
-                "bytes": sum(sizes),
-                "complete": fs.exists(f"v={v}/_SUCCESS"),
-                "published": v == published,
-            }
-        )
-    return out
-
-
-def compact_snapshot(
-    spark: SparkSession,
-    table_dir: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    shuffle: bool = False,
-    zorder_by: list[str] | None = None,
-    zorder_bits: int = 16,
-) -> int | None:
-    """Small-file compaction for snapshot tables — the jar-free analog
-    of Delta ``OPTIMIZE`` / Iceberg ``rewrite_data_files``, completing
-    the lifecycle (publish → read → time travel → merge → vacuum →
-    **compact**).
-
-    Streaming micro-batch sinks and repeated upserts leave version
-    directories of many small files; at 100 TB that sprawl, not the
-    bytes, becomes the cost (every reader pays per-file open/footer
-    overhead, and the scan's task count explodes). Compaction rewrites
-    the PUBLISHED version's rows as a new version with
-    ``ceil(total_bytes / target_file_bytes)`` files and publishes it
-    through the same atomic manifest swap as every other write —
-    readers never see a half-compacted table, pre-compaction versions
-    stay time-travelable, and ``vacuum_snapshots`` reclaims them on the
-    normal schedule.
-
-    Plan shape: ``coalesce`` by default — a NARROW dependency, zero
-    shuffle; each output task concatenates whole input files, so the
-    cost is one read+write pass over the published bytes. Pass
-    ``shuffle=True`` to ``repartition`` instead when the inputs are
-    size-skewed and evenly-sized output files are worth one exchange.
-
-    ``zorder_by`` makes this the full ``OPTIMIZE ZORDER BY`` analog:
-    the rewrite routes through ``write_parquet_zorder`` (Morton-curve
-    range partitioning at the same target file count), so the
-    compacted version's per-file min/max footer stats stay tight on
-    EVERY clustered column and selective scans prune most files. A
-    layout change is then the point, so the no-op shortcut is skipped
-    — a z-ordered compaction always publishes. Costs one extra tiny
-    min/max aggregate plus a range shuffle (``shuffle`` is implied).
-
-    Otherwise no-op by design when the published version already has
-    no more files than the target (returns ``None``, no version
-    churn) — safe to run on a schedule. Row content is NEVER changed;
-    only file layout. Returns the new published version, or ``None``.
-    A merge landing while the compactor rewrites surfaces as
-    :class:`ConcurrentWriteError` (the rewrite was computed from a
-    superseded base — just re-run); it can never erase the merge."""
-    if target_file_bytes < 1:
-        raise ValueError("target_file_bytes must be >= 1")
-    version = latest_snapshot_version(table_dir)
-    if version is None:
-        raise FileNotFoundError(
-            f"no published snapshot at {table_dir!r} (missing {_MANIFEST})"
-        )
-    fs = _TableFS(table_dir, spark)
-    sizes = fs.file_sizes(f"v={version}")
-    n_target = max(1, -(-sum(sizes) // target_file_bytes))
-    if zorder_by:
-        from cuplyr_spark.sources.readers import write_parquet_zorder
-
-        frame = read_snapshot(spark, table_dir, version=version)
-        return _publish(
-            table_dir,
-            spark,
-            lambda data_dir: write_parquet_zorder(
-                frame,
-                data_dir,
-                cols=list(zorder_by),
-                bits=zorder_bits,
-                mode="errorifexists",
-                num_files=n_target,
-            ),
-            expected_base=version,
-        )
-    if len(sizes) <= n_target:
-        return None
-    df = read_snapshot(spark, table_dir, version=version).df
-    out = df.repartition(n_target) if shuffle else df.coalesce(n_target)
-    # expected_base: never clobber rows merged in while we compacted
-    return write_snapshot(Frame(out, ()), table_dir, expected_base=version)
-
-
-def vacuum_snapshots(
-    table_dir: str,
-    keep_last: int = 2,
-    spark: SparkSession | None = None,
-    orphan_grace_hours: float = 24.0,
-) -> list[int]:
-    """Garbage-collect old snapshot versions, completing the table
-    lifecycle (publish → read → time travel → merge → **vacuum**; the
-    analog of Delta VACUUM / Iceberg expire_snapshots, reduced to the
-    one-pointer design).
-
-    Keeps the newest ``keep_last`` COMPLETE versions (dirs whose
-    parquet commit finished, so they are readable/time-travelable);
-    the PUBLISHED version is always kept regardless, and so is the
-    version the raw ``_LATEST`` pointer names when it differs (reads
-    report ``max(pointer, _PUB floor)``, so a deliberately pinned /
-    rolled-back pointer is below the floor — its target must never
-    dangle either). Completeness evidence is the ``_SUCCESS`` marker
-    OR the ``_PUB.<n>`` commit record (exclusive-created only after
-    the version's data write finished), so clusters with markers
-    disabled (``mapreduce.fileoutputcommitter.marksuccessfuljobs=
-    false``) still rank real history correctly. Crash-orphan ``v=``
-    dirs with NEITHER piece of evidence are EXCLUDED from the
-    ``keep_last`` ranking (counting them would let a high-numbered
-    unreadable orphan displace a real historical version from
-    retention while the orphan itself survived) — but, because an
-    incomplete dir is indistinguishable from a CONCURRENT writer's
-    in-progress version, such a dir is only deleted once older than
-    ``orphan_grace_hours`` (pass ``0`` to reap crash debris
-    immediately in a known-quiet table; same rule as
-    :func:`vacuum_append_snapshot`). Corner: a pre-commit-record
-    table with markers disabled has NO evidence for any version; all
-    versions then rank as complete, versions strictly OLDER than the
-    published one are reclaimed immediately (they are never the
-    published state, and ``keep_last`` retention must keep working),
-    and only versions NEWER than the published one — the only ones a
-    live writer could still be producing — get the grace window.
-    Deletion
-    goes through the same filesystem as the data (``_TableFS``), so
-    vacuuming works wherever snapshots do.
-    Vacuum itself is not serialized against writers (Delta's VACUUM
-    isn't either): run it from one maintenance slot, or keep
-    ``keep_last`` high enough that nothing a live writer references is
-    ever in the doomed set. Returns the versions removed (ascending)."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    fs = _TableFS(table_dir, spark)
-    versions = snapshot_versions(table_dir)
-    published = latest_snapshot_version(table_dir)
-    # completeness evidence: the _SUCCESS marker, or the _PUB.<n>
-    # commit record (created only after the data write finished) —
-    # the latter keeps ranking correct when markers are disabled
-    evidenced = {
-        v
-        for v in versions
-        if fs.exists(f"v={v}/_SUCCESS") or fs.exists(f"_PUB.{v}")
-    }
-    no_evidence = not evidenced  # pre-record table with markers off
-    if no_evidence:
-        # rank versions up to the published one as complete (history);
-        # anything newer could be a live writer's in-progress dir —
-        # excluded from ranking (it must not displace real history
-        # from retention) and grace-protected below
-        complete = [v for v in versions if v <= (published or 0)]
-    else:
-        complete = [v for v in versions if v in evidenced]
-    keep = set(complete[-keep_last:])
-    if published is not None:
-        keep.add(published)
-    raw = fs.read_text(_MANIFEST)
-    if raw is not None and raw.strip().isdigit():
-        # a deliberately pinned/rolled-back pointer must never dangle:
-        # keep its target too, even though reads report max(ptr, floor)
-        keep.add(int(raw.strip()))
-
-    def ripe(v: int) -> bool:
-        if orphan_grace_hours <= 0:
-            return True
-        if v in evidenced:
-            return True  # aged history: a deliberate retention choice
-        if no_evidence and published is not None and v < published:
-            # no evidence exists for ANY version (pre-record table,
-            # markers disabled): a version strictly older than the
-            # published one is never the published state — reclaim it
-            # immediately so keep_last retention keeps working; only
-            # versions NEWER than published could be a live writer's
-            # in-progress dir and get the grace window below
-            return True
-        import time as _time
-
-        if fs.remote:
-            mtime = (
-                fs._fs.getFileStatus(fs._jpath(fs.join(f"v={v}")))
-                .getModificationTime() / 1000.0
-            )
-        else:
-            mtime = os.path.getmtime(fs.join(f"v={v}"))
-        return _time.time() - mtime > orphan_grace_hours * 3600.0
-
-    doomed = [v for v in versions if v not in keep and ripe(v)]
-    for v in doomed:
-        target = fs.join(f"v={v}")
-        if fs.remote:
-            fs._fs.delete(fs._jpath(target), True)
-        else:
-            import shutil
-
-            shutil.rmtree(target)
-    # sweep concurrency droppings: claims/markers for removed versions,
-    # and claims whose write never materialized below the keep window
-    # (they only cost version-number gaps, but they accumulate)
-    floor = min(keep) if keep else 0
-    for name in fs.listdir():
-        m = (
-            _CLAIM.match(name)
-            or _PUB.match(name)
-            or re.match(r"^_NEXT\.(\d+)$", name)
-        )
-        if not m:
-            continue
-        v = int(m.group(1))
-        if v in doomed or (v < floor and not fs.exists(f"v={v}")):
-            if fs.remote:
-                fs._fs.delete(fs._jpath(fs.join(name)), False)
-            else:
-                os.unlink(fs.join(name))
-    return doomed
-
-
 # -- append/log tables (segment-manifest, append cost ∝ batch) -----------
 
 _LOG_PTR = "_LATEST_LOG"
@@ -1146,18 +534,19 @@ _LOG_PTR = "_LATEST_LOG"
 _DEFAULT_APP = "__default__"
 
 
-def _log_committed_floor(fs: _TableFS) -> int:
-    """Highest ``_LOG.<k>`` manifest on disk — each is exclusive-created
-    only after its data is complete, so the newest IS a complete commit
-    regardless of where the (mutable) pointer file points. The append
-    analog of :func:`_snapshot_committed_floor`."""
-    best = 0
+def _log_versions(fs: _TableFS) -> list[int]:
+    """The retained ``_LOG.<k>`` commit records' versions, ascending.
+    Each record is exclusive-created only after its data is complete,
+    so the newest IS the published version wherever the (mutable)
+    pointer file points."""
     if not fs.isdir():
-        return 0
-    for name in fs.listdir():
-        if name.startswith("_LOG.") and name[5:].isdigit():
-            best = max(best, int(name[5:]))
-    return best
+        return []
+    return sorted(
+        int(name[5:])
+        for name in fs.listdir()
+        if name.startswith("_LOG.") and name[5:].isdigit()
+    )
+
 
 
 # Delta-log cadence: every _CHECKPOINT_EVERY-th commit additionally
@@ -1576,7 +965,7 @@ def _log_head_version(fs: _TableFS) -> int:
         while fs.exists(f"_LOG.{v + 1}"):
             v += 1
         return v
-    return _log_committed_floor(fs)
+    return max(_log_versions(fs), default=0)
 
 
 def _read_log(fs: _TableFS, version: int | None = None) -> dict | None:
@@ -1698,10 +1087,10 @@ def _write_log(fs: _TableFS, log: dict, prev: dict | None = None) -> int:
     writers racing to publish version n get exactly one winner, the
     concurrency model of the Delta log itself — then the monotonic
     ``_LATEST_LOG`` pointer swap. Raises
-    :class:`ConcurrentWriteError` for the loser; the append-log
-    mutations retry it through :func:`_commit` (re-reading the new
-    log), the others surface it. ``max_batch_id`` mirrors the default
-    app's watermark for pre-rework readers.
+    :class:`ConcurrentWriteError` for the loser. Only
+    :func:`_commit` calls this: it heals the pointer and rebases or
+    refuses. ``max_batch_id`` mirrors the default app's watermark for
+    pre-rework readers.
 
     ``prev`` — the materialized state of version n-1 exactly as
     :func:`_read_log` returned it — switches the serialized record to
@@ -1744,13 +1133,46 @@ def _write_log(fs: _TableFS, log: dict, prev: dict | None = None) -> int:
             f"log version {n} at {fs.dir!r} was committed by another "
             "writer — re-read the log and retry"
         )
-    _advance_ptr(
-        fs, _LOG_PTR, n, "ptr",
-        committed=lambda: _log_probe_committed(fs, n),
-    )
+    _advance_ptr(fs, n)
     if is_delta and n % _CHECKPOINT_EVERY == 0:
         _write_checkpoint(fs, log)
     return n
+
+
+def _advance_ptr(fs: _TableFS, n: int) -> None:
+    """Monotonic ``_LATEST_LOG`` swap to committed version ``n`` — or
+    past it, never below a HIGHER committed version: the guard that
+    keeps a slow writer of v2 from regressing the pointer after v3
+    published.
+
+    The ``_LOG.<k>`` commit records are the independent evidence. Each
+    is durable BEFORE its writer's pointer swap, so re-probing them
+    after our own rename catches a regression we caused (a stale
+    writer that read the pointer before a newer publish and renamed
+    after it), and the loop re-advances to the true head.
+
+    After exhausting the verify-rewrite loop (possible only under
+    persistently torn/corrupt pointer reads) the publish is still
+    durable when ``_LOG.<n>`` exists — readers probe forward from the
+    pointer and fall back to the records — so this returns; raising
+    would make :func:`_commit` re-append a version that already
+    committed (duplicate rows). Only without the record does the
+    failure surface as :class:`ConcurrentWriteError`: a publish must
+    never report success while readers may not see it."""
+    target = n
+    for _ in range(8):
+        target = _log_probe_committed(fs, target)
+        ptr = (fs.read_text(_LOG_PTR) or "").strip()
+        if ptr.isdigit() and int(ptr) >= target:
+            return
+        fs.write_text_atomic(_LOG_PTR, str(target), f".ptr.{target}")
+    if fs.exists(f"_LOG.{n}"):
+        return
+    raise ConcurrentWriteError(
+        f"pointer {_LOG_PTR!r} under {fs.dir!r} could not be advanced to "
+        f"v{n} after 8 verify-rewrite attempts — persistent torn/corrupt "
+        "pointer reads; the data is written but NOT published"
+    )
 
 
 def _log_probe_committed(fs: _TableFS, start: int) -> int:
@@ -4648,9 +4070,9 @@ def append_snapshot(
     """Append-only publish: write ONLY this batch's rows as a new
     segment directory and publish a log manifest listing every live
     segment — the jar-free Delta-log essence, for the ingest shape
-    where copy-on-write is wrong (a 100 TB events table must grow by
-    the batch's bytes; ``write_snapshot`` would rewrite the table per
-    batch).
+    where a whole-table rewrite is wrong (a 100 TB events table must
+    grow by the batch's bytes; ``write_snapshot`` would rewrite the
+    table per batch).
 
     Commit order is crash-safe like every publish here: segment
     parquet first, then the immutable ``_LOG.<n>`` manifest, then the
@@ -4694,8 +4116,8 @@ def append_snapshot(
     may OMIT existing non-partition columns (the segment simply lacks
     them; every read pins the manifest schema, so they come back NULL).
     Type CHANGES are still refused loudly — a widening rewrite belongs
-    to the copy-on-write path (``upsert_snapshot(
-    schema_evolution=True)``), where every version is rewritten whole.
+    to ``upsert_snapshot(schema_evolution=True)``, whose every version
+    rewrites the table whole.
 
     ``partition_by`` writes the segment hive-partitioned (the 100 TB
     event-table shape: ingest partitioned by date/type so readers
@@ -4940,7 +4362,7 @@ def append_snapshot(
                 f"append_snapshot: columns {sorted(got)} do not match "
                 f"the table's {sorted(have)} — append tables are "
                 "fixed-schema (pass schema_mode='merge' for additive "
-                "evolution, or the copy-on-write path for rewrites)"
+                "evolution, or write_snapshot for rewrites)"
             )
         drift = {
             c: (have[c], got[c])
@@ -4981,7 +4403,7 @@ def append_snapshot(
                 )
                 + " — only the safe widenings (int-chain, "
                 "float→double) evolve under schema_mode='merge'; cast "
-                "the batch or use the copy-on-write path for other "
+                "the batch or rewrite the table (upsert_snapshot) for other "
                 "schema changes"
             )
         table_spec = cur.get("sketch_spec")
@@ -5113,7 +4535,10 @@ def reset_append_watermark(
     # slot is dropped
     log = _log_with_extras(cur)
     log["watermarks"].pop(app_id or _DEFAULT_APP, None)
-    return _write_log(fs, log, prev=cur)
+    return _commit(
+        fs, cur, lambda _: log, None,
+        f"reset_append_watermark on {table_dir!r}",
+    )
 
 
 _IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
@@ -5248,7 +4673,9 @@ def rename_append_column(
     log["retired_names"] = sorted(
         set(cur.get("retired_names") or ()) | {old}
     )
-    return _write_log(fs, log, prev=cur)
+    return _commit(
+        fs, cur, lambda _: log, None, f"rename_append_column on {table_dir!r}"
+    )
 
 
 def migrate_rename_append_column(
@@ -5359,7 +4786,10 @@ def migrate_rename_append_column(
     log["retired_names"] = sorted(
         set(cur.get("retired_names") or ()) | {old}
     )
-    return _write_log(fs, log, prev=cur)
+    return _commit(
+        fs, cur, lambda _: log, None,
+        f"migrate_rename_append_column on {table_dir!r}",
+    )
 
 
 def drop_append_column(
@@ -5389,7 +4819,9 @@ def drop_append_column(
     # rename entries whose target is the dropped column stay in the
     # list: older segments' READS of other columns don't consult them,
     # and era resolution only walks entries whose "to" is still live
-    return _write_log(fs, log, prev=cur)
+    return _commit(
+        fs, cur, lambda _: log, None, f"drop_append_column on {table_dir!r}"
+    )
 
 
 def read_append_snapshot(
@@ -5704,7 +5136,10 @@ def set_append_expectations(
         log["expectations"] = norm
     else:
         log.pop("expectations", None)
-    return _write_log(fs, log, prev=cur)
+    return _commit(
+        fs, cur, lambda _: log, None,
+        f"set_append_expectations on {table_dir!r}",
+    )
 
 
 def _log_for(log: dict, segs) -> dict:
@@ -5730,19 +5165,22 @@ class _Step(NamedTuple):
     """One version of a change-feed window, read from the log alone."""
 
     version: int
-    # raw ``seg=`` segments the version added, and the version's state
-    # cut to them (their partition and zone maps as added)
+    # segments whose rows the version inserts — the raw ``seg=``
+    # segments it added; for a restore every segment it re-added — and
+    # the version's state cut to them (their partition and zone maps
+    # as added; a restore's DVs at this version)
     inserts: list
     log: dict
     # non-maintenance DV dirs the version added -> their owner
     # segments, from the log's ``deletes`` map
     dvs: dict
-    # segments tombstoned whole (count rose with no new DV file), and
-    # the previous state cut to them: their deleted rows are the rows
-    # still live there
+    # segments whose rows still live at the previous version the
+    # version deleted whole — tombstoned (count rose with no new DV
+    # file) or dropped by a data change (a restore, or a replacing
+    # write) — and the previous state cut to them
     tombstoned: list
     prev: dict | None
-    has_deletes: bool  # some segment's delete_counts rose
+    has_deletes: bool  # rows live at the previous version were deleted
     restored_from: int | None
 
 
@@ -5783,7 +5221,12 @@ def _walk_window(fs: _TableFS, table_dir: str, since: int,
     (:func:`_iter_log_states`) and diffs consecutive states into one
     :class:`_Step` per version. Compaction folds, DV maintenance
     rewrites (``dvm=``/``dvm2=``) and segment-preserving republishes
-    contribute no inserts or DVs (``dataChange=false``).
+    contribute no inserts or DVs (``dataChange=false``). A version
+    that adds a ``seg=`` segment or restores is a data change: the
+    live segments it drops delete their rows. A restore inserts every
+    segment it re-adds, at its own DVs. (A restore that changes the
+    deletes of a segment live on both sides of it emits nothing for
+    that segment.)
 
     A vacuumed record stops the roll (``missing``); the walk then still
     reads ``restored_from`` off every retained record, so a consumer
@@ -5836,13 +5279,24 @@ def _walk_window(fs: _TableFS, table_dir: str, since: int,
                 if s in psegs and sd.get(s, []) == pd.get(s, [])
             )
             rf = log.get("restored_from")
+            if rf is not None:
+                # a restore inserts every segment it re-adds, of any
+                # kind, at the target's DVs (no DV of its own is a
+                # delete event)
+                inserts, dvs = added, {}
+            # a data change (a restore, or a version adding raw rows)
+            # deletes the rows of the live segments it drops; a fold or
+            # a dead-segment drop moves or drops no live row
+            data_change = rf is not None or bool(inserts)
+            if data_change:
+                tomb = sorted(set(tomb) | (psegs - live))
             # apply_deletes bookkeeping: a window segment's DVs as of
             # the last version it was live, and the folds that took in
             # window rows (a later delete there has no way back to them)
             absorbed = False
             for s in psegs - live:
                 if s in window:
-                    gone[s] = None if rf is not None else (
+                    gone[s] = None if data_change else (
                         list(pd.get(s) or ()), int(pc.get(s, 0))
                     )
                 absorbed = absorbed or s in window or s in taint
@@ -5857,7 +5311,8 @@ def _walk_window(fs: _TableFS, table_dir: str, since: int,
                 )
             steps.append(_Step(
                 k, inserts, _log_for(log, inserts), dvs, tomb,
-                _log_for(prev, tomb) if tomb else None, bool(rose), rf,
+                _log_for(prev, tomb) if tomb else None,
+                bool(tomb) or (rf is None and bool(rose)), rf,
             ))
             prev, psegs = log, live
     except FileNotFoundError as e:
@@ -5884,21 +5339,31 @@ def _walk_window(fs: _TableFS, table_dir: str, since: int,
     )
 
 
-def _window_log(win: _Window) -> dict:
-    """The end state's table-level fields with each window segment's
-    partition and zone maps from the version that ADDED it: a later
-    fold drops folded segments from the current maps, and losing them
-    would degrade a window spanning the fold from manifest-level
-    pruning to a listing of every segment in the window. No deletion
-    vectors: the rows as appended."""
-    log = _log_for(win.cur, ())
-    for fam in ("partitions", "stats", "file_stats"):
-        merged: dict = {}
-        for st in win.steps:
-            merged.update(st.log.get(fam) or {})
-        if merged:
-            log[fam] = merged
-    return log
+def _window_logs(win: _Window, steps) -> list[tuple[dict, list]]:
+    """The inserts of ``steps`` as ``[(log, segments), ...]``, one
+    pair per partition layout — one in practice; a replacing
+    ``write_snapshot`` or a partition-column migration changes the
+    layout mid-window. Each log is the end state's table-level fields
+    with that layout and each segment's partition and zone maps from
+    the version that ADDED it: a later fold drops folded segments from
+    the current maps, and losing them would degrade a window spanning
+    the fold from manifest-level pruning to a listing of every segment
+    in the window. No deletion vectors: the rows as appended."""
+    out: dict = {}
+    for st in steps:
+        if not st.inserts:
+            continue
+        pby = tuple(st.log.get("partition_by") or ())
+        if pby not in out:
+            log = _log_for(win.cur, ())
+            _stamp_layout(log, partition_by=list(pby))
+            out[pby] = (log, {})
+        log, segs = out[pby]
+        segs.update(dict.fromkeys(st.inserts))  # ordered, deduplicated
+        for fam in ("partitions", "stats", "file_stats"):
+            if st.log.get(fam):
+                log[fam] = {**(log.get(fam) or {}), **st.log[fam]}
+    return [(log, list(segs)) for log, segs in out.values()]
 
 
 def _changes_frame(
@@ -5910,8 +5375,16 @@ def _changes_frame(
     if win.missing is not None:
         raise win.missing
     cur = win.cur
-    segs = [s for st in win.steps for s in st.inserts]
-    if not segs:
+    # a restore's inserts are its rows live at that version: one scan
+    # at its own DVs per restore (apply_deletes reads every window
+    # segment at the DVs of the last version it was live)
+    scans = _window_logs(win, [
+        st for st in win.steps if apply_deletes or st.restored_from is None
+    ]) + [
+        (st.log, st.inserts) for st in win.steps
+        if not apply_deletes and st.restored_from is not None and st.inserts
+    ]
+    if not scans:
         schema = cur.get("schema")
         if schema is not None:
             return Frame(spark.createDataFrame([], _schema_ddl(schema)), ())
@@ -5932,7 +5405,6 @@ def _changes_frame(
                 where, cur.get("partition_by"), cur.get("schema")
             )
             derived_any = derived_any or partition_filter is not None
-    log = _window_log(win)
     if apply_deletes:
         if win.fold_deleted is not None:
             raise ValueError(
@@ -5946,26 +5418,39 @@ def _changes_frame(
         # each window segment's DVs as of the last version it was
         # live: the end state for live ones, the walk's record for
         # segments a fold or dead-segment drop took out; segments a
-        # restore dropped hold no live row
+        # data change dropped hold no live row
         gone = {s: g for s, g in win.gone.items() if g is not None}
-        segs = [s for s in segs if s not in win.gone or s in gone]
-        live = _log_for(cur, segs)
+        for _, segs in scans:
+            segs[:] = [s for s in segs if s not in win.gone or s in gone]
+        live = _log_for(cur, [s for _, segs in scans for s in segs])
         dmap = {s: d for s, (d, _) in gone.items() if d}
         cmap = {s: c for s, (_, c) in gone.items() if c}
         dmap.update(live.get("deletes") or {})
         cmap.update(live.get("delete_counts") or {})
-        log["deletes"], log["delete_counts"] = dmap, cmap
+        for log, _ in scans:
+            log["deletes"], log["delete_counts"] = dmap, cmap
+        scans = [sc for sc in scans if sc[1]] or scans[:1]
+
+    def read(*filters):
+        out = None
+        for log, segs in scans:
+            df = _read_segments(spark, fs, log, segs, *filters)
+            out = df if out is None else out.unionByName(
+                df, allowMissingColumns=True
+            )
+        if len(scans) > 1 and cur.get("schema"):
+            # pin the end schema's column order across the union
+            out = out.select(
+                *[n for n, _ in cur["schema"] if n in out.columns]
+            )
+        return Frame(out, ())
+
     try:
-        out = Frame(
-            _read_segments(
-                spark, fs, log, segs, partition_filter, stats_filter
-            ),
-            (),
-        )
+        out = read(partition_filter, stats_filter)
     except ValueError:
         if not derived_any:
             raise  # explicit caller filters: surface the misuse
-        out = Frame(_read_segments(spark, fs, log, segs), ())  # full scan
+        out = read()  # full scan
     return out.filter(where) if where is not None else out
 
 
@@ -5996,7 +5481,8 @@ def read_append_changes(
     ADDED raw ``seg=`` segments, pruned by the partition and zone maps
     recorded when each was added. Compaction rewrites are ``fold=``
     segments — the ``dataChange=false`` analog — and are skipped: their
-    rows were all visible in earlier versions.
+    rows were all visible in earlier versions. A restore inserts the
+    segments it re-adds, of any kind, read at its own DVs.
     ``reset_append_watermark``'s segment-preserving republish adds
     nothing and reads as empty. ``since_version`` must be ``>= 0``.
 
@@ -6098,14 +5584,18 @@ def join_prune_filter(
     return {fact_col or col: ("in", keys)}
 
 
-def _rm_dir(fs: _TableFS, rel: str) -> None:
+def _rm(fs: _TableFS, rel: str) -> None:
+    """Delete the file or directory ``rel`` (an absent one is fine: a
+    racing maintainer may have swept it first)."""
     target = fs.join(rel)
     if fs.remote:
         fs._fs.delete(fs._jpath(target), True)
-    else:
+    elif os.path.isdir(target):
         import shutil
 
         shutil.rmtree(target, ignore_errors=True)
+    elif os.path.exists(target):
+        os.remove(target)
 
 
 def _log_with_extras(cur: dict, n: int | None = None,
@@ -6251,28 +5741,33 @@ def _grow_log_schema(log: dict, added, what: str) -> None:
 
 
 def _commit(fs: _TableFS, cur: dict | None, build, on_race, what: str):
-    """The publish-and-rebase loop every append-log mutation commits
-    through. Each attempt builds the next log from the head it read
-    (``build(cur)``) and publishes it (:func:`_write_log`: exclusive
-    create of ``_LOG.<n>``, then the pointer swap). A lost race rolls
-    ``_LATEST_LOG`` forward to the newest commit record — ``_LOG.<k>``
-    files are complete before their pointer swap, so this heals a
-    winner that died mid-publish — and asks ``on_race(old, new)``
-    whether the work survives the winner: it raises
-    :class:`ConcurrentWriteError` to refuse, returns None to rebase
-    onto ``new``, or returns the version to report instead (an
-    append's replay race). Returns the published version."""
+    """The publish-and-rebase loop every table mutation commits
+    through — the only caller of :func:`_write_log`. Each attempt
+    builds the next log from the head it read (``build(cur)``) and
+    publishes it (exclusive create of ``_LOG.<n>``, then the pointer
+    swap). A lost race rolls ``_LATEST_LOG`` forward to the newest
+    commit record — ``_LOG.<k>`` files are complete before their
+    pointer swap, so this heals a winner that died mid-publish — and
+    asks ``on_race(old, new)`` whether the work survives the winner:
+    it raises :class:`ConcurrentWriteError` to refuse, returns None to
+    rebase onto ``new``, or returns the version to report instead (an
+    append's replay race). ``on_race=None`` refuses every lost race,
+    for mutations computed from the head they read. Returns the
+    published version."""
     for _ in range(6):
         log = build(cur)
         try:
             return _write_log(fs, log, prev=cur)
         except ConcurrentWriteError:
             m = _log_probe_committed(fs, log["version"])
-            _advance_ptr(
-                fs, _LOG_PTR, m, "ptr",
-                committed=lambda: _log_probe_committed(fs, m),
-            )
+            _advance_ptr(fs, m)
             new = _read_log(fs, m)
+            if on_race is None:
+                raise ConcurrentWriteError(
+                    f"{what} lost the log-commit race to version {m} — "
+                    "a writer published concurrently; re-read the table "
+                    "and re-run"
+                ) from None
             done = on_race(cur, new)
             if done is not None:
                 return done
@@ -6372,7 +5867,7 @@ def _write_dv(spark, fs: _TableFS, cur: dict, matches, pby,
             .collect()
         }
     if not counts:
-        _rm_dir(fs, dv_rel)
+        _rm(fs, dv_rel)
         return None, {}
     return dv_rel, counts
 
@@ -6737,35 +6232,34 @@ def _cdf_frame(spark, fs: _TableFS, win: _Window) -> Frame:
     if win.missing is not None:
         raise win.missing
     meta = (_DV_SEG, _DV_FILE, _DV_POS, _DV_PART, _DV_RELP)
+    parts = []
 
     def typed(df, change, version):
         return df.withColumn("_change_type", F.lit(change)).withColumn(
             "_commit_version", version.cast("long")
         ).drop(*meta)
 
-    # every insert of the window in one addressed scan, rows AS
-    # APPENDED (no DVs); _commit_version from a segment->version map
-    # over the scan's segment column (a literal when one version added
-    # them all). A segment a restore re-adds is inserted again, by a
-    # second scan.
-    scans: list[dict] = []
-    for st in win.steps:
-        for s in st.inserts:
-            born = next((b for b in scans if s not in b), None)
-            if born is None:
-                scans.append(born := {})
-            born[s] = st.version
-    parts = []
-    for born in scans:
-        tags = set(born.values())
+    # every appended insert of the window in one addressed scan per
+    # partition layout (one in practice), rows AS APPENDED (no DVs);
+    # _commit_version from a segment->version map over the scan's
+    # segment column (a literal when one version added them all). A
+    # restore's inserts are its rows live at that version: one scan at
+    # its own DVs.
+    appended = [st for st in win.steps if st.restored_from is None]
+    born = {s: st.version for st in appended for s in st.inserts}
+    for log, segs in _window_logs(win, appended):
+        tags = {born[s] for s in segs}
         v = F.lit(tags.pop()) if len(tags) == 1 else F.element_at(
-            F.create_map(*[F.lit(x) for kv in born.items() for x in kv]),
+            F.create_map(*[F.lit(x) for s in segs for x in (s, born[s])]),
             F.col(_DV_SEG),
         )
-        parts.append(typed(
-            _addressed_scan(spark, fs, _window_log(win), list(born)),
-            "insert", v,
-        ))
+        parts.append(typed(_addressed_scan(spark, fs, log, segs), "insert", v))
+    for st in win.steps:
+        if st.restored_from is not None and st.inserts:
+            parts.append(typed(
+                _read_segments(spark, fs, st.log, st.inserts),
+                "insert", F.lit(st.version),
+            ))
     for st in win.steps:
         k = F.lit(st.version)
         for legacy in (True, False):
@@ -6784,9 +6278,9 @@ def _cdf_frame(spark, fs: _TableFS, win: _Window) -> Frame:
                 "delete", k,
             ))
         if st.tombstoned:
-            # counts rose with no new DV file: the version tombstoned
-            # these segments whole, so their deleted rows are exactly
-            # the rows still live at k-1
+            # segments deleted whole — counts rose with no new DV file,
+            # or a data change dropped them — so their deleted rows are
+            # exactly the rows still live at k-1
             parts.append(typed(
                 _read_segments(spark, fs, st.prev, st.tombstoned),
                 "delete", k,
@@ -6825,7 +6319,11 @@ def read_append_cdf(
     and deletes in version order reproduces the table exactly), where
     :func:`read_append_changes` is the slimmer inserts-only feed.
 
-    Per version: segments ADDED emit their rows as ``insert``;
+    Per version: segments ADDED emit their rows as ``insert`` (a
+    restore's re-added segments at its own DVs); the live segments a
+    data change drops — a restore, or a copy-on-write version, which
+    replaces every segment — emit their rows live before it as
+    ``delete``;
     deletion-vector files ADDED emit the ADDRESSED rows as ``delete``
     (read back from their immutable segments by row address — cost ∝
     deleted rows, the segments were retained by the same vacuum
@@ -6843,8 +6341,9 @@ def read_append_cdf(
     dir kind — one in practice; ``_commit_version`` is tagged through
     a segment→version map over the scan's segment column, per-row work
     only on the window's inserted rows). Each delete-carrying version
-    adds one scan of its DV owners per DV layout, and each tombstoning
-    version one scan of the tombstoned segments. CDF windows are
+    adds one scan of its DV owners per DV layout, each tombstoning or
+    replacing version one scan of the segments it deleted whole, and
+    each restore one scan of its inserts. CDF windows are
     incremental-consumer sized by construction; for a full-table
     bootstrap use ``read_append_snapshot`` instead.
     ``since_version`` must be ``>= 0``."""
@@ -6871,9 +6370,9 @@ def upsert_append_rows(
     (pruned through zone maps / dictionaries / bloom sidecars by the
     source's key set via :func:`join_prune_filter` when it fits
     ``max_prune_keys`` — keyed blooms make this the GDPR/user-profile
-    upsert shape) + DV bytes ∝ matched rows + write ∝ the batch. The
-    copy-on-write path (:func:`upsert_snapshot`) rewrites the whole
-    table per merge; this rewrites NOTHING.
+    upsert shape) + DV bytes ∝ matched rows + write ∝ the batch.
+    :func:`upsert_snapshot` rewrites the whole table per merge; this
+    rewrites NOTHING.
 
     Duplicate keys WITHIN the source are appended as-is (the table
     then holds both copies — dedupe the batch first if that matters);
@@ -7534,14 +7033,14 @@ def compact_append_snapshot(
     the knob for tables whose steady state is many medium segments.
 
     ``zorder_by`` routes the folded segment through
-    ``write_parquet_zorder`` (the OPTIMIZE ZORDER BY analog of the
-    copy-on-write path): newly consolidated data gets pruning layout
-    at fold time, at the cost of one range shuffle over the FOLDED
-    bytes only. Untouched right-sized segments keep their layout. On a
-    hive-partitioned table the fold keeps the partition directories
-    and z-orders WITHIN them (range partitioning on ``(partition
-    cols…, z-key)``), so per-file footer min/max stay tight inside
-    every partition — Delta's OPTIMIZE ZORDER semantics. Z-ordering a
+    ``write_parquet_zorder`` (the OPTIMIZE ZORDER BY analog): newly
+    consolidated data gets pruning layout at fold time, at the cost of
+    one range shuffle over the FOLDED bytes only. Untouched right-sized
+    segments keep their layout. On a hive-partitioned table the fold
+    keeps the partition directories and z-orders WITHIN them (range
+    partitioning on ``(partition cols…, z-key)``), so per-file footer
+    min/max stay tight inside every partition — Delta's OPTIMIZE
+    ZORDER semantics. Z-ordering a
     partition column itself is refused (constant per directory).
 
     Fully-deleted segments — EXACT delete count equal to the recorded
@@ -7713,8 +7212,9 @@ def compact_append_snapshot(
     # folded segments' DVs are DROPPED — the fold read them through
     # _read_segments, so the deletes are now materialized in the data
     log = _log_with_extras(cur, n, ordered)
+    what = f"compaction of {table_dir!r}"
     if seg is None:
-        return _write_log(fs, log, prev=cur)
+        return _commit(fs, cur, lambda _: log, None, what)
     if pby:
         log["partitions"] = {
             **(log.get("partitions") or {}),
@@ -7779,7 +7279,7 @@ def compact_append_snapshot(
             ).coalesce(1).write.mode("errorifexists").parquet(
                 fs.join(f"{_SKETCH_DIR}/{seg}")
             )
-    return _write_log(fs, log, prev=cur)
+    return _commit(fs, cur, lambda _: log, None, what)
 
 
 def restore_append_snapshot(
@@ -7815,14 +7315,16 @@ def restore_append_snapshot(
     the "drop the data but hold the stream position" shape.
 
     INCREMENTAL-CONSUMER HAZARD (document before you restore, same as
-    Delta CDF + RESTORE): ``read_append_changes`` /
-    ``tail_append_changes`` diff manifests version-to-version, so a
-    restore that re-adds segments a consumer already saw (e.g.
-    restoring past a compaction fold) re-surfaces them as new in the
-    window that crosses the restore. Reset lagging cursors to the
-    restore's published version. Materialized views handle this
-    themselves: ``refresh_append_view`` detects a restore in its
-    window and takes the full-rebuild path for that one refresh.
+    Delta CDF + RESTORE): the restore version inserts every segment
+    it re-adds (at the target's DVs) and ``read_append_cdf`` deletes
+    the rows of the segments it drops — but rows it un-deletes in a
+    segment live on both sides are not emitted; the insert-only ``read_append_changes`` / ``tail_append_changes``
+    re-surface rows a consumer already saw (e.g. restoring past a
+    compaction fold) as new in the window that crosses the restore.
+    Reset lagging cursors to the restore's published version.
+    Materialized views handle this themselves: ``refresh_append_view``
+    detects a restore in its window and takes the full-rebuild path
+    for that one refresh.
 
     A concurrent writer winning the log-commit race surfaces as
     :class:`ConcurrentWriteError` — a restore must never silently
@@ -7869,14 +7371,8 @@ def restore_append_snapshot(
     log["version"] = cur["version"] + 1
     log["watermarks"] = _log_watermarks(cur if keep_watermarks else target)
     log["restored_from"] = version
-    try:
-        n = _write_log(fs, log, prev=cur)
-    except ConcurrentWriteError:
-        raise ConcurrentWriteError(
-            f"restore of {table_dir!r} lost the log-commit race — a "
-            "writer published concurrently; re-check the table state "
-            "and re-run the restore"
-        ) from None
+    what = f"restore of {table_dir!r}"
+    n = _commit(fs, cur, lambda _: log, None, what)
     # TOCTOU re-verify: a vacuum that was already running against the
     # PRE-restore head can sweep target-only paths between the
     # existence check above and the publish (it never saw this head).
@@ -7901,7 +7397,7 @@ def restore_append_snapshot(
         }
         redo["version"] = n + 1
         redo["restored_from"] = cur["version"]
-        _write_log(fs, redo, prev=log)
+        _commit(fs, log, lambda _: redo, None, what)
         raise FileNotFoundError(
             f"restore to version {version} raced a concurrent vacuum — "
             f"paths {gone[:5]}{'...' if len(gone) > 5 else ''} were "
@@ -7995,9 +7491,8 @@ def append_quick_stats(
 def append_history(
     table_dir: str, spark: SparkSession | None = None
 ) -> list[dict]:
-    """Log-version-level metadata for an append table — the
-    DESCRIBE HISTORY analog of :func:`snapshot_history` for the log
-    shape: one dict per retained ``_LOG.<v>``, ascending, with
+    """Log-version-level metadata — the DESCRIBE HISTORY analog: one
+    dict per retained ``_LOG.<v>``, ascending, with
     ``version``, ``n_segments``, ``n_new_segments`` (segments this
     version added — 0 for watermark-reset/compaction-only publishes),
     ``compacted`` (this version folded segments away), ``watermarks``
@@ -8007,17 +7502,8 @@ def append_history(
     scheduling (e.g. compact when n_segments drifts high) and
     consumer-lag dashboards (cursor version vs published version)."""
     fs = _TableFS(table_dir, spark)
-    ptr = fs.read_text(_LOG_PTR)
-    try:
-        parsed = int(ptr.strip()) if ptr else 0
-    except ValueError:  # torn pointer: heal from the commit records
-        parsed = 0
-    published = max(parsed, _log_committed_floor(fs)) or None
-    versions = sorted(
-        int(name[5:])
-        for name in fs.listdir()
-        if name.startswith("_LOG.") and name[5:].isdigit()
-    )
+    versions = _log_versions(fs)
+    published = max(versions, default=None)
     out = []
     prev: set | None = None
     for v, log in _log_states_for(fs, versions):
@@ -8077,17 +7563,8 @@ def vacuum_append_snapshot(
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     fs = _TableFS(table_dir, spark)
-    ptr = fs.read_text(_LOG_PTR)
-    try:
-        parsed = int(ptr.strip()) if ptr else 0
-    except ValueError:  # torn pointer: heal from the commit records
-        parsed = 0
-    published = max(parsed, _log_committed_floor(fs)) or None
-    versions = sorted(
-        int(name[5:])
-        for name in fs.listdir()
-        if name.startswith("_LOG.") and name[5:].isdigit()
-    )
+    versions = _log_versions(fs)
+    published = max(versions, default=None)
     keep = set(versions[-keep_last:])
     if published is not None:
         keep.add(published)
@@ -8188,13 +7665,8 @@ def vacuum_append_snapshot(
             "keep_versions": sorted(keep),
         }
     for seg in doomed_segs:
-        for target in (fs.join(seg), fs.join(f"{_SKETCH_DIR}/{seg}")):
-            if fs.remote:
-                fs._fs.delete(fs._jpath(target), True)
-            else:
-                import shutil
-
-                shutil.rmtree(target, ignore_errors=True)
+        _rm(fs, seg)
+        _rm(fs, f"{_SKETCH_DIR}/{seg}")
     # deletion-vector files: same rule as segments — swept once no kept
     # log references them; a never-logged DV is an in-flight or crashed
     # delete's, so it ages through the orphan grace window first
@@ -8202,14 +7674,10 @@ def vacuum_append_snapshot(
         for name in fs.subdirs(_DELETE_DIR):
             rel = f"{_DELETE_DIR}/{name}"
             if rel not in referenced_dv and ripe(rel, ever_logged_dv):
-                _rm_dir(fs, rel)
+                _rm(fs, rel)
     for v in versions:
         if v not in keep:
-            target = fs.join(f"_LOG.{v}")
-            if fs.remote:
-                fs._fs.delete(fs._jpath(target), False)
-            else:
-                os.remove(target)
+            _rm(fs, f"_LOG.{v}")
     # checkpoints are derived data: sweep the ones whose version is no
     # longer retained (their base role is taken by a kept checkpoint).
     # Family shards (_CHECKPOINT.<n>.<family>) sweep with their index
@@ -8219,9 +7687,223 @@ def vacuum_append_snapshot(
     for name in fs.listdir():
         v = _ckpt_version(name)
         if v is not None and v not in keep:
-            target = fs.join(name)
-            if fs.remote:
-                fs._fs.delete(fs._jpath(target), False)
-            else:
-                os.remove(target)
+            _rm(fs, name)
     return doomed_segs
+
+
+# -- copy-on-write snapshot tables ----------------------------------------
+#
+# A copy-on-write table is an append table whose every version replaces
+# all segments — the Delta log writes an overwrite the same way, as
+# "remove every file, add the new ones" — so its API is a set of thin
+# wrappers over the log: one commit loop, one pointer, one vacuum.
+
+
+def write_snapshot(
+    frame: Frame, table_dir: str, expected_base: int | None = None
+) -> int:
+    """Publish the frame as the table's next version: the WHOLE table,
+    one fresh segment replacing every segment and the schema,
+    committed through :func:`_commit` — readers see the previous
+    complete version or the new one, a writer crash leaves an orphan
+    segment vacuum reclaims, and earlier versions stay readable (time
+    travel). Returns the published version.
+
+    A blind write that loses the commit race rebases after the winner
+    (last writer wins, as for any overwrite). ``expected_base`` is the
+    hook for frames DERIVED from a version the caller read (``0``: the
+    table has no version yet): when another writer published past it,
+    the write publishes nothing and raises
+    :class:`ConcurrentWriteError` instead of a lost update."""
+    spark = frame.df.sparkSession
+    fs = _TableFS(table_dir, spark)
+    fs.mkdirs()
+    cur = _read_log(fs)
+    head = cur["version"] if cur else 0
+
+    def conflict(v):
+        return ConcurrentWriteError(
+            f"table {table_dir!r} moved from v{expected_base} to v{v} "
+            "since this operation read it — re-read and re-run the "
+            "operation"
+        )
+
+    if expected_base is not None and head != expected_base:
+        raise conflict(head)  # cheap pre-check before the data write
+    schema = _frame_schema_pairs(frame.df)
+    staged = _stage_segment(
+        spark, fs, head + 1, frame.df, schema, [], [], False, None
+    )
+
+    def build(cur):
+        log = _log_with_extras(cur or {}, segments=[])
+        log["schema"] = schema
+        # the new segment is written unpartitioned, unclustered and
+        # unsketched, whatever layout the replaced segments had
+        _stamp_layout(log, partition_by=None, cluster_by=None,
+                      sketch_spec=None)
+        _add_segment(log, staged)
+        return log
+
+    def on_race(old, new):
+        if expected_base is not None:
+            raise conflict(new["version"])
+
+    return _commit(fs, cur, build, on_race, f"write_snapshot to {table_dir!r}")
+
+
+def read_snapshot(
+    spark: SparkSession, table_dir: str, version: int | None = None
+) -> Frame:
+    """The published version (default) or a pinned earlier one —
+    :func:`read_append_snapshot`."""
+    return read_append_snapshot(spark, table_dir, version=version)
+
+
+def latest_snapshot_version(table_dir: str) -> int | None:
+    """The published version (the log head), or None."""
+    return _log_head_version(_TableFS(table_dir)) or None
+
+
+def snapshot_versions(table_dir: str) -> list[int]:
+    """The retained versions, ascending."""
+    return _log_versions(_TableFS(table_dir))
+
+
+def snapshot_history(
+    table_dir: str, spark: SparkSession | None = None
+) -> list[dict]:
+    """DESCRIBE HISTORY analog: one dict per retained version,
+    ascending, with ``version``, ``n_files`` and ``bytes`` (data files
+    of its segments), ``complete`` (always True: a retained version is
+    a finished commit) and ``published`` — from the log and a listing
+    of the segments, no data read."""
+    fs = _TableFS(table_dir, spark)
+    versions = _log_versions(fs)
+    out = []
+    for v, log in _log_states_for(fs, versions):
+        deep = bool(log.get("partition_by"))
+        sizes = [b for s in log["segments"] for b in fs.file_sizes(s, deep)]
+        out.append({
+            "version": v,
+            "n_files": len(sizes),
+            "bytes": sum(sizes),
+            "complete": True,
+            "published": v == versions[-1],
+        })
+    return out
+
+
+def upsert_snapshot(
+    spark: SparkSession,
+    frame: Frame,
+    table_dir: str,
+    key: str | list[str],
+    delete_filter: str | None = None,
+    schema_evolution: bool = False,
+) -> int:
+    """Keyed merge (upsert) into a snapshot table: rows in ``frame``
+    REPLACE current rows with the same key; all other current rows
+    carry over; ``delete_filter`` (a SQL predicate over the CURRENT
+    version, e.g. ``"expired = true"``) drops matching carried-over
+    rows — the three clauses of a lakehouse MERGE, without jars.
+
+    Copy-on-write at table grain: the next version (current ▷
+    anti-join on key ∪ new; one key shuffle, a broadcast anti-join
+    when ``frame`` is small) is published by
+    ``write_snapshot(expected_base=)`` — readers never see a
+    half-merged table, pre-merge versions stay readable, and a
+    concurrent publish surfaces as :class:`ConcurrentWriteError`
+    (re-run the upsert), never a lost update.
+    :func:`upsert_append_rows` is the merge-on-read MERGE that
+    rewrites nothing. Returns the published version; the first upsert
+    into an empty table publishes ``frame`` as v1.
+
+    ``schema_evolution=True`` is the Delta ``mergeSchema`` analog:
+    instead of rejecting a schema mismatch, the next version is
+    written at the UNIFIED schema — table columns first in table
+    order, new upsert columns appended; a column missing on either
+    side is NULL-filled there, and a column typed differently widens
+    through the same promotion lattice as ``bind_rows``
+    (``cuplyr_spark.schema``: bool < ints < floats, anything+string →
+    string, date < timestamp — one lattice for every schema-merge
+    surface). Incompatible pairs (numeric vs timestamp) still raise.
+    Copy-on-write makes this safe: every published version is
+    self-consistent at its own schema, and time travel to
+    pre-evolution versions returns the OLD schema unchanged.
+    """
+    keys = [key] if isinstance(key, str) else list(key)
+    base = _log_head_version(_TableFS(table_dir, spark))
+    if not base:
+        return write_snapshot(frame, table_dir, expected_base=0)
+    current = read_snapshot(spark, table_dir, version=base)
+    missing = [k for k in keys if k not in current.df.columns]
+    if missing or [k for k in keys if k not in frame.df.columns]:
+        raise ValueError(f"merge key {keys} not present in both sides")
+    cur_df, new_df = current.df, frame.df
+    if schema_evolution:
+        from cuplyr_spark.schema import unify_schemas
+
+        unified = unify_schemas([cur_df.schema, new_df.schema])
+        cur_df = _conform_schema(cur_df, unified)
+        new_df = _conform_schema(new_df, unified)
+    elif sorted(cur_df.columns) != sorted(new_df.columns):
+        raise ValueError(
+            f"schema mismatch: table has {sorted(cur_df.columns)}, "
+            f"upsert has {sorted(new_df.columns)} "
+            "(pass schema_evolution=True to merge schemas)"
+        )
+    kept = cur_df.join(new_df.select(*keys), on=keys, how="left_anti")
+    if delete_filter is not None:
+        kept = kept.filter(f"NOT ({delete_filter})")
+    merged = kept.select(*cur_df.columns).unionByName(
+        new_df.select(*cur_df.columns)
+    )
+    return write_snapshot(Frame(merged, ()), table_dir, expected_base=base)
+
+
+def compact_snapshot(
+    spark: SparkSession,
+    table_dir: str,
+    target_file_bytes: int = 128 * 1024 * 1024,
+    shuffle: bool = False,
+    zorder_by: list[str] | None = None,
+    zorder_bits: int = 16,
+) -> int | None:
+    """Small-file compaction (Delta ``OPTIMIZE`` analog) —
+    :func:`compact_append_snapshot`: the published version's rows are
+    rewritten at ``ceil(bytes / target_file_bytes)`` files as a new
+    version (``coalesce``; ``shuffle=True`` repartitions;
+    ``zorder_by`` lays out ``OPTIMIZE ZORDER BY``). Returns it, or
+    ``None`` when the version already is one right-sized segment. A
+    concurrent merge surfaces as :class:`ConcurrentWriteError`."""
+    return compact_append_snapshot(
+        spark, table_dir, target_file_bytes, zorder_by=zorder_by,
+        zorder_bits=zorder_bits, shuffle=shuffle,
+    )
+
+
+def rollback_snapshot(
+    table_dir: str, version: int, spark: SparkSession | None = None
+) -> int:
+    """Operational rollback — :func:`restore_append_snapshot`: a NEW
+    version whose content is ``version``'s (history stays linear).
+    Returns the published version."""
+    return restore_append_snapshot(spark, table_dir, version)
+
+
+def vacuum_snapshots(
+    table_dir: str,
+    keep_last: int = 2,
+    spark: SparkSession | None = None,
+    orphan_grace_hours: float = 24.0,
+) -> list[int]:
+    """Garbage-collect old versions — :func:`vacuum_append_snapshot`
+    (keep the newest ``keep_last`` plus the published one; never-logged
+    segments wait out ``orphan_grace_hours``). Returns the versions
+    removed, ascending."""
+    fs = _TableFS(table_dir, spark)
+    before = _log_versions(fs)
+    vacuum_append_snapshot(table_dir, keep_last, spark, orphan_grace_hours)
+    kept = set(_log_versions(fs))
+    return [v for v in before if v not in kept]

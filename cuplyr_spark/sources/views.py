@@ -75,6 +75,7 @@ from cuplyr_spark.sources.connectors import (
     _cdf_frame,
     _changes_frame,
     _read_log,
+    _rm,
     _walk_window,
     append_snapshot,
     delete_append_rows,
@@ -952,12 +953,7 @@ def maintain_append_view(
     for name in fs.listdir():
         m = _REFRESH.match(name)
         if m and int(m.group(1)) <= floor:
-            import os as _os
-
-            if fs.remote:
-                fs._fs.delete(fs._jpath(fs.join(name)), False)
-            else:
-                _os.unlink(fs.join(name))
+            _rm(fs, name)
             pruned.append(name)
     return {
         "compacted_to": new_v,

@@ -235,32 +235,35 @@ def stream_upsert_snapshot(
     batch-side engine full verb access per microbatch, and the source
     checkpoint makes delivery effectively exactly-once *per key* — a
     replayed batch re-upserts the same keys, which is idempotent, the
-    standard recipe for exactly-once MERGE sinks. Single-writer like
-    the rest of the snapshot layer: one streaming query per table.
+    standard recipe for exactly-once MERGE sinks. One streaming query
+    per table: a second merging writer makes batches race, and the
+    loser's ``ConcurrentWriteError`` fails its batch.
 
     Returns the started StreamingQuery; with ``trigger_once`` it
     drains available input and stops (incremental-batch scheduling).
 
     Inline table maintenance, tuned to what a COPY-ON-WRITE merge sink
-    actually sprawls: every microbatch publishes a FULL table copy, so
-    the dominant growth is VERSION STORAGE (thousands of versions per
-    day x table size) — ``vacuum_keep=K`` prunes history to the newest
-    K complete versions and is the parameter that matters most here;
-    it runs after EVERY batch when no ``compact_every`` schedule is
-    set (vacuum is metadata-cheap), else on the compaction cadence.
-    ``zorder_by`` without ``compact_every`` raises — it is applied by
-    the compaction pass. ``compact_every=N`` additionally
-    rewrites the published version every Nth merged batch for SCAN
-    layout: ``target_file_bytes`` coalesces above AQE's ~advisory-size
-    write files toward scan-efficient sizes (a no-op when already
-    there, so replays and quiet streams cost nothing), and
-    ``zorder_by=`` makes that rewrite the OPTIMIZE ZORDER BY pass so
-    reader predicates on the clustered columns prune files — layout
-    work that the per-batch merge write itself never does. All of it
-    runs inside the same single-writer foreachBatch slot — no second
-    writer, no coordination. (An APPEND-style sink is where per-batch
-    small FILES sprawl instead; its compaction story is
-    ``compact_snapshot`` on a schedule against the table directory.)
+    actually sprawls: every microbatch publishes a log version whose
+    one segment is a FULL table copy, so the dominant growth is
+    SEGMENT STORAGE (thousands of versions per day x table size) —
+    ``vacuum_keep=K`` keeps the newest K versions, deletes every
+    segment only older versions reference, and is the parameter that
+    matters most here; it runs after EVERY batch when no
+    ``compact_every`` schedule is set (vacuum reads only the log and a
+    directory listing), else on the compaction cadence. ``zorder_by``
+    without ``compact_every`` raises — it is applied by the
+    compaction pass. ``compact_every=N`` additionally rewrites the
+    published version every Nth merged batch for SCAN layout
+    (``compact_snapshot``, the log's tiered compaction):
+    ``target_file_bytes`` coalesces above AQE's ~advisory-size write
+    files toward scan-efficient sizes (a no-op when already there, so
+    replays and quiet streams cost nothing), and ``zorder_by=`` makes
+    that rewrite the OPTIMIZE ZORDER BY pass so reader predicates on
+    the clustered columns prune files — layout work that the
+    per-batch merge write itself never does. All of it runs inside the
+    same single-writer foreachBatch slot — no second writer, no
+    coordination. (An APPEND-style sink is where per-batch small FILES
+    sprawl instead; see :func:`stream_append_snapshot`.)
     """
     from cuplyr_spark.sources.connectors import (
         compact_snapshot,

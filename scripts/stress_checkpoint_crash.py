@@ -86,10 +86,10 @@ def crash_pointer_worker(table):
 
     orig = C._advance_ptr
 
-    def killer(fs, ptr_name, n, tag, committed=None):
+    def killer(fs, n):
         if n >= 6:
             os._exit(9)
-        return orig(fs, ptr_name, n, tag, committed=committed)
+        return orig(fs, n)
 
     C._advance_ptr = killer
     spark = _session("ptr")

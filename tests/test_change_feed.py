@@ -1,8 +1,9 @@
 """The change feed as projections of one log-window walk
 (`connectors._walk_window`): window parity between the typed feed, the
 insert feed, the snapshots and the walk's has-deletes flag over one
-mixed history; `apply_deletes` across a compaction fold; argument
-validation; and the Spark-job budget of building a feed frame."""
+mixed history (restores and replacing copy-on-write writes included);
+`apply_deletes` across a compaction fold; argument validation; and the
+Spark-job budget of building a feed frame."""
 
 from __future__ import annotations
 
@@ -27,6 +28,7 @@ from cuplyr_spark.sources.connectors import (
     tail_append_changes,
     update_append_rows,
     upsert_append_rows,
+    write_snapshot,
 )
 
 
@@ -57,7 +59,13 @@ def _mixed_history(spark, d, pby):
     append_snapshot(_batch(spark, 90, 100, True), d, batch_id=4)
     delete_append_rows(spark, d, "id in (3, 50, 91)")  # lands on the fold
     assert compact_append_snapshot(spark, d, purge_deletes=True) is not None
-    return append_snapshot(_batch(spark, 100, 105, True), d, batch_id=5)
+    append_snapshot(_batch(spark, 100, 105, True), d, batch_id=5)
+    # back to v11: re-adds the unpurged fold and a segment at their DVs,
+    # drops the purge fold and the last append
+    assert restore_append_snapshot(spark, d, 11) == 14
+    # a copy-on-write version replaces every segment
+    write_snapshot(_batch(spark, 200, 210, True), d)
+    return append_snapshot(_batch(spark, 210, 215, True), d, batch_id=6)
 
 
 def _bag(df, cols):
@@ -108,6 +116,26 @@ def test_window_parity_over_mixed_history(spark, tmp_path, pby):
 
 def _ids(frame):
     return sorted(r["id"] for r in frame.df.select("id").collect())
+
+
+def test_cdf_replays_a_restore_that_drops_a_fold(spark, tmp_path):
+    """A restore deletes the rows of the segments it drops: replaying
+    the window across it gives the restored snapshot."""
+    d = str(tmp_path / "t")
+    append_snapshot(_batch(spark, 0, 10), d, batch_id=0)
+    append_snapshot(_batch(spark, 10, 20), d, batch_id=1)
+    assert compact_append_snapshot(spark, d) == 3
+    assert restore_append_snapshot(spark, d, 1) == 4
+    state = Counter(_ids(read_append_snapshot(spark, d, version=2)))
+    rows = read_append_cdf(spark, d, 2).df.collect()
+    assert {r["_commit_version"] for r in rows} == {4}
+    for kind, step in (("delete", -1), ("insert", 1)):
+        for r in rows:
+            if r["_change_type"] == kind:
+                state[r["id"]] += step
+                assert state[r["id"]] >= 0, r
+    assert sorted(state.elements()) == list(range(10))
+    assert _ids(read_append_snapshot(spark, d)) == list(range(10))
 
 
 def test_apply_deletes_across_a_fold(spark, tmp_path):

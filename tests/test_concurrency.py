@@ -1,13 +1,16 @@
-"""Optimistic concurrency for snapshot + append tables.
+"""Optimistic concurrency and crash safety for every table mutation.
 
 The layer's multi-writer model (module docstring of
-``sources/connectors.py``): version allocation by atomic
-exclusive-create, monotonic pointer swaps, serialized
-read-modify-write commits (``_NEXT.<base>`` marker with crash
-roll-forward), and internally-retried append log commits. Races are
-simulated deterministically by pre-creating the exact file the "other
-writer" would have created — every interleaving tested here is one a
-real concurrent writer produces.
+``sources/connectors.py``): one append log whose ``_LOG.<n>`` commit
+records are created by atomic exclusive-create, one monotonic
+``_LATEST_LOG`` pointer that readers probe forward from, and one
+publish-and-rebase loop (``_commit``) through which append, row-level,
+maintenance and copy-on-write mutations all publish. Races are
+simulated deterministically — by pre-creating the exact file the
+"other writer" would have created, or by letting a rival commit just
+before the mutation's own ``_write_log`` — and crashes by raising at a
+publish point; every interleaving tested here is one a real concurrent
+writer or a killed one produces.
 """
 
 from __future__ import annotations
@@ -43,112 +46,95 @@ def _df(spark, rows, cols=("k", "v")):
 def test_write_text_exclusive_single_winner(tmp_path):
     fs = _TableFS(str(tmp_path))
     fs.mkdirs()
-    assert fs.write_text_exclusive("_CLAIM.1", "", ".a") is True
-    assert fs.write_text_exclusive("_CLAIM.1", "", ".b") is False
+    assert fs.write_text_exclusive("_LOG.1", "", ".a") is True
+    assert fs.write_text_exclusive("_LOG.1", "", ".b") is False
     # the loser's tmp never lingers
-    assert sorted(os.listdir(tmp_path)) == ["_CLAIM.1"]
+    assert sorted(os.listdir(tmp_path)) == ["_LOG.1"]
 
 
 # -- version allocation --------------------------------------------------
 
 
 def test_claimed_version_never_reused(spark, tmp_path):
-    """A claim by a racing (or crashed) writer makes the next publish
-    skip that number — two writers can never share a v= dir."""
+    """A version a racing (or crashed) writer committed is never
+    reused: a blind copy-on-write publish rebases past it."""
     d = str(tmp_path / "t")
     write_snapshot(_df(spark, [(1, "a")]), d)
-    _TableFS(d).write_text_exclusive("_CLAIM.2", "", ".x")  # rival claim
+    _fake_competing_log(d, 2)  # rival commit, pointer never swapped
     v = write_snapshot(_df(spark, [(2, "b")]), d)
     assert v == 3
     assert latest_snapshot_version(d) == 3
+    assert dict(read_snapshot(spark, d).df.collect()) == {2: "b"}
 
 
 def test_pointer_never_regresses(spark, tmp_path):
     """A slow writer finishing an OLD version cannot move the pointer
     backwards past a newer publish (the monotonic swap)."""
-    from cuplyr_spark.sources.connectors import _MANIFEST, _advance_ptr
+    from cuplyr_spark.sources.connectors import _LOG_PTR, _advance_ptr
 
     d = str(tmp_path / "t")
     write_snapshot(_df(spark, [(1, "a")]), d)
     write_snapshot(_df(spark, [(2, "b")]), d)
     fs = _TableFS(d)
-    _advance_ptr(fs, _MANIFEST, 1, "tmp")  # the slow writer's late swap
+    _advance_ptr(fs, 1)  # the slow writer's late swap
+    assert fs.read_text(_LOG_PTR).strip() == "2"
     assert latest_snapshot_version(d) == 2
 
 
 # -- read-modify-write serialization ------------------------------------
 
 
-def test_upsert_conflict_detected_not_lost(spark, tmp_path):
+def test_upsert_conflict_detected_not_lost(spark, tmp_path, monkeypatch):
     """Two writers both merge on top of v1; the slower one must get
     ConcurrentWriteError, not silently erase the winner's rows."""
     d = str(tmp_path / "t")
     write_snapshot(_df(spark, [(1, "a"), (2, "b")]), d)
-    # writer A wins: its commit marker + published version exist
-    v2 = upsert_snapshot(spark, _df(spark, [(2, "B")]), d, key="k")
-    assert v2 == 2
-    # writer B computed its merge against v1 — simulate its publish
-    from cuplyr_spark.sources.connectors import _publish
-
-    with pytest.raises(ConcurrentWriteError, match="moved from v1"):
-        _publish(
-            d,
-            spark,
-            lambda p: _df(spark, [(9, "z")]).df.write.parquet(p),
-            expected_base=1,
-        )
-    # winner's merge intact
-    rows = dict(read_snapshot(spark, d).df.collect())
-    assert rows == {1: "a", 2: "B"}
-
-
-def test_crashed_winner_rolled_forward(spark, tmp_path):
-    """Writer A wrote v2 + its _NEXT.1 marker, then died before the
-    pointer swap. Writer B (also based on v1) must roll A forward and
-    raise — A's commit survives, B's does not."""
-    d = str(tmp_path / "t")
-    write_snapshot(_df(spark, [(1, "a")]), d)
-    fs = _TableFS(d)
-    # simulate A: complete v=2 data + marker, no pointer swap
-    _df(spark, [(1, "A")]).df.write.parquet(fs.join("v=2"))
-    assert fs.write_text_exclusive("_NEXT.1", "2", ".n")
-    assert latest_snapshot_version(d) == 1
-    with pytest.raises(ConcurrentWriteError):
-        upsert_snapshot(spark, _df(spark, [(1, "B")]), d, key="k")
-    # A's crashed commit is now published (rolled forward by the loser)
+    # writer A's merge commits v2 while writer B's merge of v1 commits
+    _race_once(
+        monkeypatch,
+        lambda: upsert_snapshot(spark, _df(spark, [(2, "B")]), d, key="k"),
+    )
+    with pytest.raises(ConcurrentWriteError, match="moved from v1 to v2"):
+        upsert_snapshot(spark, _df(spark, [(9, "z")]), d, key="k")
+    monkeypatch.undo()
+    # winner's merge intact, the loser published nothing
     assert latest_snapshot_version(d) == 2
-    assert dict(read_snapshot(spark, d).df.collect()) == {1: "A"}
-    # and B's normal retry path now lands cleanly on the new base
-    upsert_snapshot(spark, _df(spark, [(1, "B")]), d, key="k")
-    assert dict(read_snapshot(spark, d).df.collect()) == {1: "B"}
+    assert dict(read_snapshot(spark, d).df.collect()) == {1: "a", 2: "B"}
 
 
-def test_compact_conflict_detected(spark, tmp_path):
+def test_compact_conflict_detected(spark, tmp_path, monkeypatch):
     """A merge landing while compaction rewrites must not be erased by
     the compaction's publish."""
     d = str(tmp_path / "t")
-    write_snapshot(_df(spark, [(i, "x") for i in range(20)]), d)
-    fs = _TableFS(d)
-    # another writer superseded v1 while "our" compactor was reading it
-    assert fs.write_text_exclusive("_NEXT.1", "999", ".n")
-    with pytest.raises(ConcurrentWriteError):
+    write_snapshot(_df(spark, [(i, "x") for i in range(20)]).repartition(4), d)
+    _race_once(
+        monkeypatch,
+        lambda: upsert_snapshot(spark, _df(spark, [(99, "m")]), d, key="k"),
+    )
+    with pytest.raises(ConcurrentWriteError, match="compaction"):
         compact_snapshot(spark, d, target_file_bytes=1 << 30, shuffle=False)
+    monkeypatch.undo()
+    assert read_snapshot(spark, d).df.count() == 21
+    assert latest_snapshot_version(d) == 2
 
 
 def test_vacuum_sweeps_claims_and_markers(spark, tmp_path):
+    """Vacuum removes the commit records of the versions it drops and
+    every segment only they referenced — each merge replaced the whole
+    table, so exactly the two kept versions' segments remain."""
+    from cuplyr_spark.sources.connectors import _read_log
+
     d = str(tmp_path / "t")
     write_snapshot(_df(spark, [(0, "x")]), d)
     for i in range(3):
         upsert_snapshot(spark, _df(spark, [(i, "y")]), d, key="k")
     fs = _TableFS(d)
-    removed = vacuum_snapshots(d, keep_last=2)
-    assert removed == [1, 2]
+    kept = {s for v in (3, 4) for s in _read_log(fs, v)["segments"]}
+    assert vacuum_snapshots(d, keep_last=2) == [1, 2]
     names = set(os.listdir(d))
-    # removed versions' claims and commit markers are swept ...
-    assert "_CLAIM.1" not in names and "_CLAIM.2" not in names
-    assert "_NEXT.1" not in names and "_NEXT.2" not in names
-    # ... kept versions' are not, and the table still reads
-    assert "_CLAIM.4" in names and "_NEXT.3" in names
+    assert "_LOG.1" not in names and "_LOG.2" not in names
+    assert "_LOG.3" in names and "_LOG.4" in names
+    assert {n for n in names if n.startswith("seg=")} == kept
     assert read_snapshot(spark, d).df.count() == 3
 
 
@@ -217,70 +203,58 @@ def test_write_text_exclusive_hadoop_route(spark, tmp_path):
     assert not os.path.exists(os.path.join(d, "_LOG.7.t2"))
 
 
-# -- r9/r10 commit-record machinery --------------------------------------
+# -- commit records vs the pointer ---------------------------------------
 
 
 def test_stale_writer_pointer_regression_healed(spark, tmp_path):
     """The pointer-only TOCTOU race: a stale writer of v1 re-renames
     the pointer back to 1 AFTER v2 published. Readers must still see
-    v2 (its immutable _PUB.2 record is independent evidence), and the
+    v2 (its immutable _LOG.2 record is independent evidence), and the
     next publish heals the pointer file itself."""
     d = str(tmp_path / "t")
     write_snapshot(_df(spark, [(1, "a")]), d)
     write_snapshot(_df(spark, [(2, "b")]), d)
     assert latest_snapshot_version(d) == 2
     # the stale writer's late rename lands
-    with open(os.path.join(d, "_LATEST"), "w") as f:
+    with open(os.path.join(d, "_LATEST_LOG"), "w") as f:
         f.write("1")
-    assert latest_snapshot_version(d) == 2  # healed by the _PUB floor
-    assert len(read_snapshot(spark, d).collect()) == 1
+    assert latest_snapshot_version(d) == 2  # the record is probed
     assert dict(read_snapshot(spark, d).df.collect()) == {2: "b"}
     v = write_snapshot(_df(spark, [(3, "c")]), d)
     assert v == 3
-    with open(os.path.join(d, "_LATEST")) as f:
+    with open(os.path.join(d, "_LATEST_LOG")) as f:
         assert int(f.read().strip()) == 3  # pointer file healed too
 
 
+class _CorruptPtrFS(_TableFS):
+    def read_text(self, name):
+        if name == "_LATEST_LOG":
+            return "garbage"  # every read is torn
+        return super().read_text(name)
+
+
 def test_advance_ptr_returns_once_commit_record_durable(tmp_path):
-    """Once the commit evidence (_PUB.n) is durable, a pointer that
-    can never be advanced (persistently corrupt reads) must NOT raise
-    — readers already see the version via the floor, and raising
-    would make append_snapshot's rebase loop double-append."""
+    """Once the commit record (_LOG.n) is durable, a pointer that can
+    never be advanced (persistently corrupt reads) must NOT raise —
+    readers already find the version by probing the records, and
+    raising would make the rebase loop double-append."""
     from cuplyr_spark.sources.connectors import _advance_ptr
 
     fs = _TableFS(str(tmp_path))
     fs.mkdirs()
-    fs.write_text_exclusive("_PUB.5", "", ".p")
-
-    class _CorruptPtrFS(_TableFS):
-        def read_text(self, name):
-            if name == "_LATEST":
-                return "garbage"  # every read is torn
-            return super().read_text(name)
-
-    cfs = _CorruptPtrFS(str(tmp_path))
-    # evidence says v5 committed -> durable success, no raise
-    _advance_ptr(
-        cfs, "_LATEST", 5, "tmp",
-        committed=lambda: 5,
-    )
+    fs.write_text_exclusive("_LOG.5", "{}", ".p")
+    _advance_ptr(_CorruptPtrFS(str(tmp_path)), 5)  # durable: no raise
 
 
 def test_advance_ptr_raises_without_commit_evidence(tmp_path):
-    """Same persistently-corrupt pointer, but NO independent commit
-    evidence: the publish must not report success (r8 verdict ask)."""
+    """Same persistently-corrupt pointer, but NO commit record: the
+    publish must not report success."""
     from cuplyr_spark.sources.connectors import _advance_ptr
-
-    class _CorruptPtrFS(_TableFS):
-        def read_text(self, name):
-            if name == "_LATEST":
-                return "garbage"
-            return super().read_text(name)
 
     fs = _CorruptPtrFS(str(tmp_path))
     fs.mkdirs()
     with pytest.raises(ConcurrentWriteError, match="could not be advanced"):
-        _advance_ptr(fs, "_LATEST", 5, "tmp", committed=lambda: 0)
+        _advance_ptr(fs, 5)
 
 
 def test_log_pointer_torn_read_heals(spark, tmp_path):
@@ -302,15 +276,16 @@ def test_log_pointer_torn_read_heals(spark, tmp_path):
 
 
 def test_vacuum_sweeps_pub_records(spark, tmp_path):
-    """_PUB.<n> records for vacuumed versions are swept with them, so
-    the directory listing every read pays stays bounded by retention."""
+    """_LOG.<n> records for vacuumed versions are swept with them, so
+    the directory listing every vacuum pays stays bounded by
+    retention."""
     d = str(tmp_path / "t")
     for i in range(4):
         write_snapshot(_df(spark, [(i, "x")]), d)
     assert vacuum_snapshots(d, keep_last=2) == [1, 2]
     names = set(os.listdir(d))
-    assert "_PUB.3" in names and "_PUB.4" in names
-    assert "_PUB.1" not in names and "_PUB.2" not in names
+    assert "_LOG.3" in names and "_LOG.4" in names
+    assert "_LOG.1" not in names and "_LOG.2" not in names
     assert latest_snapshot_version(d) == 4
 
 
@@ -362,7 +337,7 @@ def test_rebase_carries_zone_maps_and_orphan_sidecar_swept(spark, tmp_path):
     assert os.path.isdir(os.path.join(d2, "_sketch", seg1))  # live kept
 
 
-# -- race matrix: every retrying append-log mutation ---------------------
+# -- race matrix: every mutation through the one commit loop -------------
 #
 # Races are injected through the module's ``_write_log``: the hook lets
 # a rival writer commit first, so the mutation's own exclusive-create
@@ -377,6 +352,7 @@ from cuplyr_spark.sources.connectors import (  # noqa: E402
     compact_append_snapshot,
     delete_append_rows,
     merge_append_dvs,
+    restore_append_snapshot,
     update_append_rows,
     upsert_append_rows,
 )
@@ -597,3 +573,96 @@ def test_delete_rebase_heals_pointer_of_dead_winner(
     assert (v, n) == (4, 10)
     assert _TableFS(d).read_text(C._LOG_PTR).strip() == "4"
     assert _count(spark, d) == 90
+
+
+@pytest.mark.parametrize("op", ["compact", "restore"])
+def test_refusing_mutation_raises_on_concurrent_append(
+    spark, tmp_path, monkeypatch, op
+):
+    """Compaction and restore were computed from the head they read:
+    a concurrent append makes them raise, the winner's rows survive,
+    and the loser heals the pointer."""
+    d = _mk_log_table(spark, tmp_path)
+    _race_once(
+        monkeypatch, lambda: append_snapshot(_rows(spark, 100, 105), d)
+    )
+    with pytest.raises(ConcurrentWriteError, match="lost the log-commit"):
+        if op == "compact":
+            compact_append_snapshot(spark, d, target_file_bytes=1 << 30)
+        else:
+            restore_append_snapshot(spark, d, 1)
+    monkeypatch.undo()
+    assert _count(spark, d) == 105
+    assert C._read_log(_TableFS(d))["version"] == 3
+    assert _TableFS(d).read_text(C._LOG_PTR).strip() == "3"
+
+
+# -- crash matrix: every mutation through the one commit loop ------------
+#
+# A writer killed after its data write (before ``_LOG.<n>``) leaves the
+# table at its pre-state; one killed after ``_LOG.<n>`` but before the
+# pointer swap has committed (readers probe forward to the record).
+# Either way the next writer succeeds and heals the pointer.
+
+
+class _Crash(BaseException):
+    """A kill at a publish point: nothing in the library catches it."""
+
+
+def _crash_op(spark, d, op):
+    if op == "merge_dvs":
+        delete_append_rows(spark, d, {"id": ("<", 3)})
+        delete_append_rows(spark, d, {"id": ("<", 6)})
+    return {
+        "append": lambda: append_snapshot(_rows(spark, 100, 105), d),
+        "delete": lambda: delete_append_rows(spark, d, {"id": ("<", 10)}),
+        "update": lambda: update_append_rows(
+            spark, d, {"id": ("<", 10)}, {"v": "v + 1"}
+        ),
+        "upsert": lambda: upsert_append_rows(
+            _rows(spark, 95, 98, ("v", F.lit(-1).cast("long"))), d, "id"
+        ),
+        "merge_dvs": lambda: merge_append_dvs(spark, d),
+        "compact": lambda: compact_append_snapshot(
+            spark, d, target_file_bytes=1 << 30
+        ),
+        "restore": lambda: restore_append_snapshot(spark, d, 1),
+        "write_snapshot": lambda: write_snapshot(_rows(spark, 300, 310), d),
+        "upsert_snapshot": lambda: upsert_snapshot(
+            spark, _rows(spark, 95, 98, ("v", F.lit(-1).cast("long"))), d,
+            key="id",
+        ),
+    }[op]
+
+
+def _bag(spark, d):
+    return sorted(map(tuple, read_append_snapshot(spark, d).df.collect()))
+
+
+@pytest.mark.parametrize("op", [
+    "append", "delete", "update", "upsert", "merge_dvs", "compact",
+    "restore", "write_snapshot", "upsert_snapshot",
+])
+def test_crash_matrix(spark, tmp_path, monkeypatch, op):
+    twin = _mk_log_table(spark, tmp_path, "twin")
+    _crash_op(spark, twin, op)()
+    post = _bag(spark, twin)
+    for point in ("_write_log", "_advance_ptr"):
+        d = _mk_log_table(spark, tmp_path, point)
+        call = _crash_op(spark, d, op)
+        pre, head = _bag(spark, d), C._read_log(_TableFS(d))["version"]
+
+        def crash(*a, **kw):
+            raise _Crash(point)
+
+        monkeypatch.setattr(C, point, crash)
+        with pytest.raises(_Crash):
+            call()
+        monkeypatch.undo()
+        committed = point == "_advance_ptr"  # _LOG.<n> already written
+        assert _bag(spark, d) == (post if committed else pre), point
+        assert C._read_log(_TableFS(d))["version"] == head + committed
+        v = append_snapshot(_rows(spark, 500, 501), d)
+        assert v == head + committed + 1
+        assert _TableFS(d).read_text(C._LOG_PTR).strip() == str(v)
+        assert len(_bag(spark, d)) == len(post if committed else pre) + 1

@@ -1,6 +1,7 @@
 """Connector tests: the jar-gated lakehouse readers fail fast with the
-exact conf hint, and the jar-free snapshot-table connector provides
-atomic publish + time travel over plain parquet."""
+exact conf hint, and the jar-free tables — copy-on-write snapshot
+tables and append tables, one append log under both — provide atomic
+publish + time travel over plain parquet."""
 
 import os
 
@@ -14,6 +15,23 @@ from cuplyr_spark.sources.connectors import (
     snapshot_versions,
     write_snapshot,
 )
+
+
+def _seg_files(d, version=None):
+    """Data-file sizes of the one segment a copy-on-write version
+    holds."""
+    from cuplyr_spark.sources.connectors import _TableFS, _read_log
+
+    fs = _TableFS(d)
+    (seg,) = _read_log(fs, version)["segments"]
+    return fs.file_sizes(seg)
+
+
+def _orphan_segment(d, name):
+    """A crashed writer's segment: data written, never logged."""
+    os.makedirs(os.path.join(d, name))
+    with open(os.path.join(d, name, "part-00000.parquet"), "wb") as f:
+        f.write(b"partial")
 
 
 def test_lakehouse_gate_message(spark):
@@ -42,15 +60,15 @@ def test_snapshot_publish_and_time_travel(spark, tmp_path):
 
 
 def test_snapshot_unpublished_version_invisible(spark, tmp_path):
-    """A crashed write (data dir present, manifest not swapped) must be
+    """A crashed write (segment present, never logged) must be
     invisible to readers."""
     table = str(tmp_path / "tbl")
     df = from_pandas(spark, pd.DataFrame({"k": [1]}))
     write_snapshot(df, table)
-    # simulate a half-finished writer: directory exists, no manifest bump
-    os.makedirs(os.path.join(table, "v=99"), exist_ok=True)
-    assert snapshot_versions(table) == [1, 99] or snapshot_versions(table) == [1]
-    got = read_snapshot(spark, table)  # manifest still points at 1
+    # simulate a half-finished writer: segment exists, no log commit
+    _orphan_segment(table, "seg=2-crashed")
+    assert snapshot_versions(table) == [1]
+    got = read_snapshot(spark, table)  # the log still ends at 1
     assert len(got.collect()) == 1
     with pytest.raises(FileNotFoundError):
         read_snapshot(spark, str(tmp_path / "missing"))
@@ -87,7 +105,7 @@ def test_snapshot_uri_scheme_routes_through_hadoop_fs(spark, tmp_path):
     # bare local path sees the published manifest AND the version dir
     assert latest_snapshot_version(d) == 1
     assert snapshot_versions(d) == [1]
-    assert os.path.isfile(os.path.join(d, "_LATEST"))
+    assert os.path.isfile(os.path.join(d, "_LATEST_LOG"))
     assert len(read_snapshot(spark, uri).collect()) == 2
 
     # keyed MERGE under the scheme: update k=2, insert k=3
@@ -186,14 +204,15 @@ def test_vacuum_snapshots(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         read_snapshot(spark, d, version=1)
 
-    # published version survives even when keep_last would drop it:
+    # a stale pointer cannot make vacuum drop the published version:
     # regress the pointer to v3, then vacuum keep_last=1
     import os
 
-    with open(os.path.join(d, "_LATEST"), "w") as f:
+    with open(os.path.join(d, "_LATEST_LOG"), "w") as f:
         f.write("3")
-    assert vacuum_snapshots(d, keep_last=1) == []  # 4 is newest, 3 published
-    assert snapshot_versions(d) == [3, 4]
+    assert vacuum_snapshots(d, keep_last=1) == [3]  # 4 is the newest record
+    assert snapshot_versions(d) == [4]
+    assert len(read_snapshot(spark, d).collect()) == 4
 
     with pytest.raises(ValueError):
         vacuum_snapshots(d, keep_last=0)
@@ -210,9 +229,9 @@ def test_vacuum_snapshots(spark, tmp_path):
 
 
 def test_vacuum_excludes_uncommitted_orphans_from_retention(spark, tmp_path):
-    """A high-numbered crash-orphan (v= dir with no parquet _SUCCESS)
-    must not occupy a keep_last slot — it is deleted outright and the
-    real historical versions fill the retention window."""
+    """A crash-orphan segment (written, never logged) must not occupy
+    a keep_last slot — the real historical versions fill the retention
+    window, and the orphan is reaped once out of its grace window."""
     import os
 
     import pandas as pd
@@ -231,21 +250,19 @@ def test_vacuum_excludes_uncommitted_orphans_from_retention(spark, tmp_path):
             from_pandas(spark, pd.DataFrame({"k": list(range(i + 1))})), d
         )
     # simulate a writer that crashed mid-parquet-write: data files but
-    # no _SUCCESS, numbered ABOVE the published version
-    orphan = os.path.join(d, "v=9")
-    os.makedirs(orphan)
-    with open(os.path.join(orphan, "part-00000.parquet"), "wb") as f:
-        f.write(b"partial")
-    assert snapshot_versions(d) == [1, 2, 3, 9]
+    # no log commit, named ABOVE the published version
+    orphan = os.path.join(d, "seg=9-crashed")
+    _orphan_segment(d, "seg=9-crashed")
+    assert snapshot_versions(d) == [1, 2, 3]
 
-    # keep_last=2 must keep the two newest COMPLETE versions (2, 3) —
-    # the orphan never displaces v2. Inside the grace window the fresh
+    # keep_last=2 must keep the two newest versions (2, 3) — the
+    # orphan never displaces v2. Inside the grace window the fresh
     # orphan is spared (it could be a concurrent writer's in-progress
-    # version); with the grace waived it is reaped.
+    # segment); with the grace waived it is reaped.
     assert vacuum_snapshots(d, keep_last=2) == [1]
-    assert snapshot_versions(d) == [2, 3, 9]
-    assert vacuum_snapshots(d, keep_last=2, orphan_grace_hours=0) == [9]
-    assert snapshot_versions(d) == [2, 3]
+    assert snapshot_versions(d) == [2, 3] and os.path.isdir(orphan)
+    assert vacuum_snapshots(d, keep_last=2, orphan_grace_hours=0) == []
+    assert snapshot_versions(d) == [2, 3] and not os.path.exists(orphan)
     assert len(read_snapshot(spark, d, version=2).collect()) == 2
     assert len(read_snapshot(spark, d).collect()) == 3
 
@@ -259,7 +276,6 @@ def test_compact_snapshot(spark, tmp_path):
 
     from cuplyr_spark import from_pandas
     from cuplyr_spark.sources.connectors import (
-        _TableFS,
         compact_snapshot,
         latest_snapshot_version,
         read_snapshot,
@@ -272,13 +288,13 @@ def test_compact_snapshot(spark, tmp_path):
         spark, pd.DataFrame({"k": list(range(100)), "v": [i * 2 for i in range(100)]})
     )
     write_snapshot(frame.repartition(16), d)
-    files_before = len(_TableFS(d).file_sizes("v=1"))
+    files_before = len(_seg_files(d, 1))
     assert files_before == 16
 
     new_v = compact_snapshot(spark, d)  # 100 tiny rows -> 1 file
     assert new_v == 2
     assert latest_snapshot_version(d) == 2
-    assert len(_TableFS(d).file_sizes("v=2")) == 1
+    assert len(_seg_files(d, 2)) == 1
 
     got = read_snapshot(spark, d).collect().sort_values("k").reset_index(drop=True)
     assert list(got["k"]) == list(range(100))
@@ -294,12 +310,12 @@ def test_compact_snapshot(spark, tmp_path):
     # down to ~4 — rows preserved, file count at the target
     d2 = str(tmp_path / "cmp_shuffled")
     write_snapshot(frame.repartition(16), d2)
-    total = sum(_TableFS(d2).file_sizes("v=1"))
+    total = sum(_seg_files(d2, 1))
     v2 = compact_snapshot(
         spark, d2, target_file_bytes=-(-total // 4), shuffle=True
     )
     assert v2 == 2
-    n_files = len(_TableFS(d2).file_sizes("v=2"))
+    n_files = len(_seg_files(d2, 2))
     assert 1 <= n_files <= 4
     got2 = read_snapshot(spark, d2).collect()
     assert sorted(got2["k"]) == list(range(100))
@@ -391,6 +407,7 @@ def test_compact_snapshot_zorder(spark, tmp_path):
     from cuplyr_spark import read_parquet
     from cuplyr_spark.sources.connectors import (
         _TableFS,
+        _read_log,
         compact_snapshot,
         read_snapshot,
         write_snapshot,
@@ -401,13 +418,14 @@ def test_compact_snapshot_zorder(spark, tmp_path):
     d = str(tmp_path / "zc")
     write_snapshot(li.repartition(48), d)  # scattered small files
 
-    total = sum(_TableFS(d).file_sizes("v=1"))
+    total = sum(_seg_files(d, 1))
     v = compact_snapshot(
         spark, d, target_file_bytes=-(-total // 16),
         zorder_by=["l_orderkey", "l_partkey"],
     )
     assert v == 2
-    files = _glob.glob(os.path.join(d, "v=2", "*.parquet"))
+    (seg,) = _read_log(_TableFS(d), 2)["segments"]
+    files = _glob.glob(os.path.join(d, seg, "*.parquet"))
     assert 2 <= len(files) <= 16
     assert read_snapshot(spark, d).df.count() == n_rows
 
@@ -440,8 +458,8 @@ def test_compact_snapshot_zorder(spark, tmp_path):
 
 def test_snapshot_history(spark, tmp_path):
     """snapshot_history (DESCRIBE HISTORY analog): one metadata row per
-    version with file counts/bytes, crash orphans marked incomplete,
-    the manifest pointer flagged — without reading any data."""
+    version with file counts/bytes, crash orphans never listed, the
+    published version flagged — without reading any data."""
     import pandas as pd
 
     from cuplyr_spark import from_pandas
@@ -455,16 +473,12 @@ def test_snapshot_history(spark, tmp_path):
     write_snapshot(
         from_pandas(spark, pd.DataFrame({"k": [1, 2, 3]})).repartition(3), d
     )
-    orphan = os.path.join(d, "v=7")
-    os.makedirs(orphan)
-    with open(os.path.join(orphan, "part-0.parquet"), "wb") as f:
-        f.write(b"partial")
+    _orphan_segment(d, "seg=7-crashed")
 
     h = snapshot_history(d)
-    assert [r["version"] for r in h] == [1, 2, 7]
+    assert [r["version"] for r in h] == [1, 2]
     assert h[0]["complete"] and not h[0]["published"]
     assert h[1]["complete"] and h[1]["published"] and h[1]["n_files"] == 3
-    assert not h[2]["complete"] and not h[2]["published"]
     assert all(r["bytes"] > 0 for r in h)
 
 
@@ -807,12 +821,10 @@ def test_read_append_changes_incremental(spark, tmp_path):
 
 
 def test_vacuum_success_marker_fallback(spark, tmp_path):
-    """ADVICE r7: when NO version has _SUCCESS (cluster with success
-    markers disabled), vacuum must still honor keep_last instead of
-    deleting all history. Since the _PUB commit records exist, they
-    are the completeness evidence (created only after the data write
-    finished), so ranking — and immediate reclamation of aged
-    history — works exactly as with markers."""
+    """When NO segment has _SUCCESS (cluster with success markers
+    disabled), vacuum must still honor keep_last instead of deleting
+    all history: the _LOG.<n> commit records, not the markers, are the
+    completeness evidence."""
     from cuplyr_spark.sources.connectors import (
         snapshot_versions,
         vacuum_snapshots,
@@ -824,21 +836,19 @@ def test_vacuum_success_marker_fallback(spark, tmp_path):
         write_snapshot(
             from_pandas(spark, pd.DataFrame({"k": [i]})), d
         )
-    for v in snapshot_versions(d):
-        os.remove(os.path.join(d, f"v={v}", "_SUCCESS"))
+    for name in os.listdir(d):
+        if name.startswith("seg="):
+            os.remove(os.path.join(d, name, "_SUCCESS"))
     removed = vacuum_snapshots(d, keep_last=2)
     assert removed == [1, 2]
     assert snapshot_versions(d) == [3, 4]
 
 
 def test_vacuum_no_evidence_at_all(spark, tmp_path):
-    """Pre-commit-record table with markers disabled (neither
-    _SUCCESS nor _PUB.<n> anywhere): versions strictly OLDER than the
-    published one are reclaimed immediately (they can never be the
-    published state, and keep_last retention must keep working);
-    versions NEWER than the published one — the only dirs a live
-    concurrent writer could still be producing — wait out the orphan
-    grace window."""
+    """Markers disabled AND a fresh never-logged segment (a live
+    concurrent writer mid-publish, indistinguishable from crash
+    debris): aged history is reclaimed immediately, the unlogged
+    segment waits out the orphan grace window."""
     from cuplyr_spark.sources.connectors import (
         snapshot_versions,
         vacuum_snapshots,
@@ -848,25 +858,22 @@ def test_vacuum_no_evidence_at_all(spark, tmp_path):
     d = str(tmp_path / "noevidence")
     for i in range(4):
         write_snapshot(from_pandas(spark, pd.DataFrame({"k": [i]})), d)
-    for v in snapshot_versions(d):
-        os.remove(os.path.join(d, f"v={v}", "_SUCCESS"))
-    for name in list(os.listdir(d)):
-        if name.startswith("_PUB."):
-            os.remove(os.path.join(d, name))
-    # a fresh higher-numbered dir: could be a live writer mid-publish
-    os.makedirs(os.path.join(d, "v=5"))
+    for name in os.listdir(d):
+        if name.startswith("seg="):
+            os.remove(os.path.join(d, name, "_SUCCESS"))
+    _orphan_segment(d, "seg=5-inflight")
     removed = vacuum_snapshots(d, keep_last=2)
     assert removed == [1, 2]  # aged history goes despite no markers
-    assert snapshot_versions(d) == [3, 4, 5]  # v5 inside grace window
-    removed = vacuum_snapshots(d, keep_last=2, orphan_grace_hours=0)
-    assert removed == [5]
+    assert snapshot_versions(d) == [3, 4]
+    assert os.path.isdir(os.path.join(d, "seg=5-inflight"))  # in grace
+    assert vacuum_snapshots(d, keep_last=2, orphan_grace_hours=0) == []
+    assert not os.path.exists(os.path.join(d, "seg=5-inflight"))
 
 
 def test_rollback_snapshot(spark, tmp_path):
-    """Deliberate rollback: retires the superseded _PUB records and
-    regresses the pointer, so readers — who treat the pointer as
-    max(pointer, _PUB floor) — actually see the earlier version, and
-    the next publish allocates past the retired ones."""
+    """Deliberate rollback is a restore: it publishes a NEW version
+    with the earlier version's content, while a pointer-only
+    regression is healed as a stale-writer race, never honored."""
     import pytest
 
     from cuplyr_spark.sources.connectors import (
@@ -885,22 +892,22 @@ def test_rollback_snapshot(spark, tmp_path):
         )
     assert latest_snapshot_version(d) == 3
     # pointer-only regression is healed, NOT honored (stale-writer race)
-    with open(os.path.join(d, "_LATEST"), "w") as f:
+    with open(os.path.join(d, "_LATEST_LOG"), "w") as f:
         f.write("2")
     assert latest_snapshot_version(d) == 3
-    # the real rollback API is honored
-    assert rollback_snapshot(d, 2) == 2
-    assert latest_snapshot_version(d) == 2
+    # the real rollback API is honored: v4 holds v2's rows
+    assert rollback_snapshot(d, 2) == 4
+    assert latest_snapshot_version(d) == 4
     assert len(read_snapshot(spark, d).collect()) == 2
-    with pytest.raises(FileNotFoundError):
+    with pytest.raises(ValueError, match="ahead of the published"):
         rollback_snapshot(d, 99)
-    # vacuum after rollback keeps the published v2; v3's dir remains
-    # until retention drops it (keep_last=2 keeps {2,3} here)
-    assert vacuum_snapshots(d, keep_last=1) == [1]
-    assert 2 in snapshot_versions(d)
+    # vacuum keeps the rollback's version (and v2's segment it reuses)
+    assert vacuum_snapshots(d, keep_last=1) == [1, 2, 3]
+    assert snapshot_versions(d) == [4]
+    assert len(read_snapshot(spark, d).collect()) == 2
     # next publish supersedes the rollback normally
     write_snapshot(from_pandas(spark, pd.DataFrame({"k": [9]})), d)
-    assert latest_snapshot_version(d) == 4
+    assert latest_snapshot_version(d) == 5
     assert len(read_snapshot(spark, d).collect()) == 1
 
 

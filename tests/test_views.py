@@ -23,6 +23,8 @@ from cuplyr_spark.sources.connectors import (
     read_append_snapshot,
     update_append_rows,
     upsert_append_rows,
+    upsert_snapshot,
+    write_snapshot,
 )
 from cuplyr_spark.sources.views import (
     _TableFS,
@@ -66,6 +68,27 @@ def _assert_view_exact(spark, base, view):
 @pytest.fixture
 def dirs(tmp_path):
     return str(tmp_path / "base"), str(tmp_path / "view")
+
+
+def test_view_over_copy_on_write_table(spark, dirs):
+    """Every copy-on-write version replaces all segments: the refresh
+    reads the replaced rows as deletes and matches a rebuild."""
+    base, view = dirs
+    write_snapshot(
+        _mk(spark, [("a", 1, 1.0), ("b", 2, 2.0), ("c", 3, None)]), base
+    )
+    assert create_append_view(spark, base, view, "g", AGGS) == 1
+    # merge: a replaced, d inserted, c deleted
+    upsert_snapshot(
+        spark, _mk(spark, [("a", 10, 5.0), ("d", 4, 4.0)]), base,
+        key="g", delete_filter="g = 'c'",
+    )
+    assert _walk_window(_TableFS(base), base, 1).has_deletes
+    assert refresh_append_view(spark, view) == 2
+    _assert_view_exact(spark, base, view)
+    write_snapshot(_mk(spark, [("b", 7, 7.0), ("e", 5, None)]), base)
+    assert refresh_append_view(spark, view) == 3
+    _assert_view_exact(spark, base, view)
 
 
 def test_lifecycle_exact_through_both_paths(spark, dirs):
